@@ -37,8 +37,22 @@ def l2_norm(a: Column) -> Column:
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine of two double arrays (pre-cast with to_double_array)."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """Cosine of two double arrays (pre-cast with to_double_array).
+    Null when either vector has zero norm (the cosine is undefined),
+    where a plain ``/`` raises DIVIDE_BY_ZERO under ANSI mode."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+
+
+def vector_count_dim(df, vec_col: str) -> tuple[int, int]:
+    """(rows, dim) of an embedding column in ONE aggregate job — the
+    size probe every driver-collect guard runs first. dim is the
+    longest vector, so a null (or empty) vector in any row, leading
+    rows included, cannot hide the real dimension the way a
+    first-row probe does (``F.first`` also depends on partition
+    order). A null vector's size is -1 (or null under ANSI), counted
+    as 0."""
+    n, dim = df.agg(F.count(F.lit(1)), F.max(F.size(vec_col))).first()
+    return n, max(dim or 0, 0)
 
 
 def collect_vectors_guarded(
@@ -59,14 +73,9 @@ def collect_vectors_guarded(
     a clear error instead. At larger scale, loop the kernel over
     right-side blocks or use the LSH-bucketed operators.
     """
-    # fused guard job (round-13): one aggregate instead of count +
-    # first round-trips — values unchanged
-    n, first_vec = df.agg(
-        F.count(F.lit(1)), F.first(vec_col)
-    ).first()
+    n, dim = vector_count_dim(df, vec_col)
     if n == 0:
         return []
-    dim = len(first_vec) if first_vec is not None else 0
     est = n * (dim * 8 + 32)
     if est > max_bytes:
         raise ValueError(
@@ -107,22 +116,14 @@ def seeded_kmeans_centers(
     Arrow-batched argmin (see ``assign_cells``)."""
     import numpy as np
 
-    # ONE guard job (round-13, guide §5): count + first fused into a
-    # single aggregate instead of two scheduled driver round-trips —
-    # same values (F.first without ignorenulls is the first row's
-    # value, exactly what .first() read)
-    n, first = df.agg(
-        F.count(F.lit(1)), F.first(vec_col)
-    ).first()
-    if n == 0 or n < k:
+    n, dim = vector_count_dim(df, vec_col)
+    if n < k or dim == 0 or n * (dim * 8 + 32) > max_driver_bytes:
         return None
-    dim = len(first) if first is not None else 0
-    if dim == 0 or n * (dim * 8 + 32) > max_driver_bytes:
-        return None
-    mat = np.asarray(
-        [r[0] for r in df.select(to_double_array(vec_col)).collect()],
-        dtype=np.float64,
-    )
+    # null vectors carry no position to fit
+    rows = df.where(F.col(vec_col).isNotNull()).select(
+        to_double_array(vec_col)
+    ).collect()
+    mat = np.asarray([r[0] for r in rows], dtype=np.float64)
     return kmeans_fit_local(mat, k, seed, n_iter)
 
 

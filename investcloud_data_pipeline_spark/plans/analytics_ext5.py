@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..operators import text as TX
 from ..sources.batch import load_table
-from ..stores import stores_enabled
+from ..stores import session_store
 from .training_data import TEXT_LANGUAGE_ID_SQL, TEXT_QUALITY_SCORE_SQL
 
 
@@ -499,52 +499,36 @@ def _pq_best(
     )
 
 
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+
 # Session-scoped PQ stores (round-12 optimization). The seeded-sample
 # codebook's per-vector argmin relation (``_pq_best``) is the shared
 # upstream of BOTH strict PQ queries (embedding_pq_codes derives the
 # code strings, ann_pq_adc_topk the stacked (s, crank) codes), and the
 # K=64 k-means path's fitted codebook + Arrow-encoded codes are a
-# build-once index exactly like the IVF-PQ triple below. Same
-# applicationId-keyed memo + eager localCheckpoint discipline as
-# plans/training_data.py's pair caches; values are unchanged — the
-# stores materialize the identical relations the queries inlined.
-_PQ_STORE: dict[tuple, object] = {}
+# build-once index exactly like the IVF-PQ triple below. Values are
+# unchanged — the stores materialize the identical relations the
+# queries inlined.
+@session_store
+def _pq_best16_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _emb(spark, sf_dir)
+    return _pq_best(emb, _pq_centers(emb)).localCheckpoint(eager=True)
 
 
-def _pq_best16_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "pq_best16")
-    df = _PQ_STORE.get(key) if stores_enabled() else None
-    if df is None:
-        df = _pq_best(emb, _pq_centers(emb)).localCheckpoint(eager=True)
-        if stores_enabled():
-            _PQ_STORE[key] = df
-    return df
-
-
-def _pq_km_index_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame
-) -> tuple:
+@session_store
+def _pq_km_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
     """(centers, codes) for the K=64 per-subspace k-means codebook —
     fit + one fused Arrow encode per session instead of per execution
     (the ``_ivf_pq_index_cached`` economics)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pq_km_index")
-    got = _PQ_STORE.get(key) if stores_enabled() else None
-    if got is None:
-        centers = _pq_kmeans_centers(spark, emb)
-        codes = _pq_codes_arrow(emb, centers).localCheckpoint(
-            eager=True
-        )
-        got = (centers, codes)
-        if stores_enabled():
-            _PQ_STORE[key] = got
-    return got
+    emb = _emb(spark, sf_dir)
+    centers = _pq_kmeans_centers(spark, emb)
+    return centers, _pq_codes_arrow(emb, centers).localCheckpoint(eager=True)
 
 
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    best = _pq_best16_cached(spark, sf_dir, emb)
+    best = _pq_best16_cached(spark, sf_dir)
     codes = F.concat_ws(
         ",",
         *[
@@ -720,7 +704,7 @@ def pq_adc_topk(
 
 
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),
@@ -729,7 +713,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stack expression pq_adc_topk would inline) — the expression-fold
     # code assignment runs once per session, shared with
     # embedding_pq_codes; values identical by construction
-    codes = _pq_best16_cached(spark, sf_dir, emb).select(
+    codes = _pq_best16_cached(spark, sf_dir).select(
         "vec_id",
         F.expr(
             "stack("
@@ -864,13 +848,13 @@ def _pq_kmeans_centers(
     before seeding, so the source layout is irrelevant."""
     import numpy as np
 
-    from ..functions.vectors import kmeans_fit_local, to_double_array
+    from ..functions.vectors import (
+        kmeans_fit_local,
+        to_double_array,
+        vector_count_dim,
+    )
 
-    # fused guard job (round-13): one aggregate, not count + first
-    n, _first = emb.agg(
-        F.count(F.lit(1)), F.first("embedding")
-    ).first()
-    dim = len(_first) if _first is not None else 0
+    n, dim = vector_count_dim(emb, "embedding")
     # clamp so a tiny corpus (sf0.001) still fits a valid codebook
     k_codebook = max(1, min(k_codebook, n))
     slices = None
@@ -935,10 +919,10 @@ def _pq_kmeans_centers(
 def ann_pq_adc_kmeans_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = _emb(spark, sf_dir)
     # build-once index (fit + fused Arrow encode) shared per session —
     # the _ivf_pq_index_cached economics applied to the flat-PQ path
-    centers, codes = _pq_km_index_cached(spark, sf_dir, emb)
+    centers, codes = _pq_km_index_cached(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),
@@ -1310,14 +1294,13 @@ def _ivf_pq_fit_encode(
     path, where fit cost amortizes."""
     import numpy as np
 
-    from ..functions.vectors import kmeans_fit_local, to_double_array
+    from ..functions.vectors import (
+        kmeans_fit_local,
+        to_double_array,
+        vector_count_dim,
+    )
 
-    # fused guard job (round-13, guide §5): count + first as one
-    # aggregate — two scheduled driver round-trips become one
-    n, _first = emb.agg(
-        F.count(F.lit(1)), F.first("embedding")
-    ).first()
-    dim = len(_first) if _first is not None else 0
+    n, dim = vector_count_dim(emb, "embedding")
     coarse = None
     if n >= n_cells and dim and n * (dim * 8 + 32) <= (256 << 20):
         mat = np.asarray(
@@ -1606,33 +1589,17 @@ IVFPQ_REFINE = 200  # exact-refine shortlist depth: 20× k. With
 # The IVF-PQ index is a build-once artifact (exactly FAISS's
 # economics: train + add once, search many) — the registry query
 # shares one per session/sf, checkpointed so re-runs pay only the
-# search. Same applicationId-keyed memo discipline as
-# plans/training_data.py's pair caches.
-_IVFPQ_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
-def _ivf_pq_index_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame
-) -> tuple:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _IVFPQ_INDEX_CACHE.get(key) if stores_enabled() else None
-    if got is None:
-        codes, cent_df, centers, centers_local = _ivf_pq_fit_encode(
-            spark, emb, IVFPQ_NLIST, IVFPQ_CODEBOOK, IVFPQ_SEED
-        )
-        got = (
-            codes.localCheckpoint(eager=True),
-            cent_df,
-            centers,
-            centers_local,
-        )
-        if stores_enabled():
-            _IVFPQ_INDEX_CACHE[key] = got
-    return got
+# search.
+@session_store
+def _ivf_pq_index_cached(spark: SparkSession, sf_dir: str) -> tuple:
+    codes, cent_df, centers, centers_local = _ivf_pq_fit_encode(
+        spark, _emb(spark, sf_dir), IVFPQ_NLIST, IVFPQ_CODEBOOK, IVFPQ_SEED
+    )
+    return codes.localCheckpoint(eager=True), cent_df, centers, centers_local
 
 
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),
@@ -1642,7 +1609,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         k=PQ_ADC_K,
         refine=IVFPQ_REFINE,
-        index=_ivf_pq_index_cached(spark, sf_dir, emb),
+        index=_ivf_pq_index_cached(spark, sf_dir),
     )
 
 

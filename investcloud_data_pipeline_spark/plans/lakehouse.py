@@ -21,7 +21,7 @@ from ..operators import er as ER
 from ..operators import merge as MG
 from ..operators import pii as PII
 from ..sources.batch import load_table
-from ..stores import stores_enabled
+from ..stores import session_store
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -34,46 +34,25 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # shared upstream of the whole ER family (pair evidence → entities →
 # golden record). The components job is ITERATIVE (min-label
 # propagation, one join+agg per round), so re-running it per consumer
-# is the single biggest avoidable cost in the family. Same
-# applicationId-keyed memo + eager localCheckpoint discipline as
-# plans/training_data.py::jaccard_pairs_cached (guide §2.4: write-once
-# shared artifact instead of a per-query recompute).
+# is the single biggest avoidable cost in the family (guide §2.4:
+# write-once shared artifact instead of a per-query recompute).
 
-_ER_STORE: dict[tuple, DataFrame] = {}
-
-
-def _er_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple:
-    return (spark.sparkContext.applicationId, sf_dir, tag)
-
-
+@session_store
 def er_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped ``er_fuzzy_part_pairs`` relation (full schema)."""
-    key = _er_key(spark, sf_dir, "pairs")
-    df = _ER_STORE.get(key) if stores_enabled() else None
-    if df is None:
-        df = er_fuzzy_part_pairs(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-        if stores_enabled():
-            _ER_STORE[key] = df
-    return df
+    return er_fuzzy_part_pairs(spark, sf_dir).localCheckpoint(eager=True)
 
 
+@session_store
 def er_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped (node, component) closure of the fuzzy pair
     graph — the iterative CC job runs once per session."""
     from ..operators.graph import connected_components
 
-    key = _er_key(spark, sf_dir, "components")
-    df = _ER_STORE.get(key) if stores_enabled() else None
-    if df is None:
-        pairs = er_pairs_cached(spark, sf_dir).select("name1", "name2")
-        df = connected_components(
-            pairs, src="name1", dst="name2"
-        ).localCheckpoint(eager=True)
-        if stores_enabled():
-            _ER_STORE[key] = df
-    return df
+    pairs = er_pairs_cached(spark, sf_dir).select("name1", "name2")
+    return connected_components(
+        pairs, src="name1", dst="name2"
+    ).localCheckpoint(eager=True)
 
 
 # ---------- PII redaction ----------

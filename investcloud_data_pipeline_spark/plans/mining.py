@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.batch import load_table
-from ..stores import stores_enabled
+from ..stores import session_store
 
 DEC = "decimal(18,2)"
 
@@ -123,93 +123,64 @@ def _order_parts(
 # the co-occurrence pair counts it induces (only the support THRESHOLD
 # differs per consumer: ≥3 for the part graph, ≥2 for k-core /
 # set-similarity / item-cosine, unthresholded for the kNN graph). In
-# production both are written once at ingest; here the applicationId-
-# keyed memo + eager localCheckpoint gives the same write-once
-# economics (guide §2.4 — remove shuffles outright: the lineitem scan,
-# basket aggregate, and pair self-join+aggregate run once per session
-# instead of once per query). Same key/checkpoint discipline as
-# plans/training_data.py::jaccard_pairs_cached — the checkpoint is
-# non-reliable by design and must not outlive its SparkContext, which
-# the applicationId key guarantees.
+# production both are written once at ingest; here the session store +
+# eager localCheckpoint gives the same write-once economics (guide §2.4
+# — remove shuffles outright: the lineitem scan, basket aggregate, and
+# pair self-join+aggregate run once per session instead of once per
+# query). The checkpoint is non-reliable by design and must not
+# outlive its SparkContext, which the store's session key guarantees.
 
-_MINING_STORE: dict[tuple, DataFrame] = {}
-
-
-def _store_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple:
-    return (spark.sparkContext.applicationId, sf_dir, tag)
-
-
+@session_store
 def order_parts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped ``_order_parts`` (distinct capped basket
     projection) — the shared scan+aggregate of every co-purchase plan."""
-    key = _store_key(spark, sf_dir, "order_parts")
-    df = _MINING_STORE.get(key) if stores_enabled() else None
-    if df is None:
-        df = _order_parts(spark, sf_dir).localCheckpoint(eager=True)
-        if stores_enabled():
-            _MINING_STORE[key] = df
-    return df
+    return _order_parts(spark, sf_dir).localCheckpoint(eager=True)
 
 
+@session_store
 def pair_counts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped UNTHRESHOLDED co-occurrence counts
     (part1 < part2, n_orders): consumers apply their own support cut as
     a trivial filter over this leaf. The relation is pair-aggregate
     small (bounded by sum of per-order C(min(lines,cap),2), ~1M rows at
     sf0.1) and 3 longs wide."""
-    key = _store_key(spark, sf_dir, "pair_counts")
-    df = _MINING_STORE.get(key) if stores_enabled() else None
-    if df is None:
-        op = order_parts_cached(spark, sf_dir)
-        a, b = op.alias("a"), op.alias("b")
-        df = (
-            a.join(b, "l_orderkey")
-            .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-            .groupBy(
-                F.col("a.l_partkey").alias("part1"),
-                F.col("b.l_partkey").alias("part2"),
-            )
-            .agg(F.count("*").alias("n_orders"))
-            .localCheckpoint(eager=True)
+    op = order_parts_cached(spark, sf_dir)
+    a, b = op.alias("a"), op.alias("b")
+    return (
+        a.join(b, "l_orderkey")
+        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
+        .groupBy(
+            F.col("a.l_partkey").alias("part1"),
+            F.col("b.l_partkey").alias("part2"),
         )
-        if stores_enabled():
-            _MINING_STORE[key] = df
-    return df
+        .agg(F.count("*").alias("n_orders"))
+        .localCheckpoint(eager=True)
+    )
 
 
+@session_store
 def family_orders_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped ``_family_orders`` (distinct (order, family))."""
-    key = _store_key(spark, sf_dir, "family_orders")
-    df = _MINING_STORE.get(key) if stores_enabled() else None
-    if df is None:
-        df = _family_orders(spark, sf_dir).localCheckpoint(eager=True)
-        if stores_enabled():
-            _MINING_STORE[key] = df
-    return df
+    return _family_orders(spark, sf_dir).localCheckpoint(eager=True)
 
 
+@session_store
 def family_pair_counts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped UNTHRESHOLDED family co-occurrence counts
     (fam1 < fam2, n_pair) — shared by the family-granularity Apriori
     and kNN-graph queries."""
-    key = _store_key(spark, sf_dir, "family_pair_counts")
-    df = _MINING_STORE.get(key) if stores_enabled() else None
-    if df is None:
-        op = family_orders_cached(spark, sf_dir)
-        a, b = op.alias("a"), op.alias("b")
-        df = (
-            a.join(b, "l_orderkey")
-            .filter(F.col("a.fam") < F.col("b.fam"))
-            .groupBy(
-                F.col("a.fam").alias("fam1"),
-                F.col("b.fam").alias("fam2"),
-            )
-            .agg(F.count("*").alias("n_pair"))
-            .localCheckpoint(eager=True)
+    op = family_orders_cached(spark, sf_dir)
+    a, b = op.alias("a"), op.alias("b")
+    return (
+        a.join(b, "l_orderkey")
+        .filter(F.col("a.fam") < F.col("b.fam"))
+        .groupBy(
+            F.col("a.fam").alias("fam1"),
+            F.col("b.fam").alias("fam2"),
         )
-        if stores_enabled():
-            _MINING_STORE[key] = df
-    return df
+        .agg(F.count("*").alias("n_pair"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,7 @@ from ..operators import multimodal as MM
 from ..operators import simsearch as SS
 from ..operators import text as TX
 from ..sources.batch import load_table
-from ..stores import stores_enabled
+from ..stores import session_store
 
 # Shared DuckDB fragments — the SQL mirror of functions/text.py.
 NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
@@ -72,195 +72,120 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The Jaccard candidate-pair build is the shared upstream artifact of
 # the whole near-dup family (pairs → components → clean pipeline →
 # triangle stats). In production it is computed once and written; here
-# the session-scoped memo gives the same write-once economics — every
-# family member after the first reuses the persisted frame. Keyed by
-# applicationId (stable and unique per SparkContext lifetime — id()
-# can be REUSED by a new session allocated at a dead session's
-# address, which would hand out a frame whose checkpointed RDD blocks
-# belong to the stopped context). The eager localCheckpoint below is
-# non-reliable by design: blocks lost on executor loss are not
-# recomputable, so the cached frame MUST NOT outlive its session —
-# which the applicationId key now guarantees.
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _session_key(spark: SparkSession, sf_dir: str) -> tuple:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
+# the session store gives the same write-once economics — every family
+# member after the first reuses the materialized frame. The eager
+# localCheckpoint below is non-reliable by design: blocks lost on
+# executor loss are not recomputable, so the stored frame MUST NOT
+# outlive its session — which the store's session key guarantees.
+@session_store
 def jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_key(spark, sf_dir)
-    df = _PAIRS_CACHE.get(key) if stores_enabled() else None
-    if df is None:
-        # localCheckpoint, not persist: the duplicate-collapse armor
-        # made the pair lineage LARGE, and downstream consumers that
-        # reference this frame several times (the triangle query's two
-        # broadcast probe sides) re-ANALYZE that whole subtree per
-        # reference even though execution reads the cache — measured
-        # 0.42s -> 1.2s on dedup_triangle_stats from planning alone.
-        # The eager checkpoint collapses the plan to an RDD scan (the
-        # relation is thresholded-pair tiny), so every consumer plans
-        # against a leaf.
-        df = DF.ngram_jaccard_pairs(
-            _docs(spark, sf_dir), n=3, threshold=0.5,
-            store=shingles_cached(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-        if stores_enabled():
-            _PAIRS_CACHE[key] = df
-    return df
+    # localCheckpoint, not persist: the duplicate-collapse armor made
+    # the pair lineage LARGE, and downstream consumers that reference
+    # this frame several times (the triangle query's two broadcast
+    # probe sides) re-ANALYZE that whole subtree per reference even
+    # though execution reads the cache — measured 0.42s -> 1.2s on
+    # dedup_triangle_stats from planning alone. The eager checkpoint
+    # collapses the plan to an RDD scan (the relation is
+    # thresholded-pair tiny), so every consumer plans against a leaf.
+    return DF.ngram_jaccard_pairs(
+        _docs(spark, sf_dir), n=3, threshold=0.5,
+        store=shingles_cached(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
-# Session-scoped deterministic-fit store (round-12, guide §2.4 — the
-# build-once economics applied to driver-side model fits): the seeded
-# k-means centers and the PCA model are PURE functions of
-# (table, params) — same collect, same Lloyd/eigensolve, same floats —
-# so re-fitting per execution only re-pays the collect + fit jobs.
-# Returns the identical in-memory object, so consumer results are
-# unchanged by construction. Keyed by applicationId like _PAIRS_CACHE
-# (numpy arrays carry no session state, but the key keeps dev/test
-# sessions from sharing fits across different synthetic tables under a
-# reused fake sf_dir within one interpreter — tests clear it besides).
-_FIT_CACHE: dict[tuple, object] = {}
-
-
-def seeded_centers_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, k: int, seed: int
-):
+# Deterministic-fit stores (round-12, guide §2.4 — the build-once
+# economics applied to driver-side model fits): the seeded k-means
+# centers and the PCA model are PURE functions of (table, params) —
+# same collect, same Lloyd/eigensolve, same floats — so re-fitting per
+# execution only re-pays the collect + fit jobs. Returns the identical
+# in-memory object, so consumer results are unchanged by construction.
+@session_store
+def seeded_centers_cached(spark: SparkSession, sf_dir: str):
+    """k=8, seed=42 k-means centers of ``embeddings`` (None above the
+    driver-fit guard)."""
     from ..functions.vectors import seeded_kmeans_centers
 
-    key = (spark.sparkContext.applicationId, sf_dir, "km", k, seed)
-    if not stores_enabled():
-        return seeded_kmeans_centers(emb, "embedding", k=k, seed=seed)
-    if key not in _FIT_CACHE:
-        _FIT_CACHE[key] = seeded_kmeans_centers(
-            emb, "embedding", k=k, seed=seed
-        )
-    return _FIT_CACHE[key]
+    return seeded_kmeans_centers(
+        _emb(spark, sf_dir), "embedding", k=8, seed=42
+    )
 
 
-def pca_model_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, k: int
-):
+@session_store
+def pca_model_cached(spark: SparkSession, sf_dir: str):
+    """k=8 PCA model of ``embeddings``."""
     from ..operators.pca import pca_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, "pca", k)
-    if not stores_enabled():
-        return pca_fit(emb, "embedding", k=k)
-    if key not in _FIT_CACHE:
-        _FIT_CACHE[key] = pca_fit(emb, "embedding", k=k)
-    return _FIT_CACHE[key]
+    return pca_fit(_emb(spark, sf_dir), "embedding", k=8)
 
 
-# Session-scoped ExactSubstr upstream (round-12, guide §2.4): the
-# tokenizer barrier and the k=8 window-hash explode are the shared
-# upstream of the whole span family (repeated spans / strip /
-# keep-first) — O(total tokens) rows each, rebuilt per query before.
-# Stored once per session like the shingle/minhash stores; consumers
-# differ only in their occurrence filter, so results are identical by
-# construction (pinned by test_span_store_path_identical).
-_SPAN_CACHE: dict[tuple, DataFrame] = {}
-
-
+# ExactSubstr upstream (round-12, guide §2.4): the tokenizer barrier
+# and the k=8 window-hash explode are the shared upstream of the whole
+# span family (repeated spans / strip / keep-first) — O(total tokens)
+# rows each, rebuilt per query before. Consumers differ only in their
+# occurrence filter, so results are identical by construction (pinned
+# by test_span_store_path_identical).
+@session_store
 def tokenized_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (*_session_key(spark, sf_dir), "tok")
-    df = _SPAN_CACHE.get(key) if stores_enabled() else None
-    if df is None:
-        df = DF.tokenized(_docs(spark, sf_dir)).localCheckpoint(
-            eager=True
-        )
-        if stores_enabled():
-            _SPAN_CACHE[key] = df
-    return df
+    return DF.tokenized(_docs(spark, sf_dir)).localCheckpoint(eager=True)
 
 
+@session_store
 def span_windows_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, n_tokens, pos, gh) k=8 window digests over the tokenizer
     barrier — the with_len form serves every family member (keep-first
     projects the length away)."""
-    key = (*_session_key(spark, sf_dir), "win8")
-    df = _SPAN_CACHE.get(key) if stores_enabled() else None
-    if df is None:
-        df = DF._kgram_windows(
-            tokenized_cached(spark, sf_dir), 8, with_len=True
-        ).localCheckpoint(eager=True)
-        if stores_enabled():
-            _SPAN_CACHE[key] = df
-    return df
+    return DF._kgram_windows(
+        tokenized_cached(spark, sf_dir), 8, with_len=True
+    ).localCheckpoint(eager=True)
 
 
-_SHINGLE_CACHE: dict[tuple, tuple] = {}
-
-
+@session_store
 def shingles_cached(spark: SparkSession, sf_dir: str) -> tuple:
-    """Session-scoped shingle store: the (rep_shingles, members) pair
-    from ``operators/dedup_fuzzy.py::shingle_store`` — exact-dup
-    collapse + distinct word-3-gram explode of the representatives,
-    materialized ONCE and consumed by every inverted-index pair plan
-    (the jaccard pair build, containment, prefix filtering). In
-    production both relations are written at ingest beside the corpus;
-    here the memo gives the same write-once economics. Same
-    applicationId key + eager localCheckpoint discipline as
-    ``_PAIRS_CACHE`` (rep_shingles is |distinct contents|×|shingles|
-    narrow rows; members is id-pair thin)."""
-    key = _session_key(spark, sf_dir)
-    pair = _SHINGLE_CACHE.get(key) if stores_enabled() else None
-    if pair is None:
-        ex, members = DF.shingle_store(_docs(spark, sf_dir), n=3)
-        pair = (
-            ex.localCheckpoint(eager=True),
-            members.localCheckpoint(eager=True),
-        )
-        if stores_enabled():
-            _SHINGLE_CACHE[key] = pair
-    return pair
+    """The (rep_shingles, members) pair from
+    ``operators/dedup_fuzzy.py::shingle_store`` — exact-dup collapse +
+    distinct word-3-gram explode of the representatives, materialized
+    ONCE and consumed by every inverted-index pair plan (the jaccard
+    pair build, containment, prefix filtering). In production both
+    relations are written at ingest beside the corpus. Eager
+    localCheckpoint like ``jaccard_pairs_cached`` (rep_shingles is
+    |distinct contents|×|shingles| narrow rows; members is id-pair
+    thin)."""
+    ex, members = DF.shingle_store(_docs(spark, sf_dir), n=3)
+    return (
+        ex.localCheckpoint(eager=True),
+        members.localCheckpoint(eager=True),
+    )
 
 
-_SIG_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_store
 def minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped MinHash signature store: (__digest, mh_0..mh_11)
-    per distinct normalized content (``minhash_sig_lookup``),
-    materialized ONCE and joined by every MinHash consumer (signatures
-    query, full-corpus LSH banding, incremental base+delta banding, the
-    sketch-accuracy ledger). In production this is a persisted table
-    written at ingest — a signature is a pure function of the text, so
-    recomputing the tokenize/shingle/12×md5 pipeline per query is pure
-    waste. Same applicationId-keyed memo + eager localCheckpoint
-    discipline as ``_PAIRS_CACHE`` above (the store is |distinct
-    contents| × 13 narrow columns — leaf-scan tiny)."""
-    key = _session_key(spark, sf_dir)
-    df = _SIG_CACHE.get(key) if stores_enabled() else None
-    if df is None:
-        df = DF.minhash_sig_lookup(
-            _docs(spark, sf_dir), n=3, num_hashes=_NUM_HASHES
-        ).localCheckpoint(eager=True)
-        if stores_enabled():
-            _SIG_CACHE[key] = df
-    return df
+    """MinHash signature store: (__digest, mh_0..mh_11) per distinct
+    normalized content (``minhash_sig_lookup``), materialized ONCE and
+    joined by every MinHash consumer (signatures query, full-corpus LSH
+    banding, incremental base+delta banding, the sketch-accuracy
+    ledger). In production this is a persisted table written at ingest
+    — a signature is a pure function of the text, so recomputing the
+    tokenize/shingle/12×md5 pipeline per query is pure waste. Eager
+    localCheckpoint: the store is |distinct contents| × 13 narrow
+    columns — leaf-scan tiny."""
+    return DF.minhash_sig_lookup(
+        _docs(spark, sf_dir), n=3, num_hashes=_NUM_HASHES
+    ).localCheckpoint(eager=True)
 
 
-_COMP_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_store
 def components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, component) for the near-dup pair graph, computed ONCE per
     session/sf and persisted — the write-once economics of a production
     pipeline, where the component relation is a shared artifact of the
     whole canonicalization family (components query, clean pipeline,
-    keep-best-quality, full curation). Same memo pattern as
-    ``jaccard_pairs_cached``; the iterative CC job never reruns."""
+    keep-best-quality, full curation); the iterative CC job never
+    reruns."""
     from ..operators.graph import connected_components
 
-    key = _session_key(spark, sf_dir)
-    df = _COMP_CACHE.get(key) if stores_enabled() else None
-    if df is None:
-        df = connected_components(
-            jaccard_pairs_cached(spark, sf_dir), src="id1", dst="id2"
-        ).persist()
-        if stores_enabled():
-            _COMP_CACHE[key] = df
-    return df
+    return connected_components(
+        jaccard_pairs_cached(spark, sf_dir), src="id1", dst="id2"
+    ).persist()
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,45 +198,26 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # three identical count/first/collect job chains per bench session
 # (round-12 verdict task #1 — the r11 bench pair over the 2x bar was
 # adjudicated host-steal noise, but sharing the collect removes the
-# exposure). Same applicationId-keyed memo discipline as
-# _PAIRS_CACHE above.
-_EMB_ROWS_CACHE: dict[tuple, list] = {}
-
-
+# exposure).
+@session_store
 def emb_rows_cached(spark: SparkSession, sf_dir: str) -> list:
     from ..functions.vectors import collect_vectors_guarded
 
-    key = _session_key(spark, sf_dir)
-    rows = _EMB_ROWS_CACHE.get(key) if stores_enabled() else None
-    if rows is None:
-        rows = collect_vectors_guarded(
-            _emb(spark, sf_dir), "vec_id", "embedding",
-            what="near-dup corpus",
-        )
-        if stores_enabled():
-            _EMB_ROWS_CACHE[key] = rows
-    return rows
+    return collect_vectors_guarded(
+        _emb(spark, sf_dir), "vec_id", "embedding", what="near-dup corpus"
+    )
 
 
 # The exact near-dup pair relation itself is ALSO a shared upstream
 # artifact (dedup_embedding_cosine emits it; dedup_mutual_knn_clusters
-# consumes it twice via the symmetric union) — write-once economics,
-# the jaccard_pairs_cached pattern.
-_EMB_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# consumes it twice via the symmetric union).
+@session_store
 def embedding_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _session_key(spark, sf_dir)
-    df = _EMB_PAIRS_CACHE.get(key) if stores_enabled() else None
-    if df is None:
-        df = DF.embedding_near_dup_pairs(
-            _emb(spark, sf_dir),
-            threshold=0.35,
-            rows=emb_rows_cached(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-        if stores_enabled():
-            _EMB_PAIRS_CACHE[key] = df
-    return df
+    return DF.embedding_near_dup_pairs(
+        _emb(spark, sf_dir),
+        threshold=0.35,
+        rows=emb_rows_cached(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
 # ---------- dedup family ----------
@@ -2372,7 +2278,7 @@ def corpus_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch of kmeans_assignments, so results are unchanged) — and the
     # fit is session-memoized (pure function of (table, k, seed); warm
     # executions skip the collect + Lloyd jobs entirely)
-    centers = seeded_centers_cached(spark, sf_dir, emb, k=8, seed=42)
+    centers = seeded_centers_cached(spark, sf_dir)
     if centers is None:
         raise ValueError(
             "corpus_topic_clusters: corpus exceeds the driver-fit "
@@ -2815,7 +2721,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-memoized fit: the Gram fold + eigensolve is a pure
     # function of (table, k) — warm executions reuse the model object,
     # skipping the distributed sufficient-statistics job (round-12)
-    model = pca_model_cached(spark, sf_dir, emb, k=8)
+    model = pca_model_cached(spark, sf_dir)
     proj = pca_project(emb, model, "embedding", out_col="pc")
     var_agg = proj.agg(
         F.count("*").alias("n"),
@@ -3221,20 +3127,14 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 
+@session_store
 def dsir_weights_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped DSIR weight relation — the shared upstream of the
-    weights report AND the importance-resampling step (round-12; the
-    resample previously re-ran the whole corpus scoring pass). Same
-    applicationId-keyed write-once discipline as the pair caches."""
-    key = (*_session_key(spark, sf_dir), "dsir_w")
-    df = _SPAN_CACHE.get(key) if stores_enabled() else None
-    if df is None:
-        df = TX.dsir_importance_weights(
-            _docs(spark, sf_dir), target_filter=F.col("source") == "src0"
-        ).localCheckpoint(eager=True)
-        if stores_enabled():
-            _SPAN_CACHE[key] = df
-    return df
+    """DSIR weight relation — the shared upstream of the weights report
+    AND the importance-resampling step (round-12; the resample
+    previously re-ran the whole corpus scoring pass)."""
+    return TX.dsir_importance_weights(
+        _docs(spark, sf_dir), target_filter=F.col("source") == "src0"
+    ).localCheckpoint(eager=True)
 
 
 def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,11 +20,11 @@ def _patched(monkeypatch, tables):
     loader = lambda spark, d, name, **kw: tables[name]  # noqa: E731
     monkeypatch.setattr(AX3, "load_table", loader)
     # the co-purchase pair relation now comes from mining's session
-    # store (round-12): patch the store's loader too, and drop any
-    # memoized frames so this test's synthetic tables cannot collide
-    # with another test's entries under the same fake sf_dir
+    # store (round-12): patch the store's loader too, and turn the
+    # stores off so this test's synthetic tables never enter (or read)
+    # the shared store under the same fake sf_dir
     monkeypatch.setattr(MN, "load_table", loader)
-    MN._MINING_STORE.clear()
+    monkeypatch.setenv("SPARK_GRAFT_STORES", "off")
 
 
 # ---------- gaps-and-islands streaks ----------

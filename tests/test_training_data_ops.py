@@ -504,6 +504,53 @@ def test_collect_vectors_guarded_raises_on_oversized(spark):
     assert len(rows) == 100
 
 
+def test_cosine_similarity_of_zero_vector_is_null(spark):
+    """A zero-norm vector has no cosine: the result is null, not an
+    ANSI DIVIDE_BY_ZERO failure of the whole query."""
+    from investcloud_data_pipeline_spark.functions.vectors import (
+        cosine_similarity,
+    )
+
+    df = spark.createDataFrame(
+        [([0.0, 0.0], [1.0, 2.0]), ([3.0, 4.0], [3.0, 4.0])],
+        "a array<double>, b array<double>",
+    )
+    got = [r.c for r in df.select(
+        cosine_similarity(F.col("a"), F.col("b")).alias("c")
+    ).collect()]
+    assert got == [None, 1.0]
+
+
+def test_vector_guard_sees_past_a_leading_null(spark):
+    """The size probe of the driver-collect guards reads the longest
+    vector, not the first row's: a null embedding in the first row of
+    partition 0 must neither hide the dimension nor push the seeded
+    k-means fit onto its distributed fallback."""
+    import numpy as np
+
+    from investcloud_data_pipeline_spark.functions.vectors import (
+        seeded_kmeans_centers,
+        vector_count_dim,
+    )
+
+    rows = [(0, None)] + [
+        (i, [float(i % 3), float(i % 5), 1.0, float(i)]) for i in range(1, 40)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    assert emb.first().embedding is None
+    assert vector_count_dim(emb, "embedding") == (40, 4)
+
+    centers = seeded_kmeans_centers(emb, "embedding", k=3, seed=7)
+    assert centers is not None
+    assert centers.shape == (3, 4)
+    want = seeded_kmeans_centers(
+        emb.where(F.col("embedding").isNotNull()), "embedding", k=3, seed=7
+    )
+    assert np.array_equal(centers, want)
+
+
 def test_pack_contiguous_respects_budget_and_order(spark):
     from investcloud_data_pipeline_spark.operators.packing import pack_contiguous
 
