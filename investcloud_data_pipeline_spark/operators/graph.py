@@ -1,115 +1,126 @@
-"""Distributed connected components (min-label propagation).
+"""Iterative graph operators: connected components (min-label
+propagation and star contraction), PageRank, label propagation, k-core
+and bounded BFS.
 
-Completes the fuzzy-dedup story: the LSH / Jaccard operators emit
-CANDIDATE PAIRS (dedup_fuzzy.py); grouping those pairs into duplicate
-CLUSTERS — so one canonical document per cluster can be kept — is a
-connected-components problem on the pair graph.
+They close the LLM-data pipelines' graph steps: near-dup and entity-
+resolution pair graphs become clusters through connected components;
+the co-purchase graph is ranked, segmented, peeled and walked.
 
-Plan: iterative min-label propagation entirely in DataFrame ops. Each
-round every node takes the min of its own label and its neighbors'
-labels (one equi-join on the edge list + one groupBy-min), until a round
-changes nothing. Rounds needed = graph diameter, which for near-dup
-clusters is tiny (dup clusters are dense cliques-ish, diameter 1-3).
+Two paths, chosen by edge count. Every operator first builds its edge
+list with :func:`_edge_list`, persists it and counts it.
 
-Scale notes: each round is one shuffle join on node id + one grouped
-min — both co-partition on the same key, so AQE reuses the exchange.
-Labels persist between rounds with periodic ``localCheckpoint`` to
-truncate the growing lineage (O(iters) plan depth otherwise). For
-planet-scale graphs with high-diameter components the
-large-star/small-star algorithm (Kiveris et al., "Connected Components
-in MapReduce", SOCC'14) halves rounds to O(log n); near-dup graphs do
-not need it — noted here as the upgrade path.
+- A graph of at most ``DRIVER_EDGE_LIMIT`` edges (2M ≈ tens of MB of
+  Arrow columns) is collected once to the driver, its fixpoint runs in
+  numpy, and the result returns through ``createDataFrame``. At that
+  size a DataFrame loop is all scheduling: one job per round, each a
+  few milliseconds of work.
+- A larger graph runs one distributed loop in the caller's session.
+  Every round's frame is cut with ``localCheckpoint``, so the logical
+  plan, and with it planning time, stays flat however many rounds run
+  (a frame read twice per round would otherwise double its plan every
+  round).
+
+Both paths return the same rows; PageRank floats agree up to summation
+order. Only the distributed loops can fail to converge: the driver
+kernels always run to their fixpoint, so ``max_iter`` bounds the loop
+path only.
+
+Edge-list rules, the same on both paths:
+
+- an edge with a null endpoint is dropped, so no operator emits a null
+  node (``bounded_bfs`` drops null seeds too);
+- only nodes on at least one edge are labelled (``bounded_bfs`` also
+  returns its seeds, at hop 0, even off the graph);
+- self-loops: ``connected_components`` keeps them, so a node whose only
+  edge is a self-loop is its own component; ``connected_components_star``
+  drops them first, so such a node is absent from its result; PageRank,
+  label propagation, k-core and BFS treat a self-loop as an ordinary
+  edge (it counts once towards a node's degree).
 """
 
 from __future__ import annotations
 
-import contextlib
-
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+DRIVER_EDGE_LIMIT = 2_000_000
 
 
-@contextlib.contextmanager
-def _small_graph_loop_scope(spark, n_edges: int, threshold: int = 5_000_000):
-    """Run the iterative refinement loop of a SMALL graph under loop-
-    tuned SQLConf — AQE off, narrow static shuffle width — WITHOUT
-    touching the caller's session.
-
-    Measured (sf0.1, 256 edges, 2 rounds): AQE's per-stage re-planning
-    jobs dominate tiny iterative workloads — 8.2s with AQE vs 4.2s
-    without, identical results; and without AQE coalescing a small
-    static shuffle width wins (4.2s → 3.7s at 8 vs 32 partitions). On
-    large graphs (> threshold edges) AQE stays on: skew-join splitting
-    and partition coalescing matter there and the re-planning cost
-    amortizes.
-
-    Isolation: the loop executes on a ``spark.newSession()`` clone —
-    same SparkContext, cache manager, and builder-level defaults, but
-    its OWN SQLConf — so concurrent queries on the caller's session
-    never observe the AQE toggle (previously the toggle was
-    session-wide). Yields a scope with ``to_loop(df)`` / ``to_parent
-    (df)`` re-rooting functions and an ``isolated`` flag. Re-rooting
-    SNAPSHOTS the frame with ``localCheckpoint(eager=True)`` — a
-    materialized RDD whose identity survives the session boundary —
-    and republishes it to the other session through a uniquely-named
-    global temp view. A snapshot (not a plain view of the live plan)
-    is essential: cross-session re-analysis of a view rebuilds the
-    logical plan, which no longer canonicalize-matches the shared
-    CacheManager entry, and an iterative result re-read through such a
-    view silently recomputes its ENTIRE per-round lineage (measured:
-    a 50-edge star-contraction result took 92s to collect that way).
-    Snapshots are taken exactly at the two boundaries — loop inputs
-    are already cached/counted by the callers, results are persisted
-    by the loop — so each is one cheap cache read, and everything
-    between the boundaries stays in one session where persist/
-    unpersist plan-matching is reliable. Above the threshold both
-    functions are the identity and the caller's session is used
-    as-is (``isolated`` False; callers keep the identity path's
-    persist contract unchanged).
-    """
-    if n_edges > threshold:
-        yield _LoopScope(lambda df: df, lambda df: df, isolated=False)
-        return
-    import uuid
-
-    clone = spark.newSession()
-    clone.conf.set("spark.sql.adaptive.enabled", "false")
-    clone.conf.set("spark.sql.shuffle.partitions", "8")
-    # runtime-set confs do not carry into newSession(); forward the one
-    # that changes scan semantics (nanos timestamps in events.parquet)
-    try:
-        clone.conf.set(
-            "spark.sql.legacy.parquet.nanosAsLong",
-            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
-        )
-    except Exception:
-        pass
-    tag = uuid.uuid4().hex[:12]
-    views: list[str] = []
-
-    def _reroot(df: DataFrame, session) -> DataFrame:
-        snap = df.localCheckpoint(eager=True)
-        name = f"__graph_loop_{tag}_{len(views)}"
-        snap.createOrReplaceGlobalTempView(name)
-        views.append(name)
-        return session.table(f"global_temp.{name}")
-
-    try:
-        yield _LoopScope(
-            lambda df: _reroot(df, clone),
-            lambda df: _reroot(df, spark),
-            isolated=True,
-        )
-    finally:
-        for name in views:
-            spark.catalog.dropGlobalTempView(name)
+def _edge_list(
+    edges: DataFrame, src: str, dst: str, symmetric: bool = True
+) -> DataFrame:
+    """Distinct ``(a, b)`` edges without null endpoints; with
+    ``symmetric`` every edge appears in both directions."""
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
+    if symmetric:
+        e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    return e.distinct()
 
 
-class _LoopScope:
-    def __init__(self, to_loop, to_parent, isolated: bool):
-        self.to_loop = to_loop
-        self.to_parent = to_parent
-        self.isolated = isolated
+def _fixpoint(
+    e: DataFrame, kernel, loop, name: str, value_type=None
+) -> DataFrame:
+    """``(node, name)`` from ``kernel(pandas edges) -> (nodes, values)``
+    on the driver when the edge list ``e`` is small enough, else from
+    ``loop(e)``. The loop's result must not need ``e`` cached."""
+    e = e.persist()
+    if e.count() > DRIVER_EDGE_LIMIT:
+        out = loop(e)
+        e.unpersist()
+        return out
+    # Arrow collect: 2M (long, long) edges are ~32MB of pandas columns
+    pdf = e.toPandas()
+    e.unpersist()
+    node, value = kernel(pdf)
+    node_type = e.schema["a"].dataType
+    schema = StructType(
+        [
+            StructField("node", node_type, False),
+            StructField(name, value_type or node_type, False),
+        ]
+    )
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"node": node, name: value}), schema
+    )
+
+
+def _index(pdf: pd.DataFrame):
+    """Sorted distinct node values and the edges' ``a``/``b`` endpoints
+    as positions in them — so position order is node-value order and a
+    min over positions is a min over node ids."""
+    nodes, pos = np.unique(
+        np.concatenate([pdf["a"].to_numpy(), pdf["b"].to_numpy()]),
+        return_inverse=True,
+    )
+    return nodes, pos[: len(pdf)], pos[len(pdf):]
+
+
+def _min_labels(pdf: pd.DataFrame):
+    """Component = min reachable node id: min-label hooking plus pointer
+    jumping (``lab[lab]``), O(log n) sweeps even on a long chain."""
+    nodes, a, b = _index(pdf)
+    lab = np.arange(len(nodes))
+    while True:
+        new = lab.copy()
+        np.minimum.at(new, a, lab[b])
+        np.minimum.at(new, b, lab[a])
+        new = new[new]
+        if np.array_equal(new, lab):
+            return nodes, nodes[lab]
+        lab = new
+
+
+def _fingerprint(df: DataFrame, x: str, y: str) -> tuple:
+    # Order-insensitive, type-agnostic change test, one scalar aggregate:
+    # row count plus bit_xor (not sum: the hashes span the int64 range
+    # and a sum overflows under ANSI) of per-row hashes.
+    row = df.agg(
+        F.count("*").alias("n"), F.bit_xor(F.xxhash64(x, y)).alias("h")
+    ).collect()[0]
+    return row.n, row.h
 
 
 def connected_components(
@@ -117,100 +128,46 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Label every node of the undirected ``edges`` graph with the
-    minimum node id reachable from it (= its component id).
+    minimum node id reachable from it (= its component id). Returns
+    (node, component).
 
-    Only nodes appearing in at least one edge are labeled; isolated
-    nodes are their own trivial component and never enter the graph.
-    Returns (node, component).
+    Distributed path: min-label propagation, one join plus one grouped
+    min per round, until the labels stop changing. Rounds = diameter,
+    which for near-dup clusters is 1-3; past ``max_iter`` rounds it
+    raises rather than return split components.
     """
-    sym = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    sym = sym.distinct().persist()
 
-    # Labels only ever DECREASE (min-propagation), so convergence shows
-    # up as an unchanged label sum — one scalar aggregate per round
-    # instead of a join-and-count against the previous labels.
-    n_edges = sym.count()
-    with _small_graph_loop_scope(edges.sparkSession, n_edges) as scope:
-        sym_l = scope.to_loop(sym)
-        if scope.isolated:
-            sym.unpersist()  # the loop reads the snapshot from here on
+    def loop(sym: DataFrame) -> DataFrame:
         labels = (
-            sym_l.select(F.col("a").alias("node"))
+            sym.select(F.col("a").alias("node"))
             .distinct()
             .withColumn("label", F.col("node"))
-            .persist()
+            .localCheckpoint(eager=False)
         )
-        final = _propagate_loop(sym_l, labels, max_iter, checkpoint_every)
-        out = scope.to_parent(
-            final.select("node", F.col("label").alias("component"))
-        )
-        if scope.isolated:
-            final.unpersist()  # result data lives in the snapshot RDD
-        return out
-
-
-def _propagate_loop(
-    sym: DataFrame, labels: DataFrame, max_iter: int, checkpoint_every: int
-) -> DataFrame:
-    """Min-label propagation rounds; returns the FINAL persisted labels
-    frame (node, label) — the caller renames/re-roots it."""
-
-    def _fp(frame: DataFrame):
-        # Order-insensitive, TYPE-AGNOSTIC change fingerprint (same
-        # scheme as the star-contraction variant): bit_xor of per-row
-        # hashes + count. Works for string node ids (entity resolution)
-        # where the old sum(label) fingerprint would cast-fail, and
-        # cannot overflow where a long sum could. A changed node flips
-        # its row hash; cancellation odds are ~2^-64 per round.
-        row = frame.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("node", "label")).alias("x"),
-        ).collect()[0]
-        return row.n, row.x
-
-    prev_fp = _fp(labels)
-    converged = False
-    for i in range(max_iter):
-        # One propagation hop per round. (Measured: batching 2 hops per
-        # convergence check LOSES on near-dup graphs — their diameter is
-        # ~1-2, so the extra hop's join work is pure waste while the
-        # round count doesn't drop.)
-        msgs = (
-            sym.join(labels, sym.b == labels.node)
-            .select(F.col("a").alias("node"), "label")
-        )
-        new_labels = (
-            labels.select("node", "label")
-            .union(msgs)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        new_labels = new_labels.persist()
-        new_fp = _fp(new_labels)
-        labels.unpersist()
-        labels = new_labels
-        if new_fp == prev_fp:
-            converged = True
-            break
-        prev_fp = new_fp
-    sym.unpersist()
-    if not converged:
-        # Min-label propagation needs O(diameter) rounds; exiting early
-        # would silently split long-chain components into wrong labels.
+        prev = _fingerprint(labels, "node", "label")
+        for _ in range(max_iter):
+            msgs = sym.join(labels, sym.b == labels.node).select(
+                F.col("a").alias("node"), "label"
+            )
+            labels = (
+                labels.union(msgs)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+                .localCheckpoint(eager=False)
+            )
+            fp = _fingerprint(labels, "node", "label")
+            if fp == prev:
+                return labels.select("node", F.col("label").alias("component"))
+            prev = fp
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "the graph has a component with diameter > max_iter — raise "
-            "max_iter (or switch to large-star/small-star for "
-            "high-diameter graphs)"
+            "max_iter or use connected_components_star"
         )
-    return labels
+
+    return _fixpoint(_edge_list(edges, src, dst), _min_labels, loop, "component")
 
 
 def connected_components_star(
@@ -218,17 +175,16 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
-    """Connected components via the alternating large-star / small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SOCC'14) — the scale path for HIGH-DIAMETER graphs.
+    """Connected components, same (node, component) labels as
+    :func:`connected_components` except that self-loops are dropped
+    first. Collecting small graphs makes this the operator for any
+    graph shape, small or large, chained or clustered.
 
-    Min-label propagation (``connected_components``) needs O(diameter)
-    rounds: fine for near-dup clusters (diameter 1-3), hopeless for
-    chain-shaped graphs. Star contraction converges in O(log^2 n) rounds
-    regardless of diameter: each round every node hooks its neighborhood
-    onto the neighborhood minimum, halving tree heights.
+    Distributed path: the alternating large-star / small-star algorithm
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SOCC'14), O(log² n) rounds regardless of diameter, where min-label
+    propagation needs one round per hop:
 
       large-star(u): for every neighbor v > u, re-edge (v, m) where
                      m = min(N(u) ∪ {u})
@@ -236,118 +192,59 @@ def connected_components_star(
                      every neighbor v (all ≤ u) and u itself, re-edge
                      (v, m) where m = min(N(u) ∪ {u})
 
-    At fixpoint the edge set is a star forest: every node points at its
-    component's minimum id. Returns (node, component), same contract as
-    ``connected_components`` (isolated nodes never enter).
-
-    Scale notes: both phases are one groupBy-min + one re-join per
-    round, shuffling on node id each time; rounds are O(log^2 n) so a
-    1000-hop chain that min-propagation would need 1000 shuffles for
-    closes in ~10. ``localCheckpoint`` every few rounds truncates the
-    iterative lineage. Convergence is detected by an order-insensitive
-    edge-set fingerprint (count + xor of a per-edge hash), one scalar
-    aggregate per round.
+    At the fixpoint (an unchanged edge-set fingerprint) the edges form a
+    star forest: every node points at its component's minimum id.
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
 
-    def _fingerprint(df: DataFrame) -> tuple:
-        # bit_xor, not sum: the hash values span the full int64 range and
-        # a sum overflows under ANSI mode.
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _large_star(df: DataFrame) -> DataFrame:
-        # Symmetric neighborhoods; m = min over N(u) ∪ {u}; connect
-        # strictly-larger neighbors to m. No dedup here — duplicates are
-        # semantically harmless (min is idempotent) and the iteration's
-        # single distinct runs at the end of small-star; AQE broadcasts
-        # `mins` once contraction shrinks it below the threshold.
-        sym = df.select("u", "v").union(
-            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    def large_star(df: DataFrame) -> DataFrame:
+        # No dedup here: duplicates are harmless (min is idempotent) and
+        # the round's single distinct closes small-star.
+        sym = df.union(df.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        mins = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
         return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
+            sym.join(mins, "a")
+            .filter(F.col("b") > F.col("a"))
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .filter(F.col("a") != F.col("b"))
         )
 
-    def _small_star(df: DataFrame) -> DataFrame:
-        # Orient toward the larger endpoint so every neighbor of u is
-        # < u; hook the neighbors AND u itself onto the minimum. The
-        # self-hook rows (u, m) are exactly `mins` with u ≠ m — no
-        # self-edge union needed. One distinct closes the iteration.
+    def small_star(df: DataFrame) -> DataFrame:
+        # The self-hook rows (u, m) are exactly `mins` with u ≠ m.
         oriented = df.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
         )
-        mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
+        mins = oriented.groupBy("a").agg(F.min("b").alias("m"))
         hooked = (
-            oriented.join(mins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            oriented.join(mins, "a")
+            .filter(F.col("b") != F.col("m"))
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
         )
-        self_hooked = mins.filter(F.col("u") != F.col("m")).select(
-            "u", F.col("m").alias("v")
+        self_hooked = mins.filter(F.col("a") != F.col("m")).select(
+            "a", F.col("m").alias("b")
         )
         return hooked.union(self_hooked).distinct()
 
-    # No fingerprint of the raw input: iteration outputs are compared
-    # against each other only (saves one full action up front); the
-    # count doubles as the AQE on/off decision for the loop.
-    n_edges = e.count()
-    prev_fp: tuple | None = None
-    converged = False
-    with _small_graph_loop_scope(edges.sparkSession, n_edges) as scope:
-        parent_e = e
-        e = scope.to_loop(e)
-        if scope.isolated:
-            parent_e.unpersist()  # loop reads the snapshot from here on
-        for i in range(max_iter):
-            stepped = _small_star(_large_star(e))
-            if (i + 1) % checkpoint_every == 0:
-                stepped = stepped.localCheckpoint(eager=False)
-            stepped = stepped.persist()
-            fp = _fingerprint(stepped)
-            e.unpersist()
-            e = stepped
-            if fp == prev_fp:
-                converged = True
-                break
-            prev_fp = fp
-        if converged:
-            final = e
-            e = scope.to_parent(e)
-            if scope.isolated:
-                final.unpersist()  # result data lives in the snapshot RDD
-    if not converged:
-        e.unpersist()
+    def loop(e: DataFrame) -> DataFrame:
+        prev = None
+        for _ in range(max_iter):
+            e = small_star(large_star(e)).localCheckpoint(eager=False)
+            fp = _fingerprint(e, "a", "b")
+            if fp == prev:
+                # star forest: (member > root) → root, plus every root
+                members = e.select(
+                    F.col("a").alias("node"), F.col("b").alias("component")
+                )
+                roots = e.select(F.col("b").alias("node")).distinct()
+                return members.union(roots.withColumn("component", F.col("node")))
+            prev = fp
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} "
             "rounds — pathological input (the alternating algorithm is "
             "O(log^2 n) rounds; raise max_iter)"
         )
-    # Star forest: edges are (node > root) → root. Components = every
-    # non-root node mapped to its root, plus each root mapped to itself.
-    # The result reads `e` twice, so `e` must stay materialized —
-    # recomputing the iterative lineage (per-iteration double
-    # self-reference) is exponential in the round count. On the
-    # isolated path the to_parent snapshot RDD holds the data; on the
-    # identity path the final persisted frame stays cached, same
-    # contract as connected_components.
-    members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("node")).distinct().withColumn(
-        "component", F.col("node")
-    )
-    return members.union(roots)
+
+    e = _edge_list(edges, src, dst, symmetric=False).filter(F.col("a") != F.col("b"))
+    return _fixpoint(e, _min_labels, loop, "component")
 
 
 def pagerank(
@@ -358,111 +255,52 @@ def pagerank(
     damping: float = 0.85,
     undirected: bool = True,
 ) -> DataFrame:
-    """Fixed-iteration PageRank by power iteration in DataFrame ops.
-
-    Per round: one join of ranks onto the out-edge list + one grouped
-    sum of contributions — both shuffle on node id, the same economics
-    as min-label propagation. A FIXED iteration count (not an epsilon
-    test) keeps the operator deterministic and oracle-expressible (the
-    DuckDB mirror is a recursive CTE with an iteration counter).
+    """Fixed-iteration PageRank by power iteration. A FIXED iteration
+    count (not an epsilon test) keeps the operator deterministic and
+    oracle-expressible (the DuckDB mirror is a recursive CTE with an
+    iteration counter).
 
     Dangling nodes (out-degree 0 — only possible with a directed input;
     ``undirected`` gives every node out-degree ≥ 1) get the standard
     stochastic-matrix treatment: their rank mass is summed each round
     and redistributed uniformly (``damping * dangling_mass / n`` added
     to every node), so ranks sum to 1 to float precision instead of
-    leaking. The dangling sum stays IN the plan as a broadcast 1-row
-    aggregate joined onto the update (no per-round driver collect — the
-    iteration remains a single job); the branch is skipped entirely
-    when the dangling set is empty.
-    Returns (node, rank), rank summing to 1 (±float noise).
+    leaking. Returns (node, rank).
+
+    Distributed path, per round: one join of ranks onto the out-edge
+    list and one grouped sum of contributions, both keyed on node id;
+    with dangling nodes, a broadcast 1-row mass aggregate.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if undirected:
-        e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    e = e.distinct().persist()
 
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .persist()
-    )
-    deg = e.groupBy("a").agg(F.count("*").alias("deg"))
-    out = e.join(deg, "a")  # (a, b, deg)
+    def kernel(pdf: pd.DataFrame):
+        nodes, a, b = _index(pdf)
+        n = max(len(nodes), 1)
+        deg = np.bincount(a, minlength=len(nodes))
+        dangling = deg == 0
+        rank = np.full(len(nodes), 1.0 / n)
+        for _ in range(n_iter):
+            in_sum = np.bincount(b, weights=rank[a] / deg[a], minlength=len(nodes))
+            rank = (1.0 - damping) / n + damping * (in_sum + rank[dangling].sum() / n)
+        return nodes, rank
 
-    # Dangling set: nodes with no out-edge. Small by construction in
-    # most graphs; persisted because it is re-joined every round.
-    dangling = nodes.join(
-        deg.select(F.col("a").alias("node")), "node", "left_anti"
-    ).persist()
-    # ONE scheduled job for all three scalars (node count, edge count,
-    # dangling count) instead of three sequential driver round-trips —
-    # the 1-row aggregates fold via broadcast nested-loop joins
-    # (round-12; on a small graph the per-job scheduling latency was a
-    # third of the query's wall).
-    stats = (
-        nodes.agg(F.count("*").alias("n"))
-        .crossJoin(F.broadcast(e.agg(F.count("*").alias("ne"))))
-        .crossJoin(F.broadcast(dangling.agg(F.count("*").alias("nd"))))
-        .collect()[0]
-    )
-    n, n_edges = stats.n, stats.ne
-    has_dangling = (not undirected) and stats.nd > 0
-
-    base = (1.0 - damping) / n
-    with _small_graph_loop_scope(edges.sparkSession, n_edges) as scope:
-        # snapshot every per-round input into the loop session (the
-        # `out` snapshot also saves re-joining e⋈deg each round); the
-        # initial uniform ranks derive from the nodes snapshot — no
-        # separate snapshot needed
-        # Isolated + dangling: the redistribution scalar rides the
-        # round's own plan as an UNPARTITIONED window sum over the
-        # dangling flag instead of a broadcast 1-row aggregate — each
-        # per-round BroadcastExchange materializes as its own scheduled
-        # job even inside a lazy chain (5 extra driver round-trips per
-        # query; the same economics as the k_core broadcast note), while
-        # the window keeps all n_iter rounds inside ONE boundary job.
-        # Single-partition windows are a scale anti-pattern ONLY on
-        # unbounded data; this branch is gated by the loop scope's
-        # ≤5M-edge threshold, and the identity (large-graph) path keeps
-        # the broadcast aggregate. The flag is folded into the nodes
-        # snapshot once (saving the separate dangling snapshot job), so
-        # no per-round join against the dangling set remains. Same
-        # double values summed in an engine-chosen order (as before —
-        # the hash aggregate never guaranteed one); the 6dp output
-        # round absorbs reassociation ulps as documented.
-        use_window_dang = scope.isolated and has_dangling
-        out = scope.to_loop(out)
-        if use_window_dang:
-            nodes = scope.to_loop(
-                nodes.join(
-                    dangling.select(
-                        "node", F.lit(True).alias("__dang")
-                    ),
-                    "node",
-                    "left",
-                )
-            )
-            dangling_l = dangling  # unused on this path
-        else:
-            nodes = scope.to_loop(nodes)
-            dangling_l = (
-                scope.to_loop(dangling) if has_dangling else dangling
-            )
+    def loop(e: DataFrame) -> DataFrame:
+        nodes = (
+            e.select(F.col("a").alias("node"))
+            .union(e.select(F.col("b").alias("node")))
+            .distinct()
+            .localCheckpoint()
+        )
+        n = max(nodes.count(), 1)
+        deg = e.groupBy("a").agg(F.count("*").alias("deg"))
+        out = e.join(deg, "a").localCheckpoint()  # (a, b, deg)
+        dangling = None
+        if not undirected:
+            dangling = nodes.join(
+                deg.select(F.col("a").alias("node")), "node", "left_anti"
+            ).localCheckpoint()
+            if dangling.isEmpty():
+                dangling = None
         ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-        # Without a dangling branch, `ranks` feeds each iteration exactly
-        # once, so the n_iter updates compose into one LINEAR plan — run
-        # the whole chain as a single job at the boundary snapshot,
-        # eliminating n_iter persist+count driver round-trips (neutral
-        # at sf0.1 where the upstream pair-join dominates; the saved
-        # barriers grow with scheduler latency). The dangling branch
-        # reads `ranks` twice per round (contribs + mass aggregate),
-        # which would double the plan per iteration, so it keeps
-        # per-round materialization; likewise the identity (large-graph)
-        # path, where an unmaterialized chain would re-execute per
-        # downstream action.
-        lazy_chain = scope.isolated and not has_dangling
         for _ in range(n_iter):
             contribs = (
                 out.join(ranks, out.a == ranks.node)
@@ -473,78 +311,28 @@ def pagerank(
                 .groupBy("node")
                 .agg(F.sum("c").alias("in_sum"))
             )
-            if use_window_dang:
-                prev = ranks.select(
-                    "node", "__dang", F.col("rank").alias("__prev")
+            updated = nodes.join(contribs, "node", "left")
+            share = F.lit(0.0)
+            if dangling is not None:
+                # `ranks` is read twice per round (here and above): the
+                # per-round cut below keeps that from doubling the plan
+                mass = ranks.join(dangling, "node").agg(
+                    (F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("share")
                 )
-                updated = prev.join(contribs, "node", "left").withColumn(
-                    "__dang_share",
-                    F.coalesce(
-                        F.sum(
-                            F.when(F.col("__dang"), F.col("__prev"))
-                        ).over(Window.partitionBy()),
-                        F.lit(0.0),
-                    )
-                    / n,
-                )
-            else:
-                updated = nodes.join(contribs, "node", "left")
-                if has_dangling:
-                    # 1-row aggregate, broadcast onto every node's
-                    # update — the redistribution rides the same job
-                    # instead of a driver round-trip per iteration
-                    dang = ranks.join(dangling_l, "node").agg(
-                        (
-                            F.coalesce(F.sum("rank"), F.lit(0.0)) / n
-                        ).alias("__dang_share")
-                    )
-                    updated = updated.crossJoin(F.broadcast(dang))
-                else:
-                    updated = updated.withColumn(
-                        "__dang_share", F.lit(0.0)
-                    )
-            new_ranks = updated.select(
+                updated = updated.crossJoin(F.broadcast(mass))
+                share = F.col("share")
+            ranks = updated.select(
                 "node",
-                *(["__dang"] if use_window_dang else []),
                 (
-                    F.lit(base)
+                    F.lit((1.0 - damping) / n)
                     + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("in_sum"), F.lit(0.0))
-                        + F.col("__dang_share")
-                    )
+                    * (F.coalesce(F.col("in_sum"), F.lit(0.0)) + share)
                 ).alias("rank"),
-            )
-            if lazy_chain:
-                ranks = new_ranks
-            elif scope.isolated:
-                # dangling branch on a SMALL graph: `ranks` is read
-                # twice per round (contribs + mass aggregate), so a
-                # fully lazy chain would double the plan per round —
-                # but the per-round persist+count spent 5 blocking
-                # driver round-trips per query. localCheckpoint
-                # (eager=False) per round truncates the lineage
-                # without forcing a job; the boundary snapshot at
-                # scope.to_parent executes the whole chain ONCE, each
-                # round's blocks cached at first materialization and
-                # reused by the second reader (the SSSP-relaxation
-                # discipline, plans/analytics_ext3.py). Values are
-                # unchanged — same per-round expressions, same floats.
-                ranks = new_ranks.localCheckpoint(eager=False)
-            else:
-                new_ranks = new_ranks.persist()
-                new_ranks.count()  # materialize before dropping the parent
-                ranks.unpersist()
-                ranks = new_ranks
-        final = None if (lazy_chain or scope.isolated) else ranks
-        if use_window_dang:
-            ranks = ranks.select("node", "rank")  # drop the ride-along flag
-        ranks = scope.to_parent(ranks)
-        if scope.isolated and final is not None:
-            final.unpersist()  # result data lives in the snapshot RDD
-    dangling.unpersist()
-    e.unpersist()
-    return ranks
+            ).localCheckpoint()
+        return ranks
+
+    e = _edge_list(edges, src, dst, symmetric=undirected)
+    return _fixpoint(e, kernel, loop, "rank", DoubleType())
 
 
 def canonical_per_component(
@@ -573,60 +361,49 @@ def label_propagation(
     from the previous round's labels. A FIXED iteration count (not a
     convergence test) keeps the operator deterministic and
     oracle-expressible — the DuckDB mirror unrolls the same K rounds.
+    Returns (node, label).
 
-    Per round: one join of labels onto the symmetric edge list, one
-    (node, label) grouped count, one per-node argmax via max(struct) —
-    every shuffle keys on node id, so AQE reuses the exchange, and the
-    argmax is a single map-side-combinable aggregate (no window sort).
-    Same 100 TB economics as min-label connected components; unlike CC
-    the result splits dense near-dup blobs into communities rather
-    than gluing everything reachable together.
+    Distributed path, per round: one join of labels onto the symmetric
+    edge list, one (node, label) grouped count, one per-node argmax via
+    min(struct(-cnt, label)) — a map-side-combinable aggregate, no
+    window sort, and type-agnostic (string node ids work).
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct().persist()
-    nodes = e.select(F.col("a").alias("node")).distinct().persist()
-    n_edges = e.count()
 
-    with _small_graph_loop_scope(edges.sparkSession, n_edges) as scope:
-        e_l = scope.to_loop(e)
-        nodes_l = scope.to_loop(nodes)
-        labels = nodes_l.withColumn("label", F.col("node"))
-        # labels feeds each round exactly once -> in the isolated scope
-        # the K updates compose into one linear lazy plan, materialized
-        # once at the boundary snapshot (same trick as dangling-free
-        # PageRank); identity path materializes per round.
+    def kernel(pdf: pd.DataFrame):
+        nodes, a, b = _index(pdf)
+        n = len(nodes)
+        lab = np.arange(n)
+        for _ in range(n_iter):
+            key, cnt = np.unique(b * n + lab[a], return_counts=True)
+            node, label = np.divmod(key, n)
+            order = np.lexsort((label, -cnt, node))
+            node, label = node[order], label[order]
+            # every node is some edge's `b` (the list is symmetric), so
+            # the first row per node covers all nodes in position order
+            first = np.ones(len(node), bool)
+            first[1:] = node[1:] != node[:-1]
+            lab = label[first]
+        return nodes, nodes[lab]
+
+    def loop(e: DataFrame) -> DataFrame:
+        labels = e.select(F.col("a").alias("node")).distinct()
+        labels = labels.withColumn("label", F.col("node"))
         for _ in range(n_iter):
             votes = (
-                e_l.join(labels, e_l.a == labels.node)
+                e.join(labels, e.a == labels.node)
                 .groupBy(F.col("b").alias("node"), "label")
                 .agg(F.count("*").alias("cnt"))
             )
-            # max-cnt / min-label argmax as min(struct(-cnt, label)):
-            # negating the COUNT (always a long) instead of the label
-            # keeps the tie-break type-agnostic — string node ids work
-            # exactly like numeric ones (connected_components parity).
-            new_labels = (
+            best = F.min(F.struct((-F.col("cnt")).alias("neg_cnt"), F.col("label")))
+            labels = (
                 votes.groupBy("node")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("cnt")).alias("neg_cnt"), F.col("label")
-                        )
-                    ).alias("best")
-                )
+                .agg(best.alias("best"))
                 .select("node", F.col("best.label").alias("label"))
+                .localCheckpoint()
             )
-            if scope.isolated:
-                labels = new_labels
-            else:
-                new_labels = new_labels.persist()
-                new_labels.count()
-                labels.unpersist()
-                labels = new_labels
-        labels = scope.to_parent(labels)
-    e.unpersist()
-    nodes.unpersist()
-    return labels
+        return labels
+
+    return _fixpoint(_edge_list(edges, src, dst), kernel, loop, "label")
 
 
 def k_core(
@@ -638,145 +415,59 @@ def k_core(
 ) -> DataFrame:
     """k-core of an undirected graph (Seidman 1983) by synchronous
     peeling: every round, ALL nodes whose current degree is below ``k``
-    are deleted simultaneously, until a round deletes nothing. The
-    round bound keeps the operator oracle-expressible — the DuckDB
-    mirror unrolls the same ``max_rounds`` rounds, and because a
-    converged round is a no-op, Spark's early exit and the oracle's
-    full unroll agree exactly whenever the graph converges within the
-    bound (asserted by tests at the shipped scale factors).
+    are deleted simultaneously, until a round deletes nothing or
+    ``max_rounds`` rounds have run. The round bound keeps the operator
+    oracle-expressible — the DuckDB mirror unrolls the same
+    ``max_rounds`` rounds, and because a converged round is a no-op the
+    early exit and the full unroll agree whenever the graph converges
+    within the bound (asserted by tests at the shipped scale factors).
 
     Returns ``(node, core_degree)`` for surviving nodes — every
     ``core_degree`` is ≥ k by construction.
 
-    Per round: one grouped degree count plus two left-semi joins, all
-    keyed on node id, so the exchanges line up and AQE (on the
-    large-graph path) reuses them. The peel is monotone — the edge set
-    only shrinks — so per-round cost falls. Same loop-session isolation
-    as the other iterative operators, and the same two execution shapes
-    as :func:`label_propagation`: on the ISOLATED small-graph path all
-    ``max_rounds`` rounds compose into one lazy plan materialized once
-    at the boundary (per-round jobs would be pure scheduling overhead —
-    measured 5.6s → see plan notes — and converged rounds are no-ops,
-    so the full unroll equals the fixpoint); on the large-graph path
-    each round materializes behind ``persist``/``count`` and the
-    edge-count fingerprint EARLY-EXITS the loop at the fixpoint, since
-    there a wasted round is real shuffle money.
+    Distributed path, per round: one grouped degree count plus two
+    left-semi joins, all keyed on node id, then an edge count that
+    detects the fixpoint. The edge set only shrinks, so per-round cost
+    falls.
     """
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e0 = (
-        e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    n_edges = e0.count()
-    spark = edges.sparkSession
-    with _small_graph_loop_scope(spark, n_edges) as scope:
-        e_l = scope.to_loop(e0)
-        prev = n_edges
-        for i in range(max_rounds):
-            deg = e_l.groupBy("a").agg(F.count("*").alias("deg"))
-            keep = deg.filter(F.col("deg") >= k).select("a")
-            # NOTE: broadcasting `keep` here looks attractive (the
-            # membership checks would run map-side) but measures WORSE
-            # on the lazy-composed path: every broadcast exchange
-            # materializes as its own job and re-executes the entire
-            # prior-round lineage, turning the compose quadratic
-            # (5.5s → 6.4s at sf0.1). Shuffle semi-joins keep all
-            # rounds inside one job, each stage computed once.
-            stepped = (
-                e_l.join(keep, "a", "left_semi")
+
+    def kernel(pdf: pd.DataFrame):
+        nodes, a, b = _index(pdf)
+        for _ in range(max_rounds):
+            deg = np.bincount(a, minlength=len(nodes))
+            keep = (deg[a] >= k) & (deg[b] >= k)
+            if keep.all():
+                break
+            a, b = a[keep], b[keep]
+        deg = np.bincount(a, minlength=len(nodes))
+        return nodes[deg > 0], deg[deg > 0]
+
+    def loop(e: DataFrame) -> DataFrame:
+        prev = e.count()
+        for _ in range(max_rounds):
+            keep = (
+                e.groupBy("a")
+                .agg(F.count("*").alias("deg"))
+                .filter(F.col("deg") >= k)
+                .select("a")
+            )
+            e = (
+                e.join(keep, "a", "left_semi")
                 .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
                 .select("a", "b")
+                .localCheckpoint(eager=False)
             )
-            if scope.isolated:
-                # lazy compose; truncate lineage depth every few rounds
-                if (i + 1) % 4 == 0:
-                    stepped = stepped.localCheckpoint(eager=False)
-                e_l = stepped
-            else:
-                stepped = stepped.persist()
-                cur = stepped.count()
-                e_l.unpersist()
-                e_l = stepped
-                if cur == prev or cur == 0:
-                    break
-                prev = cur
-        core = e_l.groupBy(F.col("a").alias("node")).agg(
+            cur = e.count()
+            if cur == prev or cur == 0:
+                break
+            prev = cur
+        return e.groupBy(F.col("a").alias("node")).agg(
             F.count("*").cast("long").alias("core_degree")
         )
-        out = scope.to_parent(core)
-        if not scope.isolated:
-            e_l.unpersist()
-    e0.unpersist()
-    return out
 
-
-def connected_components_auto(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    driver_edge_limit: int = 2_000_000,
-) -> DataFrame:
-    """Connected components with the same guarded two-path shape as the
-    k-means fit (`functions/vectors.py`): a graph small enough to hold
-    on the driver (≤ ``driver_edge_limit`` edges ≈ tens of MB) closes
-    with an in-memory union-find in one collect — iterative CC at toy
-    scale is pure scheduling overhead (measured on a 3.3k-edge
-    mutual-kNN graph: min-label 8.3s, star 34s, union-find <0.5s) —
-    while anything larger routes to ``connected_components_star``
-    (O(log² n) rounds, the 100 TB path). Labels are IDENTICAL on both
-    paths: component id = min member id.
-
-    The limit is a FALLBACK boundary, not a correctness guard — no
-    raise, the distributed path simply engages.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    n = e.count()
-    if n > driver_edge_limit:
-        out = connected_components_star(e)
-        e.unpersist()
-        return out
-
-    # Arrow collect (not .collect()): 2M (long, long) edges are ~32MB
-    # as pandas columns vs ~400MB as driver Row objects
-    pdf = e.toPandas()
-    srcs, dsts = pdf["src"].tolist(), pdf["dst"].tolist()
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a0, b0 in zip(srcs, dsts):
-        a, b = find(a0), find(b0)
-        if a != b:
-            parent[b] = a
-    # min-label resolution: map every root to its component's min member
-    comp_min: dict = {}
-    nodes = set(srcs) | set(dsts)
-    for v in nodes:
-        root = find(v)
-        if root not in comp_min or v < comp_min[root]:
-            comp_min[root] = v
-    spark = edges.sparkSession
-    node_type = e.schema["src"].dataType
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("node", node_type, False),
-            StructField("component", node_type, False),
-        ]
+    return _fixpoint(
+        _edge_list(edges, src, dst), kernel, loop, "core_degree", LongType()
     )
-    out = spark.createDataFrame(
-        [(v, comp_min[find(v)]) for v in sorted(nodes)], schema
-    )
-    e.unpersist()
-    return out
 
 
 def bounded_bfs(
@@ -794,51 +485,49 @@ def bounded_bfs(
 
     Frontier expansion, not walk enumeration: each round joins the
     CURRENT frontier (nodes first reached last round) to the edge
-    relation, then anti-joins the visited set, so per-round work is
-    O(frontier-degree sum) and a node is expanded exactly once — on a
-    cyclic graph a walk-based formulation (what a naive recursive CTE
-    does) enumerates exponentially many paths. The fixed round bound
-    keeps the operator oracle-expressible: the DuckDB mirror is a
-    recursive CTE over (node, hops) states with set-dedup UNION, whose
-    min-hops aggregate provably equals BFS under the same bound.
-
-    Same loop-session isolation and lazy-composition shape as
-    :func:`k_core`: on small graphs all rounds compose into one job;
-    the frontier is persisted per round on the large path where an
-    empty-frontier early exit saves real shuffles.
+    relation, then anti-joins the visited set, so a node is expanded
+    exactly once — on a cyclic graph a walk-based formulation (what a
+    naive recursive CTE does) enumerates exponentially many paths. The
+    fixed round bound keeps the operator oracle-expressible: the DuckDB
+    mirror is a recursive CTE over (node, hops) states with set-dedup
+    UNION, whose min-hops aggregate equals BFS under the same bound.
+    The distributed path stops early at an empty frontier.
     """
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e0 = (
-        e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    n_edges = e0.count()
-    spark = edges.sparkSession
-    with _small_graph_loop_scope(spark, n_edges) as scope:
-        e_l = scope.to_loop(e0)
-        seeds_l = scope.to_loop(
-            seeds.select(F.col(seed_col).alias("node")).distinct()
-        )
-        visited = seeds_l.select("node", F.lit(0).alias("hops"))
-        frontier = seeds_l
+    seeds = seeds.select(F.col(seed_col).alias("node")).dropna().distinct()
+
+    def kernel(pdf: pd.DataFrame):
+        nodes, a, b = _index(pdf)
+        start = seeds.toPandas()["node"].to_numpy()
+        at = pd.Index(nodes).get_indexer(start)
+        hops = np.full(len(nodes), -1)
+        frontier = at[at >= 0]
+        hops[frontier] = 0
         for h in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e_l, frontier["node"] == e_l["a"])
+            reached = np.unique(b[np.isin(a, frontier)])
+            frontier = reached[hops[reached] < 0]
+            if len(frontier) == 0:
+                break
+            hops[frontier] = h
+        off_graph = start[at < 0]
+        return (
+            np.concatenate([off_graph, nodes[hops >= 0]]),
+            np.concatenate([np.zeros(len(off_graph), np.int64), hops[hops >= 0]]),
+        )
+
+    def loop(e: DataFrame) -> DataFrame:
+        frontier = seeds.localCheckpoint()
+        visited = frontier.select("node", F.lit(0).alias("hops"))
+        for h in range(1, max_hops + 1):
+            frontier = (
+                frontier.join(e, frontier["node"] == e["a"])
                 .select(F.col("b").alias("node"))
                 .distinct()
                 .join(visited.select("node"), "node", "left_anti")
+                .localCheckpoint(eager=False)
             )
-            if scope.isolated:
-                nxt = nxt.localCheckpoint(eager=False)
-            else:
-                nxt = nxt.persist()
-                if nxt.count() == 0:
-                    break
-            visited = visited.union(nxt.select("node", F.lit(h).alias("hops")))
-            frontier = nxt
-        out = scope.to_parent(
-            visited.select("node", F.col("hops").cast("long").alias("hops"))
-        )
-    e0.unpersist()
-    return out
+            if frontier.count() == 0:
+                break
+            visited = visited.union(frontier.select("node", F.lit(h).alias("hops")))
+        return visited.select("node", F.col("hops").cast("long").alias("hops"))
+
+    return _fixpoint(_edge_list(edges, src, dst), kernel, loop, "hops", LongType())

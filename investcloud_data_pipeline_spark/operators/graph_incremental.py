@@ -3,7 +3,7 @@ dedup graph.
 
 ``start_neardup_pair_ingest`` keeps PAIR discovery flat per batch
 (delta×base band probes, never base×base), but cluster ids were still
-a from-scratch ``connected_components_auto`` over the full accumulated
+a from-scratch ``connected_components_star`` over the full accumulated
 pair set — at 100 TB the re-cluster becomes the new bottleneck once
 pair ingest is flat. This module maintains the component labelling
 incrementally: per batch of new edges, only the components those edges
@@ -28,9 +28,9 @@ Design (two stores, both plain parquet):
 Per-batch update = (1) map delta endpoints to their current
 components (shard-pruned probe + broadcast remap), (2) CONTRACT the
 delta edges to component level and drop self-loops, (3) run
-``connected_components_auto`` on the contracted graph — its size is
+``connected_components_star`` on the contracted graph — its size is
 O(|delta edges|), independent of the accumulated graph, and its
-driver/star two-path guard carries over, (4) append the new nodes'
+driver/distributed two-path guard carries over, (4) append the new nodes'
 rows and compose the merge map into the remap (a broadcast join
 against the small remap — stored members are NOT rewritten).
 
@@ -200,9 +200,9 @@ def cc_update_batch(
             .select("ca", "cb")
             .filter(F.col("ca") != F.col("cb"))
         )
-        from .graph import connected_components_auto
+        from .graph import connected_components_star
 
-        cc = connected_components_auto(contracted, src="ca", dst="cb")
+        cc = connected_components_star(contracted, src="ca", dst="cb")
         # merge map over AFFECTED components only (bounded by 2·|delta|)
         m = cc.filter(F.col("node") != F.col("component")).select(
             F.col("node").alias("m_old"),

@@ -1550,11 +1550,10 @@ def dedup_mutual_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop runs on a graph no bigger than 5n edges. Star contraction, not
     min-label propagation: kNN graphs CHAIN (that is their point), so
     the diameter — and with it the min-label round count — grows with
-    cluster size; round-based CC at toy scale is pure scheduling
-    overhead either way, so the AUTO path closes small graphs with the
-    guarded driver union-find and routes big ones to star contraction
-    (same two-path shape as the k-means fit)."""
-    from ..operators.graph import connected_components_auto
+    cluster size. ``connected_components_star`` closes a graph under
+    the driver edge limit in one collect and runs star contraction
+    (O(log² n) rounds) above it."""
+    from ..operators.graph import connected_components_star
 
     emb = _emb(spark, sf_dir)
     # session-cached (checkpointed) pair relation: the symmetric union
@@ -1586,7 +1585,7 @@ def dedup_mutual_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("k1.src") < F.col("k1.dst"))
         .select(F.col("k1.src").alias("src"), F.col("k1.dst").alias("dst"))
     )
-    comp = connected_components_auto(mutual)
+    comp = connected_components_star(mutual)
     labeled = (
         emb.select(F.col("vec_id"))
         .join(comp, emb.vec_id == comp.node, "left")

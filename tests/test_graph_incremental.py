@@ -1,7 +1,7 @@
 """Incremental connected-components maintenance (operators/
 graph_incremental.py): per batch of new dedup-graph edges, only the
 touched components are recontracted; the labelling after every batch
-must equal a from-scratch ``connected_components_auto`` over all edges
+must equal a from-scratch ``connected_components_star`` over all edges
 seen so far (same min-member-id labels).
 """
 
@@ -14,7 +14,7 @@ import os
 from pyspark.sql import functions as F
 
 from investcloud_data_pipeline_spark.operators.graph import (
-    connected_components_auto,
+    connected_components_star,
 )
 from investcloud_data_pipeline_spark.operators.graph_incremental import (
     cc_read,
@@ -33,7 +33,7 @@ def _labels(df):
 
 def _scratch(spark, all_pairs):
     return _labels(
-        connected_components_auto(
+        connected_components_star(
             _edges_df(spark, all_pairs), src="id1", dst="id2"
         ).selectExpr("node", "component")
     )
@@ -171,7 +171,7 @@ def test_streaming_cluster_ingest_e2e(spark, tmp_path):
 def test_chained_behind_pair_ingest(spark, tmp_path):
     """Full chain: documents -> start_neardup_pair_ingest (pairs_dir)
     -> start_cluster_ingest; incremental cluster ids equal the batch
-    connected_components_auto over the emitted pair set."""
+    connected_components_star over the emitted pair set."""
     import pandas as pd
 
     from investcloud_data_pipeline_spark.streaming.documents import (

@@ -301,12 +301,16 @@ def test_gold_incremental_replay_epoch_no_double_count(spark, tmp_path, ip_regio
     assert snap3 == [("u1", 35.0, "EU"), ("u2", 7.0, "NA")]
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     """A chain longer than max_iter hops must raise, not silently return
-    split components."""
+    split components. Only the distributed loop has a round bound, so
+    the driver edge limit is set to 0 to force it."""
+    from investcloud_data_pipeline_spark.operators import graph
     from investcloud_data_pipeline_spark.operators.graph import (
         connected_components,
     )
+
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 0)
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src long, dst long"

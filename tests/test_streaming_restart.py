@@ -89,7 +89,7 @@ def test_cc_chain_mid_epoch_kill_replays_without_dup(spark, tmp_path, monkeypatc
         graph_incremental as GI,
     )
     from investcloud_data_pipeline_spark.operators.graph import (
-        connected_components_auto,
+        connected_components_star,
     )
     from investcloud_data_pipeline_spark.streaming.documents import (
         start_neardup_pair_ingest,
@@ -165,7 +165,7 @@ def test_cc_chain_mid_epoch_kill_replays_without_dup(spark, tmp_path, monkeypatc
     assert pairs
     want = {
         (r.node, r.component)
-        for r in connected_components_auto(
+        for r in connected_components_star(
             spark.createDataFrame(pairs, "id1 long, id2 long"),
             src="id1",
             dst="id2",

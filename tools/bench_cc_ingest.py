@@ -9,7 +9,7 @@ the stored graph grows to n_batches× the delta, and records:
 - the PER-BATCH trigger durations (flat curve == independence
   evidence, the BENCH_PAIR_INGEST discipline);
 - correctness at the end: incremental labelling == from-scratch
-  ``connected_components_auto`` over the union;
+  ``connected_components_star`` over the union;
 - the from-scratch recompute wall at the final size, for contrast
   with the last incremental trigger (the number the incremental path
   exists to avoid paying per batch).
@@ -47,7 +47,7 @@ def main() -> int:
     import pandas as pd
 
     from investcloud_data_pipeline_spark.operators.graph import (
-        connected_components_auto,
+        connected_components_star,
     )
     from investcloud_data_pipeline_spark.operators.graph_incremental import (
         cc_read,
@@ -121,7 +121,7 @@ def main() -> int:
         pd.DataFrame(all_edges, columns=["id1", "id2"])
     )
     t1 = time.time()
-    scratch = connected_components_auto(
+    scratch = connected_components_star(
         edges_df, src="id1", dst="id2"
     ).selectExpr("node", "component")
     n_diff = (
