@@ -88,56 +88,85 @@ def collect_vectors_guarded(
     return df.select(id_col, vec_col).collect()
 
 
-def seeded_kmeans_centers(
-    df,
-    vec_col: str,
-    k: int,
-    seed: int,
-    n_iter: int = 8,
-    max_driver_bytes: int = 256 << 20,
-):
-    """Seeded k-means cell centers for spatial-split operators (SemDeDup
-    clustering, IVF cells) — returns a ``(k, dim)`` float64 ndarray, or
-    None when the corpus exceeds the driver-fit guard.
+# The one size constant of the k-means fits: an embedding matrix of at
+# most this many estimated bytes is collected and fitted on the driver.
+DRIVER_FIT_BYTES = 256 << 20
 
-    Spark ML's distributed KMeans launches ~10+ scheduled jobs
-    (k-means|| init + per-iteration aggregates); on the small inputs
-    these operators cluster BY CONSTRUCTION (an embedding table that
-    fits the assignment broadcast), that scheduling overhead dominates
-    the whole operator (measured: 4.1s of a 4.1s SemDeDup run at
-    sf0.1). Under the same driver-size guard the blocked-matmul kernels
-    already use, fit locally instead: vectorized k-means++ init +
-    Lloyd iterations over one collected matrix — deterministic for a
-    given seed, milliseconds at guard scale. Above the guard return
-    None and let callers run distributed KMeans (the 100 TB path, where
-    fit cost amortizes).
 
-    Only the FIT is driver-side; assignment stays a distributed
-    Arrow-batched argmin (see ``assign_cells``)."""
+def driver_matrix(df, vec_col: str):
+    """The non-null vectors of ``vec_col`` as one ``(n, dim)`` float64
+    ndarray, collected once — or None when the estimated
+    ``n * (dim * 8 + 32)`` bytes exceed ``DRIVER_FIT_BYTES``. Null
+    vectors carry no position to fit, so they are neither counted nor
+    collected. Exposed so callers that fit SEVERAL codebooks over
+    slices of one vector set (per-subspace PQ) collect once."""
     import numpy as np
 
-    n, dim = vector_count_dim(df, vec_col)
-    if n < k or dim == 0 or n * (dim * 8 + 32) > max_driver_bytes:
+    vecs = df.where(F.col(vec_col).isNotNull())
+    n, dim = vector_count_dim(vecs, vec_col)
+    if n * (dim * 8 + 32) > DRIVER_FIT_BYTES:
         return None
-    # null vectors carry no position to fit
-    rows = df.where(F.col(vec_col).isNotNull()).select(
-        to_double_array(vec_col)
-    ).collect()
-    mat = np.asarray([r[0] for r in rows], dtype=np.float64)
-    return kmeans_fit_local(mat, k, seed, n_iter)
+    rows = vecs.select(to_double_array(vec_col)).collect()
+    return np.asarray([r[0] for r in rows], dtype=np.float64)
+
+
+def seeded_kmeans_centers(df, vec_col: str, k: int, seed: int, n_iter: int = 8):
+    """Seeded k-means cell centers — the one k-means fit behind SemDeDup
+    blocks, IVF cells, the PQ and IVF-PQ codebooks, topic clusters and
+    the streaming IVF index. Returns a ``(k', dim)`` float64 ndarray
+    with ``k' = min(k, non-null rows)``; raises ValueError when there
+    is no non-null vector.
+
+    At or below ``DRIVER_FIT_BYTES`` the vectors are collected once and
+    fitted by ``kmeans_fit_local`` (vectorized k-means++ init + Lloyd
+    iterations, deterministic for a given seed, milliseconds at guard
+    scale): Spark ML's distributed KMeans launches ~10+ scheduled jobs
+    (k-means|| init + per-iteration aggregates), which dominated the
+    whole operator on guard-sized inputs (measured: 4.1s of a 4.1s
+    SemDeDup run at sf0.1). Above it, Spark ML ``KMeans`` fits the
+    non-null vectors (the 100 TB path, where fit cost amortizes; it
+    returns fewer than ``k'`` centers only when the input has fewer
+    distinct vectors).
+
+    Only the FIT differs by size; every caller assigns with
+    ``assign_cells`` on both sides of the guard."""
+    import numpy as np
+
+    mat = driver_matrix(df, vec_col)
+    if mat is not None:
+        return kmeans_fit_local(mat, k, seed, n_iter)
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feats = df.where(F.col(vec_col).isNotNull()).select(
+        array_to_vector(to_double_array(vec_col)).alias("features")
+    )
+    model = KMeans(k=k, seed=seed, maxIter=n_iter).fit(feats)
+    return np.asarray(model.clusterCenters(), dtype=np.float64)
+
+
+def centers_frame(spark, centers, id_col: str = "cell"):
+    """``(id_col int, centroid array<double>)`` frame of a centers
+    matrix, row i holding center i — the broadcast side of the IVF
+    probes and the centroid store of the streaming IVF index."""
+    return spark.createDataFrame(
+        [(i, c.tolist()) for i, c in enumerate(centers)],
+        f"{id_col} int, centroid array<double>",
+    )
 
 
 def kmeans_fit_local(mat, k: int, seed: int, n_iter: int = 8):
     """Driver-side seeded k-means over an already-collected (n, dim)
-    float64 matrix — the fit kernel of ``seeded_kmeans_centers``,
-    exposed so callers that fit SEVERAL codebooks over slices of one
-    vector set (per-subspace PQ) can collect once and fit locally
-    instead of paying count/first/collect jobs per subspace."""
+    float64 matrix — the driver fit of ``seeded_kmeans_centers``,
+    exposed for callers that slice one ``driver_matrix`` into several
+    fits. Returns ``min(k, n)`` centers; raises ValueError on an empty
+    matrix."""
     import numpy as np
 
     n = len(mat)
-    if n == 0 or n < k:
-        return None
+    if n == 0:
+        raise ValueError("k-means fit over no non-null vector")
+    k = min(k, n)
     # Canonicalize row order before seeding: collect() returns rows in
     # PARTITION order, so without this the seeded RNG indexes a
     # layout-dependent matrix and a mere repartition() changes the fit
@@ -193,12 +222,18 @@ def kmeans_fit_local(mat, k: int, seed: int, n_iter: int = 8):
     return c
 
 
-def assign_cells(centers) -> "callable":
+def assign_cells(centers):
     """Distributed nearest-center assignment for ``seeded_kmeans_centers``
-    output: a vectorized pandas UDF computing argmin ||x - c||² per row
-    via one Arrow-batched matmul (the centers matrix is tiny and ships
-    in the UDF closure). Matches Spark ML KMeans assignment semantics
-    (Euclidean)."""
+    output, whichever side of the guard fitted it: returns a function
+    mapping a double-array column to its int cell column, a vectorized
+    pandas UDF computing argmin ||x - c||² per row via one Arrow-batched
+    matmul (the centers matrix is tiny and ships in the UDF closure);
+    ties go to the smallest center index.
+
+    The cell column is declared non-null: a join on it otherwise makes
+    the optimizer infer ``isnotnull(cell)`` and push that filter below
+    the projection, evaluating the UDF a second time per row. The UDF
+    never returns null, so the coalesce never fires."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -218,37 +253,17 @@ def assign_cells(centers) -> "callable":
         idx = (c_sq[None, :] - 2.0 * (x @ c.T)).argmin(1)
         return pd.Series(idx.astype("int32"))
 
-    return assign
+    return lambda vec: F.coalesce(assign(vec), F.lit(-1))
 
 
 def kmeans_assignments(
     df, vec_col: str, id_col: str, k: int, seed: int = 42
 ):
     """(id, cluster) assignments for a seeded k-means over an embedding
-    column — the shared fit-then-assign entry for cluster-scoped
-    operators (SemDeDup blocks, IVF cells, topic clustering).
-
-    Fit follows the repo's standard dual path: driver-side seeded Lloyd
-    under the collect guard (Spark ML's ~10 scheduled fit jobs dominate
-    guard-sized corpora), distributed Spark ML KMeans above it.
-    Assignment is a distributed Arrow-batched argmin either way."""
-    from pyspark.sql import functions as F
-
+    column: ``seeded_kmeans_centers`` then ``assign_cells``, the same
+    fit-then-assign on both sides of the driver-fit guard."""
     centers = seeded_kmeans_centers(df, vec_col, k=k, seed=seed)
-    if centers is not None:
-        return df.select(
-            F.col(id_col),
-            assign_cells(centers)(to_double_array(vec_col)).alias("cluster"),
-        )
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vec_df = df.withColumn(
-        "features", array_to_vector(to_double_array(vec_col))
-    )
-    model = KMeans(k=k, seed=seed, maxIter=8, featuresCol="features").fit(
-        vec_df
-    )
-    return model.transform(vec_df).select(
-        F.col(id_col), F.col("prediction").alias("cluster")
+    return df.select(
+        F.col(id_col),
+        assign_cells(centers)(to_double_array(vec_col)).alias("cluster"),
     )

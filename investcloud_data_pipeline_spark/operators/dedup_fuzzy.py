@@ -709,35 +709,11 @@ def semantic_dedup_pairs(
 
     if n_cells is None:
         n_cells = max(16, df.count() // target_cell_rows)
-    # Fit: driver-side seeded Lloyd when the corpus fits the guard
-    # (milliseconds vs ~4s of Spark ML job-scheduling overhead at
-    # sf0.1); distributed KMeans above it. Assignment is distributed
-    # either way.
     centers = seeded_kmeans_centers(df, vec_col, k=n_cells, seed=seed)
-    if centers is not None:
-        assigned = df.select(
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        ).withColumn("cluster", assign_cells(centers)(F.col("v")))
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        with_vec = df.withColumn(
-            "features", array_to_vector(to_double_array(vec_col))
-        )
-        # Same fit economics as simsearch.ivf_topk: cells need a
-        # spatial split, not converged clusters.
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=8, featuresCol="features"
-        ).fit(with_vec)
-        assigned = model.transform(with_vec).select(
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-            F.col("prediction").alias("cluster"),
-        )
-    assigned = assigned.persist()
-    assigned.count()  # materialize once; the self-join reads it twice
+    assigned = df.select(
+        F.col(id_col).alias("id"),
+        to_double_array(vec_col).alias("v"),
+    ).withColumn("cluster", assign_cells(centers)(F.col("v")))
     a = assigned.select(
         F.col("id").alias("id1"), F.col("v").alias("v1"), "cluster"
     ).withColumn("n1", l2_norm(F.col("v1")))

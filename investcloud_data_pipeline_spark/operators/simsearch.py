@@ -201,41 +201,20 @@ def ivf_topk(
     Seeded k-means → deterministic run-to-run, but not SQL-expressible
     (rows-only oracle).
     """
-    from ..functions.vectors import assign_cells, seeded_kmeans_centers
+    from ..functions.vectors import (
+        assign_cells,
+        centers_frame,
+        seeded_kmeans_centers,
+    )
 
-    # Fit: driver-side seeded Lloyd under the size guard (IVF cells
-    # only need a reasonable spatial split, not converged clusters —
-    # recall comes from n_probe, and Spark ML's fit job-scheduling is
-    # the operator's dominant term on guard-sized corpora); distributed
-    # KMeans above the guard. Assignment is distributed either way.
+    # IVF cells only need a reasonable spatial split, not converged
+    # clusters — recall comes from n_probe
     centers = seeded_kmeans_centers(corpus, vec_col, k=n_cells, seed=seed)
-    if centers is not None:
-        assigned = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            to_double_array(vec_col).alias("cv"),
-        ).withColumn("cell", assign_cells(centers)(F.col("cv")))
-        centroid_rows = [c.tolist() for c in centers]
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        corpus_vec = corpus.withColumn(
-            "features", array_to_vector(to_double_array(vec_col))
-        )
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=8, featuresCol="features"
-        ).fit(corpus_vec)
-        assigned = model.transform(corpus_vec).select(
-            F.col(id_col).alias("neighbor_id"),
-            to_double_array(vec_col).alias("cv"),
-            F.col("prediction").alias("cell"),
-        )
-        centroid_rows = [list(c) for c in model.clusterCenters()]
-    centroids = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(centroid_rows)
-    ]
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(centroids, "cell int, centroid array<double>")
+    assigned = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        to_double_array(vec_col).alias("cv"),
+    ).withColumn("cell", assign_cells(centers)(F.col("cv")))
+    cent_df = centers_frame(corpus.sparkSession, centers)
     # nearest n_probe cells per query (centroid set is tiny → broadcast)
     q = queries.select(
         F.col(id_col).alias("query_id"), to_double_array(vec_col).alias("qv")

@@ -364,7 +364,7 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     each node expanded once); the oracle walks (node, hops) states with
     a set-dedup recursive CTE and takes min(hops), which equals BFS
     under the same bound."""
-    pairs = copurchase_part_pairs(spark, sf_dir).persist()
+    pairs = copurchase_part_pairs(spark, sf_dir)
     nodes = (
         pairs.select(F.col("part1").alias("node"))
         .union(pairs.select(F.col("part2").alias("node")))

@@ -463,31 +463,22 @@ def _pq_dist_from_d2(s: int, d2: str = _PQ_D2):
     )
 
 
-def _pq_best(
-    emb: DataFrame,
-    centers: DataFrame,
-    extra_cols: tuple = (),
-) -> DataFrame:
+def _pq_best(emb: DataFrame, centers: DataFrame) -> DataFrame:
     """Per vector: the argmin (d, crank) struct per subspace, computed
     with all PQ_SUBSPACES distances in one projection over the
     broadcast codebook and 8 independent min(struct) aggregates — ONE
-    hash exchange total (map-side partial mins), no x8 row explosion.
-    ``extra_cols`` ride along in the group key (functionally dependent
-    on vec_id — e.g. the IVF cell id), so callers don't pay a second
-    join to re-attach them."""
+    hash exchange total (map-side partial mins), no x8 row explosion."""
     pairs = emb.crossJoin(F.broadcast(centers))
     scored = pairs.select(
         "vec_id",
-        *extra_cols,
         "crank",
         _pq_diff2("embedding", "cemb").alias(_PQ_D2),
     ).select(
         "vec_id",
-        *extra_cols,
         "crank",
         *[_pq_dist_from_d2(s).alias(f"d{s}") for s in range(PQ_SUBSPACES)],
     )
-    return scored.groupBy("vec_id", *extra_cols).agg(
+    return scored.groupBy("vec_id").agg(
         *[
             F.min(
                 F.struct(
@@ -818,14 +809,45 @@ QUERIES["ann_pq_adc_topk"] = (ann_pq_adc_topk, _pq_adc_sql())
 # recall and tests/test_analytics_ext5.py pins a recall floor so a
 # codebook regression fails CI.
 #
-# Scale: the per-subspace fits run over 8-dim slices (n×96 bytes) under
-# the same 256 MB driver guard as IVF/SemDeDup, falling back to
-# distributed Spark ML KMeans per subspace above it (the 100 TB path,
-# where 8 sequential fits amortize against the corpus scan); the search
-# half is unchanged — codes + broadcast lookup, never the vectors.
+# Scale: the per-subspace fits share the driver-fit guard of every
+# k-means fit (``vectors.DRIVER_FIT_BYTES``): under it the corpus is
+# collected once and sliced; above it each 8-dim slice frame gets its
+# own ``seeded_kmeans_centers`` fit (the 100 TB path, where 8
+# sequential fits amortize against the corpus scan); the search half
+# is unchanged — codes + broadcast lookup, never the vectors.
 
 PQ_KM_CODEBOOK = 64
 PQ_KM_SEED = 142
+
+
+def _codebook_frame(spark: SparkSession, slices: list) -> DataFrame:
+    """(crank, cemb) codebook packing per-subspace center matrices into
+    synthetic full-width vectors (subspace slices are independent in
+    ADC, so packing loses nothing)."""
+    import numpy as np
+
+    full = np.hstack(slices)
+    return spark.createDataFrame(
+        [(i + 1, [float(x) for x in row]) for i, row in enumerate(full)],
+        "crank int, cemb array<float>",
+    )
+
+
+def _subspace_fits(mat, k_codebook: int, seed: int) -> list:
+    """Per-subspace driver fits over one collected (n, 64) matrix,
+    subspace s seeded ``seed + s``."""
+    import numpy as np
+
+    from ..functions.vectors import kmeans_fit_local
+
+    return [
+        kmeans_fit_local(
+            np.ascontiguousarray(mat[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]),
+            k_codebook,
+            seed=seed + s,
+        )
+        for s in range(PQ_SUBSPACES)
+    ]
 
 
 def _pq_kmeans_centers(
@@ -835,85 +857,35 @@ def _pq_kmeans_centers(
     seed: int = PQ_KM_SEED,
 ) -> DataFrame:
     """(crank, cemb) codebook from independent per-subspace k-means
-    fits, packed into synthetic full-width vectors (subspace slices are
-    independent in ADC, so packing loses nothing).
+    fits of ``min(k_codebook, n)`` centers each.
 
     Under the driver-fit guard the full vector matrix is collected ONCE
     and the 8 subspace fits slice it locally — 3 Spark jobs total
     instead of 3 per subspace (measured 7.0s → 5.2s warm on the
     registry query at sf0.1; the remaining cost is the O(N×K×M) ADC
     assignment itself, 4× the K=16 twin's work by construction). The
-    fit is identical to per-slice collection:
+    fit is identical to per-slice ``seeded_kmeans_centers`` calls:
     kmeans_fit_local canonicalizes row order by the slice's own columns
-    before seeding, so the source layout is irrelevant."""
-    import numpy as np
+    before seeding, so the source layout is irrelevant. Above the
+    guard each slice frame is fitted by ``seeded_kmeans_centers``."""
+    from ..functions.vectors import driver_matrix, seeded_kmeans_centers
 
-    from ..functions.vectors import (
-        kmeans_fit_local,
-        to_double_array,
-        vector_count_dim,
-    )
-
-    n, dim = vector_count_dim(emb, "embedding")
-    # clamp so a tiny corpus (sf0.001) still fits a valid codebook
-    k_codebook = max(1, min(k_codebook, n))
-    slices = None
-    if n >= k_codebook and dim and n * (dim * 8 + 32) <= (256 << 20):
-        mat = np.asarray(
-            [
-                r[0]
-                for r in emb.select(
-                    to_double_array("embedding")
-                ).collect()
-            ],
-            dtype=np.float64,
-        )
-        slices = []
-        for s in range(PQ_SUBSPACES):
-            c = kmeans_fit_local(
-                np.ascontiguousarray(
-                    mat[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
+    mat = driver_matrix(emb, "embedding")
+    if mat is not None:
+        slices = _subspace_fits(mat, k_codebook, seed)
+    else:
+        slices = [
+            seeded_kmeans_centers(
+                emb.select(
+                    F.slice("embedding", s * PQ_SUBDIM + 1, PQ_SUBDIM).alias("v")
                 ),
+                "v",
                 k_codebook,
-                seed=seed + s,
+                seed + s,
             )
-            if c is None:
-                slices = None
-                break
-            slices.append(c)
-    if slices is None:
-        # above the driver-fit guard (or degenerate): distributed
-        # Spark ML KMeans per subspace — the 100 TB path
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        slices = []
-        for s in range(PQ_SUBSPACES):
-            sl = emb.select(
-                F.slice(
-                    "embedding", s * PQ_SUBDIM + 1, PQ_SUBDIM
-                ).alias("v")
-            )
-            sl_vec = sl.withColumn(
-                "features", array_to_vector(to_double_array("v"))
-            )
-            model = KMeans(
-                k=k_codebook,
-                seed=seed + s,
-                maxIter=8,
-                featuresCol="features",
-            ).fit(sl_vec)
-            slices.append(
-                np.asarray([list(cc) for cc in model.clusterCenters()])
-            )
-    full = np.hstack(slices)
-    return spark.createDataFrame(
-        [
-            (i + 1, [float(x) for x in full[i]])
-            for i in range(k_codebook)
-        ],
-        "crank int, cemb array<float>",
-    )
+            for s in range(PQ_SUBSPACES)
+        ]
+    return _codebook_frame(spark, slices)
 
 
 def ann_pq_adc_kmeans_topk(
@@ -957,9 +929,9 @@ QUERIES["ann_pq_adc_kmeans_topk"] = (ann_pq_adc_kmeans_topk, None)
 # (cell, s, crank), which prunes to the probed inverted lists without
 # any shuffle of the vectors.
 #
-# Scale: fit is the guarded-collect + distributed-KMeans skeleton the
-# K=64 query uses; encode is O(N×K×M) broadcast work plus ONE hash
-# exchange; search shuffles only (qid, vec_id, partial sums). At
+# Scale: fit is the guarded-collect / ``seeded_kmeans_centers`` pair
+# the K=64 query uses; encode is ONE fused Arrow pass (no exchange) on
+# both sides of the guard; search shuffles only (qid, vec_id, partial sums). At
 # 100 TB the codes table (vec_id, cell, 8 bytes of codes) is the only
 # full-corpus relation — stored partitioned by cell, the probe prunes
 # partitions exactly like the plain-IVF path. Rows-only oracle
@@ -996,11 +968,9 @@ IVFPQ_CODEBOOK = 256
 IVFPQ_SEED = 67
 
 
-def _pq_codes_arrow(
-    emb: DataFrame, centers: DataFrame, extra_cols: tuple = ()
-) -> DataFrame:
+def _pq_codes_arrow(emb: DataFrame, centers: DataFrame) -> DataFrame:
     """Arrow-vectorized PQ code assignment, already STACKED to
-    (vec_id, *extra_cols, s, crank): per batch, each subspace's
+    (vec_id, s, crank): per batch, each subspace's
     squared-L2 table is ONE dense matmul (x² + c² − 2·X@Cᵀ, rounded to
     9dp, argmin with smallest-crank ties — np.argmin returns the first
     minimum, and the center matrix is crank-ordered).
@@ -1034,12 +1004,10 @@ def _pq_codes_arrow(
         for s in range(PQ_SUBSPACES)
     ]
     sub_sq = [(c * c).sum(axis=1) for c in subs]
-    carry = ["vec_id", *extra_cols]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in emb.schema
-        if f.name in carry
-    ) + ", s int, crank int"
+    schema = (
+        f"vec_id {emb.schema['vec_id'].dataType.simpleString()},"
+        " s int, crank int"
+    )
 
     def kernel(batches):
         import pandas as pd
@@ -1060,59 +1028,15 @@ def _pq_codes_arrow(
                     - 2.0 * (xs @ subs[s].T)
                 )
                 cranks[:, s] = np.round(d, 9).argmin(axis=1) + 1
-            out = {
-                c: np.repeat(pdf[c].to_numpy(), PQ_SUBSPACES)
-                for c in carry
-            }
-            out["s"] = np.tile(
-                np.arange(PQ_SUBSPACES, dtype=np.int32), n
+            yield pd.DataFrame(
+                {
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), PQ_SUBSPACES),
+                    "s": np.tile(np.arange(PQ_SUBSPACES, dtype=np.int32), n),
+                    "crank": cranks.reshape(-1),
+                }
             )
-            out["crank"] = cranks.reshape(-1)
-            yield pd.DataFrame(out)
 
-    return emb.select(*carry, "embedding").mapInPandas(kernel, schema)
-
-
-def _ivf_assign(
-    spark: SparkSession, emb: DataFrame, n_cells: int, seed: int
-) -> tuple:
-    """Coarse quantizer: (assigned, cent_df) where assigned is
-    (vec_id, ev double-array, cell) and cent_df is (cell, centroid).
-    Guarded driver fit / distributed Spark ML KMeans fallback — the
-    ivf_topk skeleton (operators/simsearch.py)."""
-    from ..functions.vectors import (
-        assign_cells,
-        seeded_kmeans_centers,
-        to_double_array,
-    )
-
-    centers = seeded_kmeans_centers(emb, "embedding", k=n_cells, seed=seed)
-    if centers is not None:
-        assigned = emb.select(
-            "vec_id", to_double_array("embedding").alias("ev")
-        ).withColumn("cell", assign_cells(centers)(F.col("ev")))
-        rows = [c.tolist() for c in centers]
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        vec = emb.withColumn(
-            "features", array_to_vector(to_double_array("embedding"))
-        )
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=8, featuresCol="features"
-        ).fit(vec)
-        assigned = model.transform(vec).select(
-            "vec_id",
-            to_double_array("embedding").alias("ev"),
-            F.col("prediction").alias("cell"),
-        )
-        rows = [list(c) for c in model.clusterCenters()]
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(rows)],
-        "cell int, centroid array<double>",
-    )
-    return assigned, cent_df
+    return emb.select("vec_id", "embedding").mapInPandas(kernel, schema)
 
 
 def _pq_codes_arrow_residual(
@@ -1129,13 +1053,10 @@ def _pq_codes_arrow_residual(
     become an expression, dropping the stack explosion and the
     (qid, vec_id) re-aggregation exchange from every search).
 
-    Replaces the round-11 three-stage pipeline (assign pass → residual
-    join + eager localCheckpoint → encode pass): the residual never
-    materializes as a relation, saving two full-table jobs and the
-    checkpoint write. Quantization is bit-identical — both codebook
-    frames round-trip through the same DataFrames the staged path read
-    (cemb is array<float>, so centers are float32-truncated exactly as
-    before)."""
+    The one encode on both sides of the driver-fit guard: the residual
+    never materializes as a relation, and it reads nothing but the two
+    center frames (cemb is array<float>, so the codebook is
+    float32-truncated exactly as stored)."""
     import numpy as np
 
     crows = centers.orderBy("crank").collect()
@@ -1281,108 +1202,66 @@ def _ivf_pq_fit_encode(
     k_codebook: int,
     seed: int,
 ) -> tuple:
-    """(codes, cent_df, centers) for the IVF-PQ index. Under the driver
-    guard (the ``seeded_kmeans_centers`` 256 MB precondition) the corpus
-    matrix is collected ONCE and every fit — coarse quantizer, cell
-    assignment, residuals, all 8 subspace codebooks — runs locally on
-    that matrix, followed by one fused distributed encode
-    (``_pq_codes_arrow_residual``). Round 11 paid the collect twice
-    (coarse fit, then residual fit) plus a residual-relation
-    materialization between them; at sf0.1 that was ~2s of pure job
-    scheduling. Above the guard: the distributed twin (Spark ML KMeans
-    coarse + residual join + per-subspace distributed fits), the 100 TB
-    path, where fit cost amortizes."""
+    """(codes, cent_df, centers, centers_local) for the IVF-PQ index:
+    a coarse fit, a residual codebook fit, and ONE fused distributed
+    encode (``_pq_codes_arrow_residual``), which needs only the two
+    center frames.
+
+    Under the driver-fit guard the corpus matrix is collected ONCE and
+    every fit — coarse quantizer, cell assignment, residuals, all 8
+    subspace codebooks — runs locally on that matrix (round 11 paid
+    the collect twice plus a residual-relation materialization between
+    them; at sf0.1 that was ~2s of pure job scheduling). Above it (the
+    100 TB path, where fit cost amortizes) the coarse centers come
+    from ``seeded_kmeans_centers`` and the codebook from
+    ``_pq_kmeans_centers`` over a lazy residual frame built with
+    ``assign_cells``; ``centers_local`` is then None and the lookup
+    kernel collects the codebook frame."""
     import numpy as np
 
     from ..functions.vectors import (
+        assign_cells,
+        centers_frame,
+        driver_matrix,
         kmeans_fit_local,
+        seeded_kmeans_centers,
         to_double_array,
-        vector_count_dim,
     )
 
-    n, dim = vector_count_dim(emb, "embedding")
-    coarse = None
-    if n >= n_cells and dim and n * (dim * 8 + 32) <= (256 << 20):
-        mat = np.asarray(
-            [
-                r[0]
-                for r in emb.select(to_double_array("embedding")).collect()
-            ],
-            dtype=np.float64,
-        )
+    mat = driver_matrix(emb, "embedding")
+    if mat is not None:
         coarse = kmeans_fit_local(mat, n_cells, seed)
-    if coarse is not None:
         # exact assign_cells math (||x||² constant per row drops out)
         coarse_sq = (coarse * coarse).sum(axis=1)
         cells = (coarse_sq[None, :] - 2.0 * (mat @ coarse.T)).argmin(1)
-        rmat = mat - coarse[cells]
-        kc = max(1, min(k_codebook, n))
-        slices = []
-        for s in range(PQ_SUBSPACES):
-            c = kmeans_fit_local(
-                np.ascontiguousarray(
-                    rmat[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
-                ),
-                kc,
-                seed=seed + 1 + s,
-            )
-            if c is None:
-                slices = None
-                break
-            slices.append(c)
-        if slices is not None:
-            cent_df = spark.createDataFrame(
-                [
-                    (int(i), [float(x) for x in coarse[i]])
-                    for i in range(n_cells)
-                ],
-                "cell int, centroid array<double>",
-            )
-            full = np.hstack(slices)
-            centers = spark.createDataFrame(
-                [
-                    (i + 1, [float(x) for x in full[i]])
-                    for i in range(kc)
-                ],
-                "crank int, cemb array<float>",
-            )
-            codes = _pq_codes_arrow_residual(emb, centers, cent_df)
-            # float32-truncate exactly as the cemb array<float> column
-            # stores the codebook, so the lookup kernel sees the same
-            # values the expression path would read back
-            centers_local = (
-                np.arange(1, kc + 1, dtype=np.int32),
-                full.astype(np.float32),
-            )
-            return codes, cent_df, centers, centers_local
-
-    # distributed twin — the 100 TB path
-    assigned, cent_df = _ivf_assign(spark, emb, n_cells, seed)
-    resid = assigned.join(F.broadcast(cent_df), "cell").select(
-        "vec_id",
-        "cell",
-        F.zip_with("ev", "centroid", lambda x, y: x - y).alias("embedding"),
-    )
-    # one eager materialization: the residual relation feeds the
-    # codebook fit AND the encode scan (same rationale as binning.py)
-    resid = resid.localCheckpoint(eager=True)
-    centers = _pq_kmeans_centers(
-        spark, resid, k_codebook=k_codebook, seed=seed + 1
-    )
-    # pack the stacked (vec_id, cell, s, crank) rows to the array form
-    # the guarded kernel emits directly — one build-time aggregate on
-    # the 100 TB path (searches then never re-explode the codes)
-    codes = (
-        _pq_codes_arrow(resid, centers, extra_cols=("cell",))
-        .groupBy("vec_id", "cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("s", "crank"))),
-                lambda st: st["crank"],
-            ).alias("cranks")
+        slices = _subspace_fits(mat - coarse[cells], k_codebook, seed + 1)
+        cent_df = centers_frame(spark, coarse)
+        centers = _codebook_frame(spark, slices)
+        # float32-truncate exactly as the cemb array<float> column
+        # stores the codebook, so the lookup kernel sees the same
+        # values the expression path would read back
+        full = np.hstack(slices)
+        centers_local = (
+            np.arange(1, len(full) + 1, dtype=np.int32),
+            full.astype(np.float32),
         )
-    )
-    return codes, cent_df, centers, None
+    else:
+        coarse = seeded_kmeans_centers(emb, "embedding", k=n_cells, seed=seed)
+        cent_df = centers_frame(spark, coarse)
+        resid = (
+            emb.select(to_double_array("embedding").alias("ev"))
+            .withColumn("cell", assign_cells(coarse)(F.col("ev")))
+            .join(F.broadcast(cent_df), "cell")
+            .select(
+                F.zip_with("ev", "centroid", lambda x, y: x - y).alias(
+                    "embedding"
+                )
+            )
+        )
+        centers = _pq_kmeans_centers(spark, resid, k_codebook, seed + 1)
+        centers_local = None
+    codes = _pq_codes_arrow_residual(emb, centers, cent_df)
+    return codes, cent_df, centers, centers_local
 
 
 def ivf_pq_adc_topk(
@@ -1419,18 +1298,13 @@ def ivf_pq_adc_topk(
     the vector table (the memory/bandwidth economics that make PQ
     worth running: the full scan touches codes only)."""
     spark = emb.sparkSession
-    # single guarded fit + fused Arrow encode (distributed twin above
-    # the guard); at K=256 the expression-tree encode costs ~4× the
-    # K=64 twin, so the vectorized kernel applies (rows-only path).
-    # ``index`` lets a caller reuse a prebuilt (codes, cent_df,
-    # centers) triple — index build-once, query-many semantics.
-    if index is not None:
-        codes, cent_df, centers, *rest = index
-    else:
-        codes, cent_df, centers, *rest = _ivf_pq_fit_encode(
-            spark, emb, n_cells, k_codebook, IVFPQ_SEED
-        )
-    centers_local = rest[0] if rest else None
+    # one fit + fused Arrow encode; at K=256 the expression-tree encode
+    # costs ~4× the K=64 twin, so the vectorized kernel applies
+    # (rows-only path). ``index`` lets a caller reuse a prebuilt
+    # ``_ivf_pq_fit_encode`` tuple — index build-once, query-many.
+    codes, cent_df, centers, centers_local = index or _ivf_pq_fit_encode(
+        spark, emb, n_cells, k_codebook, IVFPQ_SEED
+    )
     # nprobe nearest cells per query, with the query residual per cell
     from ..functions.vectors import to_double_array
 

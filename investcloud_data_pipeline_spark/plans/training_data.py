@@ -101,8 +101,7 @@ def jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in-memory object, so consumer results are unchanged by construction.
 @session_store
 def seeded_centers_cached(spark: SparkSession, sf_dir: str):
-    """k=8, seed=42 k-means centers of ``embeddings`` (None above the
-    driver-fit guard)."""
+    """k=8, seed=42 k-means centers of ``embeddings``."""
     from ..functions.vectors import seeded_kmeans_centers
 
     return seeded_kmeans_centers(
@@ -2265,25 +2264,18 @@ def corpus_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_vectors. The informative per-cluster top-terms report stays
     available as :func:`topic_cluster_terms` (library form, pinned by
     tests/test_training_data_ops.py)."""
-    import numpy as np
-
-    from ..functions.vectors import assign_cells, to_double_array
+    from ..functions.vectors import (
+        assign_cells,
+        centers_frame,
+        to_double_array,
+    )
 
     emb = _emb(spark, sf_dir)
-    # ONE seeded driver fit serves both the assignment and the
-    # re-verification (round-12: previously kmeans_assignments re-ran
-    # the identical collect+fit internally — two collects, two Lloyd
-    # runs per execution; assignment below is exactly the non-None
-    # branch of kmeans_assignments, so results are unchanged) — and the
-    # fit is session-memoized (pure function of (table, k, seed); warm
+    # ONE seeded fit serves both the assignment (exactly
+    # kmeans_assignments) and the re-verification — and the fit is
+    # session-memoized (pure function of (table, k, seed); warm
     # executions skip the collect + Lloyd jobs entirely)
     centers = seeded_centers_cached(spark, sf_dir)
-    if centers is None:
-        raise ValueError(
-            "corpus_topic_clusters: corpus exceeds the driver-fit "
-            "guard; the re-verification report needs the seeded "
-            "driver fit (use topic_cluster_terms for the report form)"
-        )
     assigned = emb.select(
         F.col("vec_id"),
         assign_cells(centers)(to_double_array("embedding")).alias(
@@ -2291,10 +2283,7 @@ def corpus_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     n_vectors = emb.count()
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster int, centroid array<double>",
-    )
+    cent_df = centers_frame(spark, centers, "cluster")
     # re-verify every member against ALL centroids: own distance must
     # be the minimum (ties resolved to the smallest cluster id, the
     # assignment kernel's contract)

@@ -354,8 +354,7 @@ def start_embedding_index_ingest(
     up to date per micro-batch instead of rebuilt.
 
     The coarse quantizer is fitted ONCE, from the first micro-batch
-    (guarded driver k-means / distributed Spark ML fallback — the
-    operators/simsearch.py skeleton), persisted to ``centroids_dir``,
+    (``seeded_kmeans_centers``, at most ``n_cells`` centers), persisted to ``centroids_dir``,
     and every later batch reuses it: cell ids are therefore stable for
     the life of the index, which is what makes per-batch appends valid.
     Each batch assigns its vectors (Arrow-batched argmin against the
@@ -373,6 +372,7 @@ def start_embedding_index_ingest(
 
     from ..functions.vectors import (
         assign_cells,
+        centers_frame,
         seeded_kmeans_centers,
         to_double_array,
     )
@@ -396,29 +396,10 @@ def start_embedding_index_ingest(
         centers = seeded_kmeans_centers(
             batch_df, "embedding", k=n_cells, seed=seed
         )
-        if centers is None:
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-
-            vec = batch_df.withColumn(
-                "features", array_to_vector(to_double_array("embedding"))
-            )
-            k_eff = min(n_cells, batch_df.count())
-            model = KMeans(
-                k=max(1, int(k_eff)), seed=seed, maxIter=8,
-                featuresCol="features",
-            ).fit(vec)
-            centers = np.asarray(
-                [list(c) for c in model.clusterCenters()]
-            )
         os.makedirs(centroids_dir, exist_ok=True)
-        sess.createDataFrame(
-            [
-                (int(i), [float(x) for x in c])
-                for i, c in enumerate(centers)
-            ],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(cfile)
+        centers_frame(sess, centers).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(cfile)
         return centers
 
     def process_batch(batch_df, epoch_id: int) -> None:

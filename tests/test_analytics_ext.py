@@ -199,6 +199,25 @@ def test_bounded_bfs_multi_source_min(spark):
     assert got == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
 
 
+def test_copurchase_bfs_hops_leaves_no_cached_relation(spark, sf_dir):
+    """The registry BFS reads the co-purchase pair store (already a
+    checkpoint) without persisting a second copy that lives for the
+    rest of the session."""
+    from investcloud_data_pipeline_spark.plans.analytics_ext import (
+        copurchase_bfs_hops,
+    )
+    from investcloud_data_pipeline_spark.plans.mining import (
+        pair_counts_cached,
+    )
+
+    sc = spark.sparkContext
+    pair_counts_cached(spark, sf_dir)
+    before = sc._jsc.getPersistentRDDs().size()
+    rows = copurchase_bfs_hops(spark, sf_dir).collect()
+    assert rows
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
 # ---------- RAKE ----------
 
 def test_rake_scores_hand_computed(spark):

@@ -304,24 +304,21 @@ def test_pq_adc_recall_sanity_and_kmeans_upgrade(spark, sf_dir):
     r_sampled = recall(AX5.ann_pq_adc_topk(spark, sf_dir))
     assert r_sampled > 0.0, r_sampled
 
-    slices = []
-    for s in range(AX5.PQ_SUBSPACES):
-        sl = emb.select(
-            F.slice(
-                "embedding", s * AX5.PQ_SUBDIM + 1, AX5.PQ_SUBDIM
-            ).alias("v")
+    slices = [
+        seeded_kmeans_centers(
+            emb.select(
+                F.slice(
+                    "embedding", s * AX5.PQ_SUBDIM + 1, AX5.PQ_SUBDIM
+                ).alias("v")
+            ),
+            "v",
+            AX5.PQ_CODEBOOK,
+            seed=42 + s,
         )
-        c = seeded_kmeans_centers(sl, "v", AX5.PQ_CODEBOOK, seed=42 + s)
-        assert c is not None
-        slices.append(c)
-    full = np.hstack(slices)
-    km_centers = spark.createDataFrame(
-        [
-            (i + 1, [float(x) for x in full[i]])
-            for i in range(AX5.PQ_CODEBOOK)
-        ],
-        "crank int, cemb array<float>",
-    )
+        for s in range(AX5.PQ_SUBSPACES)
+    ]
+    km_centers = AX5._codebook_frame(spark, slices)
+    assert km_centers.count() == AX5.PQ_CODEBOOK
     r_kmeans = recall(AX5.pq_adc_topk(emb, qs, k=5, centers=km_centers))
     assert r_kmeans >= r_sampled - 0.05, (r_kmeans, r_sampled)
 
@@ -515,22 +512,39 @@ def test_adc_lookup_kernel_bit_identical(spark, sf_dir):
     assert got_collected == want
 
 
-def test_ivf_pq_distributed_twin_runs(spark, sf_dir, monkeypatch):
-    """Round-12 verdict task #4: the 100 TB branch (Spark ML KMeans
-    coarse fit + residual join + per-subspace distributed fits +
-    staged encode) must run in CI on every suite pass, not only when
-    the corpus outgrows the driver guard. Forcing the local fit to
-    decline (kmeans_fit_local -> None trips BOTH the fused path's
-    coarse fit and seeded_kmeans_centers inside _ivf_assign, and
-    _pq_kmeans_centers' slice fits) routes the whole pipeline through
-    the distributed twin; assert the structural contract the guarded
-    path satisfies: full rank ladders per query, candidates only from
-    probed cells, self excluded."""
-    from investcloud_data_pipeline_spark.functions import vectors
+def test_ivf_pq_distributed_twin_runs(spark, sf_dir, distributed_fit):
+    """The 100 TB branch of the IVF-PQ fit (Spark ML coarse fit +
+    lazy residual frame + per-subspace ``seeded_kmeans_centers`` fits,
+    then the same fused encode as the driver path) must run in CI on
+    every suite pass, not only when the corpus outgrows the driver
+    guard. Every code's cell is the ``assign_cells`` argmin against the
+    fitted coarse centers; the search keeps the structural contract of
+    the guarded path: full rank ladders per query, self excluded."""
+    import numpy as np
 
-    monkeypatch.setattr(vectors, "kmeans_fit_local", lambda *a, **k: None)
+    from conftest import nearest_cells
 
     emb = AX5._t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    codes, cent_df, centers, centers_local = AX5._ivf_pq_fit_encode(
+        spark, emb, AX5.IVFPQ_NLIST, 32, AX5.IVFPQ_SEED
+    )
+    assert centers_local is None
+    coarse = np.asarray(
+        [r.centroid for r in cent_df.orderBy("cell").collect()]
+    )
+    assert coarse.shape == (AX5.IVFPQ_NLIST, 64)
+    assert centers.count() == 32
+    vecs = dict(emb.rdd.map(tuple).collect())
+    got = {r.vec_id: (r.cell, r.cranks) for r in codes.collect()}
+    assert set(got) == set(vecs)
+    ids = sorted(vecs)
+    want = nearest_cells(coarse, [vecs[i] for i in ids])
+    assert [got[i][0] for i in ids] == want.tolist()
+    assert all(
+        len(c) == AX5.PQ_SUBSPACES and 1 <= min(c) and max(c) <= 32
+        for _, c in got.values()
+    )
+
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
     )
@@ -546,40 +560,59 @@ def test_ivf_pq_distributed_twin_runs(spark, sf_dir, monkeypatch):
         assert all(r.vec_id != q for r in rows)
 
 
-def test_seeded_kmeans_distributed_twin_runs(spark, sf_dir):
-    """The other guarded driver fit (seeded_kmeans_centers): past
-    max_driver_bytes it must return None — and its callers' Spark ML
-    branch must produce a complete, partition-invariant assignment.
-    Drives kmeans_assignments through the distributed branch directly
-    (monkeypatch-free: the guard is a parameter here)."""
-    from investcloud_data_pipeline_spark.functions.vectors import (
-        seeded_kmeans_centers,
-    )
+def test_seeded_kmeans_distributed_twin_runs(spark, sf_dir, distributed_fit):
+    """Above the driver-fit guard ``seeded_kmeans_centers`` still
+    returns a (k, dim) centers matrix (Spark ML KMeans), and
+    ``kmeans_assignments`` assigns with the same ``assign_cells``
+    argmin as the driver path: complete, in range, each vector's cell
+    the nearest returned center. An input with no non-null vector
+    raises on both paths."""
+    import pytest
+
+    from conftest import nearest_cells
+    from investcloud_data_pipeline_spark.functions import vectors
     from investcloud_data_pipeline_spark.sources.batch import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assert (
-        seeded_kmeans_centers(
-            emb, "embedding", k=8, seed=42, max_driver_bytes=0
-        )
-        is None
+    centers = vectors.seeded_kmeans_centers(emb, "embedding", k=8, seed=42)
+    assert centers.shape == (8, 64)
+    got = vectors.kmeans_assignments(emb, "embedding", "vec_id", k=8).collect()
+    vecs = dict(emb.select("vec_id", "embedding").rdd.map(tuple).collect())
+    assert len(got) == len(vecs) == len({r.vec_id for r in got})
+    want = nearest_cells(centers, [vecs[r.vec_id] for r in got])
+    assert [r.cluster for r in got] == want.tolist()
+
+    nulls = emb.select("vec_id", F.lit(None).cast("array<float>").alias("e"))
+    with pytest.raises(ValueError):
+        vectors.seeded_kmeans_centers(nulls, "e", k=8, seed=42)
+
+
+def test_pq_kmeans_codebook_distributed(spark, sf_dir, distributed_fit):
+    """The K=64 codebook above the guard: one ``seeded_kmeans_centers``
+    fit per 8-dim slice frame, packed into 64 synthetic full-width
+    rows, and the registry query on it answers every query."""
+    import numpy as np
+
+    from investcloud_data_pipeline_spark.functions.vectors import (
+        seeded_kmeans_centers,
     )
 
-    # the Spark ML KMeans branch of kmeans_assignments, forced the
-    # same way the fleet-scale corpus would trip it
-    from investcloud_data_pipeline_spark.functions import vectors
-
-    n = emb.count()
-    real = vectors.seeded_kmeans_centers
-    try:
-        vectors.seeded_kmeans_centers = (
-            lambda df, vec_col, k, seed=42, **kw: None
-        )
-        got = vectors.kmeans_assignments(
-            emb, "embedding", "vec_id", k=8
-        ).collect()
-    finally:
-        vectors.seeded_kmeans_centers = real
-    assert len(got) == n
-    assert {r.cluster for r in got} <= set(range(8))
-    assert len({r.vec_id for r in got}) == n
+    emb = AX5._t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    rows = AX5._pq_kmeans_centers(spark, emb).orderBy("crank").collect()
+    assert [r.crank for r in rows] == list(range(1, AX5.PQ_KM_CODEBOOK + 1))
+    full = np.asarray([r.cemb for r in rows], dtype=np.float32)
+    s = 3
+    want = seeded_kmeans_centers(
+        emb.select(
+            F.slice("embedding", s * AX5.PQ_SUBDIM + 1, AX5.PQ_SUBDIM).alias("v")
+        ),
+        "v",
+        AX5.PQ_KM_CODEBOOK,
+        AX5.PQ_KM_SEED + s,
+    )
+    assert np.array_equal(
+        full[:, s * AX5.PQ_SUBDIM : (s + 1) * AX5.PQ_SUBDIM],
+        want.astype(np.float32),
+    )
+    out = AX5.ann_pq_adc_kmeans_topk(spark, sf_dir).collect()
+    assert {r.qid for r in out} == set(range(10))

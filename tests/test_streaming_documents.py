@@ -376,3 +376,11 @@ def test_embedding_index_ingest_partition_pruned_and_stable(spark, tmp_path):
         .count()
     )
     assert redo3 == 0
+
+
+def test_embedding_index_ingest_distributed_fit(
+    spark, tmp_path, distributed_fit
+):
+    """The same index contract when the first batch is fitted above the
+    driver-fit guard (Spark ML KMeans)."""
+    test_embedding_index_ingest_partition_pruned_and_stable(spark, tmp_path)

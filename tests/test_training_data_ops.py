@@ -326,6 +326,45 @@ def test_ann_recall_floors(spark, sf_dir):
     assert r_multi > r_single + 0.3, (r_multi, r_single)
 
 
+def test_ivf_topk_distributed_probes_nearest_cells(
+    spark, sf_dir, distributed_fit
+):
+    """IVF above the driver-fit guard: every returned neighbour lies in
+    one of its query's ``n_probe`` nearest cells, a cell being the
+    ``assign_cells`` argmin against the Spark ML centers, and recall
+    keeps the driver path's floor."""
+    import numpy as np
+
+    from conftest import nearest_cells
+    from investcloud_data_pipeline_spark.functions.vectors import (
+        seeded_kmeans_centers,
+    )
+    from investcloud_data_pipeline_spark.operators.simsearch import ivf_topk
+    from investcloud_data_pipeline_spark.sources.batch import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter("vec_id < 30")
+    centers = seeded_kmeans_centers(emb, "embedding", k=16, seed=42)
+    vecs = dict(emb.select("vec_id", "embedding").rdd.map(tuple).collect())
+    ids = sorted(vecs)
+    cell = dict(zip(ids, nearest_cells(centers, [vecs[i] for i in ids])))
+    got = {}
+    for r in ivf_topk(emb, q, k=10, n_probe=4).collect():
+        got.setdefault(r.query_id, set()).add(r.neighbor_id)
+    assert set(got) == set(range(30))
+    for qid, nbrs in got.items():
+        d = ((centers - np.asarray(vecs[qid], dtype=np.float64)) ** 2).sum(1)
+        probed = set(np.argsort(d, kind="stable")[:4].tolist())
+        assert {cell[n] for n in nbrs} <= probed
+    exact = {}
+    for r in brute_force_topk(emb, q, k=10).collect():
+        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
+    recall = sum(
+        len(got.get(qid, set()) & s) / 10 for qid, s in exact.items()
+    ) / len(exact)
+    assert recall >= 0.30, recall
+
+
 def test_vectorized_topk_matches_exact(spark, sf_dir):
     from investcloud_data_pipeline_spark.operators.simsearch import vectorized_topk
     from investcloud_data_pipeline_spark.sources.batch import load_table
@@ -543,7 +582,6 @@ def test_vector_guard_sees_past_a_leading_null(spark):
     assert vector_count_dim(emb, "embedding") == (40, 4)
 
     centers = seeded_kmeans_centers(emb, "embedding", k=3, seed=7)
-    assert centers is not None
     assert centers.shape == (3, 4)
     want = seeded_kmeans_centers(
         emb.where(F.col("embedding").isNotNull()), "embedding", k=3, seed=7
@@ -669,6 +707,55 @@ def test_semantic_dedup_subset_of_exact_on_testdata(spark, sf_dir):
     assert set(sem) <= set(exact)
     for p, c in sem.items():
         assert c == exact[p]
+
+
+def test_semantic_dedup_finds_all_within_cluster_pairs_distributed(
+    spark, distributed_fit
+):
+    test_semantic_dedup_finds_all_within_cluster_pairs(spark)
+
+
+def test_semantic_dedup_distributed_cells(spark, sf_dir, distributed_fit):
+    """Above the driver-fit guard SemDeDup still returns a subset of the
+    exact pairs, and every pair's cluster is the ``assign_cells``
+    argmin of both members against the Spark ML centers."""
+    from conftest import nearest_cells
+    from investcloud_data_pipeline_spark.functions.vectors import (
+        seeded_kmeans_centers,
+    )
+    from investcloud_data_pipeline_spark.operators.dedup_fuzzy import (
+        semantic_dedup_pairs,
+    )
+    from investcloud_data_pipeline_spark.sources.batch import load_table
+
+    test_semantic_dedup_subset_of_exact_on_testdata(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    centers = seeded_kmeans_centers(emb, "embedding", k=4, seed=42)
+    vecs = dict(emb.select("vec_id", "embedding").rdd.map(tuple).collect())
+    ids = sorted(vecs)
+    cell = dict(zip(ids, nearest_cells(centers, [vecs[i] for i in ids])))
+    pairs = semantic_dedup_pairs(emb, threshold=0.3, n_cells=4).collect()
+    assert pairs
+    for r in pairs:
+        assert cell[r.id1] == cell[r.id2] == r.cluster
+
+
+def test_semantic_dedup_leaves_no_cached_relation(spark, sf_dir):
+    """Building a SemDeDup plan runs no job and caches nothing: the
+    self-join reads the assignment plan twice instead of a persisted
+    copy that no one unpersists."""
+    from investcloud_data_pipeline_spark.operators.dedup_fuzzy import (
+        semantic_dedup_pairs,
+    )
+    from investcloud_data_pipeline_spark.sources.batch import load_table
+
+    sc = spark.sparkContext
+    emb = load_table(spark, sf_dir, "embeddings")
+    before = sc._jsc.getPersistentRDDs().size()
+    pairs = semantic_dedup_pairs(emb, threshold=0.3, n_cells=4)
+    assert sc._jsc.getPersistentRDDs().size() == before
+    pairs.collect()
+    assert sc._jsc.getPersistentRDDs().size() == before
 
 
 def test_bigram_lm_score_ranks_and_edge_cases(spark):
@@ -1080,6 +1167,21 @@ def test_strip_repeated_spans_removes_shared_passage_everywhere(spark):
     again = {r.doc_id: r.n_removed
              for r in strip_repeated_spans(stripped, k=8).collect()}
     assert all(v == 0 for v in again.values())
+
+
+def test_topic_clusters_gates_hold_distributed(spark, sf_dir, distributed_fit):
+    """The strict topic-cluster report on Spark ML centers: every
+    member is nearest its own centroid and the clusters partition the
+    corpus (fit contents differ from the driver fit; the laws hold)."""
+    from investcloud_data_pipeline_spark.plans.training_data import (
+        corpus_topic_clusters,
+    )
+
+    gated = corpus_topic_clusters(spark, sf_dir).collect()
+    assert gated
+    assert all(
+        r.assignment_nearest_ok and r.partition_complete_ok for r in gated
+    )
 
 
 def test_topic_clusters_deterministic_and_complete(spark, sf_dir):

@@ -122,11 +122,10 @@ def measure(sf_dir: str, k: int, n_queries: int) -> dict:
     }
 
     # The k-means upgrade path: independently fitted per-subspace
-    # codebooks (guarded driver fit, same as IVF/SemDeDup) packed into
-    # synthetic full-width center vectors — the quality/recall knob the
-    # registry query deliberately trades away for oracle-exactness.
-    import numpy as np
-
+    # codebooks (``seeded_kmeans_centers``, the fit IVF/SemDeDup use)
+    # packed into synthetic full-width center vectors — the
+    # quality/recall knob the registry query deliberately trades away
+    # for oracle-exactness.
     from investcloud_data_pipeline_spark.functions.vectors import (
         seeded_kmeans_centers,
     )
@@ -136,36 +135,32 @@ def measure(sf_dir: str, k: int, n_queries: int) -> dict:
         PQ_SUBSPACES,
     )
 
-    slices = []
-    for s in range(PQ_SUBSPACES):
-        sl = base.select(
-            F.slice("embedding", s * PQ_SUBDIM + 1, PQ_SUBDIM).alias("v")
+    slices = [
+        seeded_kmeans_centers(
+            base.select(
+                F.slice("embedding", s * PQ_SUBDIM + 1, PQ_SUBDIM).alias("v")
+            ),
+            "v",
+            PQ_CODEBOOK,
+            seed=42 + s,
         )
-        c = seeded_kmeans_centers(sl, "v", PQ_CODEBOOK, seed=42 + s)
-        if c is None:
-            slices = None
-            break
-        slices.append(c)
-    if slices is not None:
-        full = np.hstack(slices)
-        km_centers = adc_df.sparkSession.createDataFrame(
-            [(i + 1, [float(x) for x in full[i]]) for i in range(PQ_CODEBOOK)],
-            "crank int, cemb array<float>",
-        )
-        t0 = time.time()
-        km_df = AX5.pq_adc_topk(base, qs, k=k, centers=km_centers)
-        km: dict = {}
-        for r in km_df.collect():
-            km.setdefault(r.qid, set()).add(r.vec_id)
-        per_q = [
-            len(km.get(q, set()) & ex) / k for q, ex in exact_l2.items()
-        ]
-        results["pq_adc_kmeans_vs_exact_l2"] = {
-            "recall_at_k": round(sum(per_q) / len(per_q), 4),
-            "min_query_recall": round(min(per_q), 4),
-            "queries_answered": sum(1 for q in exact_l2 if km.get(q)),
-            "wall_s": round(time.time() - t0, 2),
-        }
+        for s in range(PQ_SUBSPACES)
+    ]
+    km_centers = AX5._codebook_frame(adc_df.sparkSession, slices)
+    t0 = time.time()
+    km_df = AX5.pq_adc_topk(base, qs, k=k, centers=km_centers)
+    km: dict = {}
+    for r in km_df.collect():
+        km.setdefault(r.qid, set()).add(r.vec_id)
+    per_q = [
+        len(km.get(q, set()) & ex) / k for q, ex in exact_l2.items()
+    ]
+    results["pq_adc_kmeans_vs_exact_l2"] = {
+        "recall_at_k": round(sum(per_q) / len(per_q), 4),
+        "min_query_recall": round(min(per_q), 4),
+        "queries_answered": sum(1 for q in exact_l2 if km.get(q)),
+        "wall_s": round(time.time() - t0, 2),
+    }
 
     # Codebook size is the real recall knob (production PQ uses K=256
     # per subspace); the K=64 k-means codebook is now the SHIPPED
