@@ -233,7 +233,8 @@ def assign_cells(centers):
     The cell column is declared non-null: a join on it otherwise makes
     the optimizer infer ``isnotnull(cell)`` and push that filter below
     the projection, evaluating the UDF a second time per row. The UDF
-    never returns null, so the coalesce never fires."""
+    never returns null: a null or empty vector gets cell -1, the same
+    value the coalesce supplies."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -246,12 +247,17 @@ def assign_cells(centers):
     # unannotated form is the plain scalar pandas UDF
     @pandas_udf("int")
     def assign(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        x = np.asarray([np.asarray(e, dtype=np.float64) for e in v])
-        # ||x||² is constant per row — argmin needs only c² - 2x·c
-        idx = (c_sq[None, :] - 2.0 * (x @ c.T)).argmin(1)
-        return pd.Series(idx.astype("int32"))
+        idx = np.full(len(v), -1, dtype="int32")
+        ok = np.fromiter(
+            (e is not None and len(e) > 0 for e in v), bool, len(v)
+        )
+        if ok.any():
+            x = np.asarray(
+                [np.asarray(e, dtype=np.float64) for e in v[ok]]
+            )
+            # ||x||² is constant per row — argmin needs only c² - 2x·c
+            idx[ok] = (c_sq[None, :] - 2.0 * (x @ c.T)).argmin(1)
+        return pd.Series(idx)
 
     return lambda vec: F.coalesce(assign(vec), F.lit(-1))
 

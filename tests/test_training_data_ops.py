@@ -589,6 +589,42 @@ def test_vector_guard_sees_past_a_leading_null(spark):
     assert np.array_equal(centers, want)
 
 
+def test_assign_cells_maps_null_vector_to_minus_one(spark):
+    """The fit skips null vectors and the assignment gives them cell -1:
+    a leading null embedding must not fail the Arrow batch it lands in,
+    and every other row gets the cell the null-free frame gives it."""
+    import numpy as np
+
+    from investcloud_data_pipeline_spark.functions.vectors import (
+        assign_cells,
+        kmeans_assignments,
+    )
+
+    rows = [(0, None)] + [
+        (i, [float(i % 3), float(i % 5), 1.0, float(i)]) for i in range(1, 10)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    got = {r.vec_id: r.cluster
+           for r in kmeans_assignments(emb, "embedding", "vec_id", k=3).collect()}
+    want = {r.vec_id: r.cluster
+            for r in kmeans_assignments(
+                emb.where(F.col("embedding").isNotNull()),
+                "embedding", "vec_id", k=3).collect()}
+    assert got.pop(0) == -1
+    assert got == want and set(want.values()) <= {0, 1, 2}
+
+    # an empty vector has no cell either; non-null neighbours are unaffected
+    cells = assign_cells(np.array([[0.0, 0.0], [10.0, 10.0]]))
+    df = spark.createDataFrame(
+        [(1, []), (2, [9.0, 9.5]), (3, None), (4, [0.5, 0.0])],
+        "id long, v array<double>",
+    ).coalesce(1)
+    assert [r.c for r in df.orderBy("id").select(
+        cells(F.col("v")).alias("c")).collect()] == [-1, 1, -1, 0]
+
+
 def test_pack_contiguous_respects_budget_and_order(spark):
     from investcloud_data_pipeline_spark.operators.packing import pack_contiguous
 
