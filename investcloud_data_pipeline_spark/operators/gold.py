@@ -14,10 +14,12 @@ Two deliberate fixes (SURVEY §4.3 / §7.4):
   - ``user_top_region``: the reference's plan shape with deterministic
     ties — top region + that region's watch time.
   - ``user_argmax_totals`` (flagship): top region + the user's TRUE total
-    across all regions, computed with a second window over the same
-    user-partitioning (Catalyst reuses one exchange + sort for both window
-    functions — one shuffle on (user, region) for A1, one on user for the
-    windows; no third shuffle).
+    across all regions. Its window step, ``top_region_with_total``, is
+    separate so streaming gold can run it over its state store's totals;
+    the total is a second window over the same user-partitioning
+    (Catalyst reuses one exchange + sort for both window functions — one
+    shuffle on (user, region) for A1, one on user for the windows; no
+    third shuffle).
 
 Shuffle profile at scale: exchange hash(user, region) → partial+final
 HashAggregate → exchange hash(user) → single sort serving both window
@@ -29,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 
 def region_totals(
@@ -43,6 +46,13 @@ def region_totals(
     )
 
 
+def _top_first(user_col: str, region_col: str) -> WindowSpec:
+    """W1's ordering: largest region total first, ties by region name."""
+    return Window.partitionBy(user_col).orderBy(
+        F.col("watch_time_by_region").desc(), F.col(region_col).asc()
+    )
+
+
 def user_top_region(
     df: DataFrame,
     user_col: str = "user_id",
@@ -51,15 +61,34 @@ def user_top_region(
 ) -> DataFrame:
     """Reference plan shape (A1→W1→F3→A2) with deterministic tie-break."""
     totals = region_totals(df, user_col, region_col, value_col)
-    w = Window.partitionBy(user_col).orderBy(
-        F.col("watch_time_by_region").desc(), F.col(region_col).asc()
-    )
     return (
-        totals.withColumn("rn", F.row_number().over(w))
+        totals.withColumn("rn", F.row_number().over(_top_first(user_col, region_col)))
         .filter(F.col("rn") == 1)
         .select(
             F.col(user_col),
             F.col("watch_time_by_region").alias("top_region_watch_time"),
+            F.col(region_col).alias("geo_region"),
+        )
+    )
+
+
+def top_region_with_total(
+    totals: DataFrame, user_col: str = "user_id", region_col: str = "geo_region"
+) -> DataFrame:
+    """W1+F3+A2 over ``region_totals`` output: one row per user — true
+    total across regions + argmax region. Both windows share one
+    partitioning/sort on ``user_col``. Streaming gold runs this over the
+    complete-mode totals of its state store."""
+    return (
+        totals.withColumn("rn", F.row_number().over(_top_first(user_col, region_col)))
+        .withColumn(
+            "total_watch_time",
+            F.sum("watch_time_by_region").over(Window.partitionBy(user_col)),
+        )
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col(user_col),
+            F.col("total_watch_time"),
             F.col(region_col).alias("geo_region"),
         )
     )
@@ -71,20 +100,7 @@ def user_argmax_totals(
     region_col: str = "geo_region",
     value_col: str = "watch_time",
 ) -> DataFrame:
-    """Flagship Gold: one row per user — true total across regions + argmax
-    region. Both windows share one partitioning/sort on ``user_col``."""
-    totals = region_totals(df, user_col, region_col, value_col)
-    w_rank = Window.partitionBy(user_col).orderBy(
-        F.col("watch_time_by_region").desc(), F.col(region_col).asc()
-    )
-    w_all = Window.partitionBy(user_col)
-    return (
-        totals.withColumn("rn", F.row_number().over(w_rank))
-        .withColumn("total_watch_time", F.sum("watch_time_by_region").over(w_all))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col(user_col),
-            F.col("total_watch_time"),
-            F.col(region_col).alias("geo_region"),
-        )
+    """Flagship Gold: ``top_region_with_total`` over ``region_totals``."""
+    return top_region_with_total(
+        region_totals(df, user_col, region_col, value_col), user_col, region_col
     )

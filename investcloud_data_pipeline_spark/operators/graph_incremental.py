@@ -54,10 +54,11 @@ from pyspark.sql import functions as F
 from ..streaming.atomic import (
     commit_version,
     drop_superseded,
+    mark_sink_epoch,
     read_committed,
+    sink_epoch_committed,
     version_path,
 )
-from ..streaming.bronze import mark_sink_epoch, sink_epoch_committed
 
 CC_SHARDS = 64
 _MEMBERS_SCHEMA = "node long, comp0 long"

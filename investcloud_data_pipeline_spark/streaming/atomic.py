@@ -1,19 +1,26 @@
-"""Atomic versioned-snapshot commit protocol for foreachBatch sinks.
+"""Exactly-once commit protocols for foreachBatch sinks.
 
-Plain parquet directories have no transaction log, so exactly-once
-foreachBatch sinks that REWRITE state (merge/upsert targets, snapshot
-tables) use a versioned layout:
+Plain parquet directories have no transaction log, and Spark replays a
+micro-batch whose commit log entry is missing, so a foreachBatch sink
+must make a replayed epoch harmless itself. Two protocols:
+
+* Appends: ``mark_sink_epoch`` writes ``<sink>/_epochs/<epoch>`` after
+  the append's job commit; a replay checks ``sink_epoch_committed`` and
+  skips sinks that already hold the epoch.
+* Rewrites (merge/upsert targets, snapshot tables) use a versioned
+  layout:
 
     <root>/v_<epoch>/...parquet      one immutable directory per epoch
     <root>/_COMMITTED                JSON {epoch_id, version_dir}
 
-The marker rename (``os.replace``) is the single commit point — readers
-resolve the marker first, so a crash mid-write leaves the previous
-version intact, and a replayed micro-batch (epoch_id ≤ committed) is
-detected and skipped. This is the minimal subset of what Delta's
-transaction log provided the reference (SURVEY §2.13); the real fix at
-fleet scale is a lakehouse table format, which sources/external.py
-gates on.
+  The marker rename (``os.replace``) is the single commit point —
+  readers resolve the marker first, so a crash mid-write leaves the
+  previous version intact, and a replayed micro-batch (epoch_id ≤
+  committed) is detected and skipped.
+
+This is the minimal subset of what Delta's transaction log provided the
+reference (SURVEY §2.13); the real fix at fleet scale is a lakehouse
+table format, which sources/external.py gates on.
 """
 
 from __future__ import annotations
@@ -22,6 +29,26 @@ import json
 import os
 import re
 import shutil
+
+
+def sink_epoch_committed(sink_dir: str, epoch_id: int) -> bool:
+    """True if this micro-batch epoch already appended to ``sink_dir``."""
+    return os.path.isfile(os.path.join(sink_dir, "_epochs", str(epoch_id)))
+
+
+def mark_sink_epoch(sink_dir: str, epoch_id: int) -> None:
+    """Record (after a successful append) that ``epoch_id`` is in the sink.
+
+    The parquet batch append itself is all-or-nothing at the job level
+    (Hadoop commit protocol), so marker-present == data-present; a
+    replayed epoch after a partial failure skips exactly the sinks that
+    committed, making the two-sink foreachBatch idempotent — the
+    reference got this from Delta's transaction log (01:68), plain
+    parquet sinks need the marker."""
+    d = os.path.join(sink_dir, "_epochs")
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, str(epoch_id)), "w"):
+        pass
 
 
 def read_committed(root: str) -> tuple[int, str | None]:

@@ -23,30 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import RAW_SCHEMA, PipelinePaths
 from ..operators.quality import parse_raw, split_quality
-
-
-def sink_epoch_committed(sink_dir: str, epoch_id: int) -> bool:
-    """True if this micro-batch epoch already appended to ``sink_dir``."""
-    import os
-
-    return os.path.isfile(os.path.join(sink_dir, "_epochs", str(epoch_id)))
-
-
-def mark_sink_epoch(sink_dir: str, epoch_id: int) -> None:
-    """Record (after a successful append) that ``epoch_id`` is in the sink.
-
-    The parquet batch append itself is all-or-nothing at the job level
-    (Hadoop commit protocol), so marker-present == data-present; a
-    replayed epoch after a partial failure skips exactly the sinks that
-    committed, making the two-sink foreachBatch idempotent — the
-    reference got this from Delta's transaction log (01:68), plain
-    parquet sinks need the marker."""
-    import os
-
-    d = os.path.join(sink_dir, "_epochs")
-    os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, str(epoch_id)), "w"):
-        pass
+from .atomic import mark_sink_epoch, sink_epoch_committed
 
 
 def read_raw_stream(

@@ -24,6 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup_fuzzy import content_digest
 from ..functions.text import tokens
+from .atomic import mark_sink_epoch, sink_epoch_committed
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -100,7 +101,6 @@ def start_neardup_ingest(
     import os
 
     from ..operators.dedup_fuzzy import minhash_band_relation
-    from .bronze import mark_sink_epoch, sink_epoch_committed
 
     bands_schema = "id long, band_idx int, band_key string"
 
@@ -222,7 +222,6 @@ def start_neardup_pair_ingest(
         _expand_member_pairs,
         minhash_band_relation,
     )
-    from .bronze import mark_sink_epoch, sink_epoch_committed
 
     index_marker = os.path.join(members_dir, "_index")
     members_schema = "__rep long, __member long"
@@ -376,7 +375,6 @@ def start_embedding_index_ingest(
         seeded_kmeans_centers,
         to_double_array,
     )
-    from .bronze import mark_sink_epoch, sink_epoch_committed
 
     def _load_or_fit_centers(batch_df):
         import numpy as np

@@ -29,8 +29,14 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.export import shard_key
-from .atomic import commit_version, drop_superseded, read_committed, version_path
-from .bronze import mark_sink_epoch, sink_epoch_committed
+from .atomic import (
+    commit_version,
+    drop_superseded,
+    mark_sink_epoch,
+    read_committed,
+    sink_epoch_committed,
+    version_path,
+)
 from .documents import DOCS_SCHEMA
 
 MANIFEST_SCHEMA = T.StructType(

@@ -1,19 +1,30 @@
 """Gold layer: per-user argmax aggregation as a streaming snapshot (K4').
 
 Reference: 03_gold_layer_aggregation.py — aggregate → window → aggregate
-in ``complete`` output mode. OSS Structured Streaming rejects both the
+in ``complete`` output mode. OSS Structured Streaming rejects the
 non-time window function and the chained aggregation on a stream
-(SURVEY §3.3), and file sinks don't support complete mode. The
-re-expression: the silver stream only *triggers* recomputation; each
-micro-batch runs the Gold plan as a BATCH over the full silver table and
-atomically overwrites the gold snapshot — byte-for-byte the complete-mode
-semantics of 03:38.
+(SURVEY §3.3), and file sinks don't support complete mode. Only the
+first aggregate has to be streaming, so the plan is split in two:
 
-Scale: the recompute is a full scan of silver per trigger, same as
-complete mode's state rewrite — but stateless, spill-free, and
-restart-safe. At 100 TB one would partition-prune silver to the affected
-event dates per batch (the trigger batch carries them) — hook left in
-``recompute_gold`` for that refinement.
+* A1 (``region_totals``: (user, region) → sum of watch time) is a
+  stateful streaming aggregation over the silver file stream in
+  ``complete`` output mode. Its totals live in Spark's state store, so a
+  trigger reads only the new silver files plus the state of
+  |user × region| rows, never the silver history.
+* ``foreachBatch`` receives the complete totals relation — a plain batch
+  DataFrame, on which the window and the second aggregate are legal —
+  runs ``top_region_with_total`` over it and overwrites the gold
+  snapshot: the complete-mode semantics of 03:38.
+
+Exactly-once: the checkpoint's offset and commit logs plus the state
+store's versions give it. A batch replayed after a crash re-reads the
+state version its first attempt read and rewrites the same snapshot.
+
+Checkpoint compatibility: a gold checkpoint written by the earlier
+stateless gold query (it had no state store) fails to restart with
+``CANNOT_LOAD_STATE_STORE`` rather than resuming from empty totals.
+Delete the gold checkpoint and ``paths.gold`` to rebuild gold from the
+silver table.
 """
 
 from __future__ import annotations
@@ -23,106 +34,11 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import SILVER_SCHEMA, PipelinePaths
-from ..operators.gold import user_argmax_totals
+from ..operators.gold import region_totals, top_region_with_total
 
 SILVER_SINK_SCHEMA = T.StructType(
     list(SILVER_SCHEMA.fields) + [T.StructField("event_date", T.DateType(), True)]
 )
-
-
-def recompute_gold(spark: SparkSession, paths: PipelinePaths) -> None:
-    """Batch Gold plan over the full silver table → overwrite snapshot."""
-    silver = spark.read.schema(SILVER_SINK_SCHEMA).parquet(paths.silver)
-    gold = user_argmax_totals(
-        silver, user_col="user_id", region_col="geo_region", value_col="watch_time"
-    )
-    gold.write.mode("overwrite").parquet(paths.gold)
-
-
-def _totals_path(paths: PipelinePaths) -> str:
-    import os
-
-    return os.path.join(paths.root, "gold_totals_state")
-
-
-def _read_totals_marker(totals_root: str) -> tuple[int, str | None]:
-    from .atomic import read_committed
-
-    return read_committed(totals_root)
-
-
-def _commit_totals_marker(totals_root: str, epoch_id: int, version_dir: str) -> None:
-    from .atomic import commit_version
-
-    commit_version(totals_root, epoch_id, version_dir)
-
-
-def merge_gold_incremental(
-    spark: SparkSession, paths: PipelinePaths, batch_df: DataFrame, epoch_id: int
-) -> None:
-    """Incremental Gold: aggregate ONLY the new silver appends, merge the
-    partials into a persistent (user, region) totals table, and derive
-    the argmax snapshot from the merged totals.
-
-    This is the 100 TB path: per trigger it reads |batch| + |user×region|
-    rows instead of the full silver history. Sum is decomposable, so
-    merged results are identical to the full recompute (asserted in
-    tests).
-
-    Idempotence under foreachBatch replay: the totals table is versioned
-    (one directory per applied epoch) with an atomically-renamed marker
-    file recording the last applied epoch_id. A retried micro-batch whose
-    epoch_id <= the committed epoch skips the merge (it would otherwise
-    double-count watch_time) and only re-derives the downstream snapshot,
-    which heals a crash between marker commit and snapshot write. The
-    marker rename is the commit point — no double-overwrite window."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    totals_root = _totals_path(paths)
-    os.makedirs(totals_root, exist_ok=True)
-    last_epoch, current_dir = _read_totals_marker(totals_root)
-
-    if epoch_id > last_epoch:
-        batch_totals = batch_df.groupBy("user_id", "geo_region").agg(
-            F.sum("watch_time").alias("watch_time_by_region")
-        )
-        if current_dir is not None:
-            prev = spark.read.parquet(current_dir)
-            merged = (
-                prev.unionByName(batch_totals)
-                .groupBy("user_id", "geo_region")
-                .agg(F.sum("watch_time_by_region").alias("watch_time_by_region"))
-            )
-        else:
-            merged = batch_totals
-        new_dir = os.path.join(totals_root, f"v_{epoch_id}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        _commit_totals_marker(totals_root, epoch_id, new_dir)
-        if current_dir is not None and os.path.isdir(current_dir):
-            shutil.rmtree(current_dir, ignore_errors=True)
-        current_dir = new_dir
-    # else: replayed epoch — totals already include this batch; fall
-    # through to re-derive the snapshot only.
-
-    from pyspark.sql import Window
-
-    w_rank = Window.partitionBy("user_id").orderBy(
-        F.col("watch_time_by_region").desc(), F.col("geo_region").asc()
-    )
-    w_all = Window.partitionBy("user_id")
-    gold = (
-        spark.read.parquet(current_dir)
-        .withColumn("rn", F.row_number().over(w_rank))
-        .withColumn(
-            "total_watch_time", F.sum("watch_time_by_region").over(w_all)
-        )
-        .filter(F.col("rn") == 1)
-        .select("user_id", "total_watch_time", "geo_region")
-    )
-    gold.write.mode("overwrite").parquet(paths.gold)
 
 
 def start_gold(
@@ -130,27 +46,22 @@ def start_gold(
     paths: PipelinePaths,
     available_now: bool = False,
     trigger_seconds: int = 60,
-    mode: str = "recompute",
 ) -> StreamingQuery:
-    """``mode``: 'recompute' — full-table batch recompute per trigger
-    (exact complete-mode semantics, simplest); 'incremental' — merge new
-    appends into a persistent totals table (bounded per-trigger work)."""
+    """Start gold: silver file stream → complete-mode (user, region)
+    totals → argmax snapshot overwritten at ``paths.gold`` per trigger."""
     silver_stream = (
         spark.readStream.format("parquet")
         .schema(SILVER_SINK_SCHEMA)
         .load(paths.silver)
     )
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if mode == "incremental":
-            merge_gold_incremental(spark, paths, batch_df, epoch_id)
-        else:
-            # batch_df is only the new appends; snapshot semantics need the
-            # full table, so recompute from storage (complete-mode equivalent).
-            recompute_gold(spark, paths)
+    def write_snapshot(totals: DataFrame, epoch_id: int) -> None:
+        top_region_with_total(totals).write.mode("overwrite").parquet(paths.gold)
 
     writer = (
-        silver_stream.writeStream.foreachBatch(process_batch)
+        region_totals(silver_stream)
+        .writeStream.outputMode("complete")
+        .foreachBatch(write_snapshot)
         .option("checkpointLocation", paths.checkpoint("gold"))
         .queryName("gold_snapshot")
     )

@@ -35,16 +35,17 @@ def run_once(
     ip_regions: DataFrame,
     fmt: str = "parquet",
     timeout_s: int = 300,
-    gold_mode: str = "recompute",
-) -> None:
-    """Drain raw → bronze → silver → gold synchronously (availableNow)."""
+) -> list[StreamingQuery]:
+    """Drain raw → bronze → silver → gold synchronously (availableNow);
+    returns the three terminated queries for their progress."""
     _ensure_dirs(paths)
     q1 = start_bronze(spark, paths, fmt=fmt, available_now=True)
     q1.awaitTermination(timeout_s)
     q2 = start_silver(spark, paths, ip_regions, available_now=True)
     q2.awaitTermination(timeout_s)
-    q3 = start_gold(spark, paths, available_now=True, mode=gold_mode)
+    q3 = start_gold(spark, paths, available_now=True)
     q3.awaitTermination(timeout_s)
+    return [q1, q2, q3]
 
 
 def start_continuous(

@@ -35,3 +35,25 @@ def nearest_cells(centers, vectors):
     c = np.asarray(centers, dtype=np.float64)
     x = np.asarray(vectors, dtype=np.float64)
     return ((c * c).sum(1)[None, :] - 2.0 * (x @ c.T)).argmin(1)
+
+
+def gold_rows(df):
+    """A gold snapshot (or ``user_argmax_totals`` frame) as sorted rows."""
+    return sorted(
+        (r.user_id, round(r.total_watch_time, 6), r.geo_region) for r in df.collect()
+    )
+
+
+def in_horizon_wave(raw_dir: str, name: str, rows: int, seed: int) -> set[str]:
+    """Write one raw activity file of new log_ids whose event times follow
+    every generated wave's (datagen's ``ANCHOR`` onwards), so silver's
+    watermark admits them; returns the file's log_ids."""
+    import os
+    from datetime import timedelta
+
+    from investcloud_data_pipeline_spark.datagen import ANCHOR, make_activity_frame
+
+    df = make_activity_frame(rows, seed=seed)
+    df["timestamp"] = [(ANCHOR + timedelta(minutes=i)).isoformat() for i in range(rows)]
+    df.to_parquet(os.path.join(raw_dir, name), index=False)
+    return set(df["log_id"])

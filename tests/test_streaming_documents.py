@@ -122,7 +122,7 @@ def test_neardup_ingest_partial_failure_between_sinks(spark, tmp_path):
     """Crash window between the two sinks: docs committed, bands not.
     The replayed epoch must skip the docs append (marker present) and
     complete only the bands append — no duplicate survivor rows."""
-    from investcloud_data_pipeline_spark.streaming.bronze import (
+    from investcloud_data_pipeline_spark.streaming.atomic import (
         mark_sink_epoch,
         sink_epoch_committed,
     )

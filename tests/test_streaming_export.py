@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from investcloud_data_pipeline_spark.streaming.bronze import (
+from investcloud_data_pipeline_spark.streaming.atomic import (
     mark_sink_epoch,
 )
 from investcloud_data_pipeline_spark.streaming.export import (

@@ -25,6 +25,8 @@ from investcloud_data_pipeline_spark.operators.quality import (
 )
 from investcloud_data_pipeline_spark.streaming.pipeline import run_once
 
+from conftest import gold_rows, in_horizon_wave
+
 
 @pytest.fixture()
 def ip_regions(spark):
@@ -143,38 +145,30 @@ def _row(log_id, ts, user="user_1", ip="10.0.0.1", wt=30):
 
 
 @pytest.mark.slow
-def test_incremental_gold_equals_recompute(spark, tmp_path, ip_regions):
-    """The merge-based incremental Gold must produce exactly the same
-    snapshot as the full recompute, across multiple micro-batches."""
-    inc = PipelinePaths(str(tmp_path / "inc"))
-    full = PipelinePaths(str(tmp_path / "full"))
-    for paths in (inc, full):
-        os.makedirs(paths.raw, exist_ok=True)
-        write_activity_files(paths.raw, num_files=2, rows_per_file=300)
-    run_once(spark, inc, ip_regions, gold_mode="incremental")
-    run_once(spark, full, ip_regions, gold_mode="recompute")
+def test_gold_two_waves_equal_batch_argmax(spark, tmp_path, ip_regions):
+    """After two waves gold equals the batch argmax over the silver
+    table, and gold's second trigger reads only wave two's new silver
+    rows (its totals come from the state store, not a silver rescan)."""
+    paths = PipelinePaths(str(tmp_path))
+    os.makedirs(paths.raw, exist_ok=True)
+    write_activity_files(paths.raw, num_files=2, rows_per_file=300)
+    run_once(spark, paths, ip_regions)
+    n_wave_one = spark.read.parquet(paths.silver).count()
 
-    # second wave of files (disjoint names!) → second merge on the
-    # incremental side; overwriting wave-one names would be silently
-    # ignored by the file-stream source's processed-file log.
-    for paths in (inc, full):
-        write_activity_files(
-            paths.raw, num_files=1, rows_per_file=150, seed=99, start_index=10
-        )
-    run_once(spark, inc, ip_regions, gold_mode="incremental")
-    run_once(spark, full, ip_regions, gold_mode="recompute")
+    # disjoint file name: an overwritten wave-one name would be silently
+    # ignored by the file-stream source's processed-file log
+    in_horizon_wave(paths.raw, "activity_0010.parquet", rows=150, seed=99)
+    *_, gold_q = run_once(spark, paths, ip_regions)
 
-    # the second wave must actually have landed
-    assert spark.read.parquet(inc.bronze).count() > 2 * 300 * 0.9
-
-    def snap(paths):
-        return sorted(
-            (r.user_id, round(r.total_watch_time, 6), r.geo_region)
-            for r in spark.read.parquet(paths.gold).collect()
-        )
-
-    assert snap(inc) == snap(full)
-    assert len(snap(inc)) > 0
+    silver = spark.read.parquet(paths.silver)
+    n_wave_two = silver.count() - n_wave_one
+    assert n_wave_two > 0, "wave two never reached silver"
+    assert sum(p["numInputRows"] for p in gold_q.recentProgress) == n_wave_two
+    pairs = silver.select("user_id", "geo_region").distinct().count()
+    assert gold_q.lastProgress["stateOperators"][0]["numRowsTotal"] == pairs
+    got = gold_rows(spark.read.parquet(paths.gold))
+    assert got == gold_rows(user_argmax_totals(silver))
+    assert len(got) > 0
 
 
 def test_watermark_dedup_semantics(spark, tmp_path, ip_regions):
@@ -259,46 +253,63 @@ def test_bronze_replay_epoch_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(paths.bronze).count() == 3
 
 
-def test_gold_incremental_replay_epoch_no_double_count(spark, tmp_path, ip_regions):
-    """merge_gold_incremental consults epoch_id: re-merging a replayed
-    micro-batch must not double-count watch_time in the totals."""
-    from investcloud_data_pipeline_spark.streaming.gold import (
-        merge_gold_incremental,
-    )
+def _append_silver(spark, paths, rows) -> None:
+    """Append (user_id, geo_region, watch_time) rows to the silver table
+    as one silver-schema parquet file."""
+    from datetime import date, datetime
+
+    from investcloud_data_pipeline_spark.streaming.gold import SILVER_SINK_SCHEMA
+
+    full = [
+        (f"log_{user}_{region}_{wt}", user, datetime(2024, 1, 1), "10.0.0.1", wt,
+         region, date(2024, 1, 1))
+        for user, region, wt in rows
+    ]
+    spark.createDataFrame(full, SILVER_SINK_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(paths.silver)
+
+
+def test_gold_replay_through_commit_log_no_double_count(spark, tmp_path):
+    """A gold batch whose commit-log entry is lost is replayed by Spark
+    from the state version its first attempt read: the snapshot is
+    rewritten unchanged, not double-counted, and later files still land
+    exactly once."""
+    from investcloud_data_pipeline_spark.streaming.gold import start_gold
 
     paths = PipelinePaths(str(tmp_path))
-    os.makedirs(paths.root, exist_ok=True)
-    batch = spark.createDataFrame(
-        [
-            ("u1", "NA", 10.0),
-            ("u1", "EU", 5.0),
-            ("u2", "NA", 7.0),
-        ],
-        "user_id string, geo_region string, watch_time double",
-    )
-    merge_gold_incremental(spark, paths, batch, epoch_id=0)
-    snap1 = sorted(
-        (r.user_id, r.total_watch_time, r.geo_region)
-        for r in spark.read.parquet(paths.gold).collect()
-    )
-    assert snap1 == [("u1", 15.0, "NA"), ("u2", 7.0, "NA")]
 
-    merge_gold_incremental(spark, paths, batch, epoch_id=0)  # replay
-    snap2 = sorted(
-        (r.user_id, r.total_watch_time, r.geo_region)
-        for r in spark.read.parquet(paths.gold).collect()
-    )
-    assert snap2 == snap1  # no double-count
+    def drain():
+        q = start_gold(spark, paths, available_now=True)
+        q.awaitTermination(180)
+        return q
 
-    batch2 = spark.createDataFrame(
-        [("u1", "EU", 20.0)], "user_id string, geo_region string, watch_time double"
-    )
-    merge_gold_incremental(spark, paths, batch2, epoch_id=1)
-    snap3 = sorted(
-        (r.user_id, r.total_watch_time, r.geo_region)
-        for r in spark.read.parquet(paths.gold).collect()
-    )
-    assert snap3 == [("u1", 35.0, "EU"), ("u2", 7.0, "NA")]
+    def gold():
+        return gold_rows(spark.read.parquet(paths.gold))
+
+    _append_silver(spark, paths, [("u1", "NA", 10.0), ("u1", "EU", 5.0), ("u2", "NA", 7.0)])
+    drain()
+    _append_silver(spark, paths, [("u1", "EU", 4.0), ("u3", "APAC", 2.0)])
+    drain()
+    # a double-counted ("u1", "EU", 4.0) would make EU u1's top region
+    want = [("u1", 19.0, "NA"), ("u2", 7.0, "NA"), ("u3", 2.0, "APAC")]
+    assert gold() == want
+    assert gold_rows(user_argmax_totals(spark.read.parquet(paths.silver))) == want
+
+    commits = os.path.join(paths.checkpoint("gold"), "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    replay = drain()
+    ran = [(p["batchId"], p["numInputRows"]) for p in replay.recentProgress]
+    assert ran == [(last, 2)], "the uncommitted batch was not replayed"
+    assert gold() == want
+
+    _append_silver(spark, paths, [("u2", "EU", 30.0)])
+    drain()
+    want = [("u1", 19.0, "NA"), ("u2", 37.0, "EU"), ("u3", 2.0, "APAC")]
+    assert gold() == want
+    assert gold_rows(user_argmax_totals(spark.read.parquet(paths.silver))) == want
 
 
 def test_connected_components_raises_on_non_convergence(spark, monkeypatch):

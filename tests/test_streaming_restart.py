@@ -15,7 +15,10 @@ from investcloud_data_pipeline_spark.datagen import (
     make_ip_region_frame,
     write_activity_files,
 )
+from investcloud_data_pipeline_spark.operators.gold import user_argmax_totals
 from investcloud_data_pipeline_spark.streaming.pipeline import start_continuous
+
+from conftest import gold_rows, in_horizon_wave
 
 
 def _wait_for(fn, timeout_s=180):
@@ -40,23 +43,37 @@ def test_continuous_restart_no_loss_no_dup(spark, tmp_path):
     ip_regions = spark.createDataFrame(make_ip_region_frame())
     write_activity_files(paths.raw, num_files=2, rows_per_file=200)
 
+    def gold_matches_silver(must_hold=frozenset()):
+        silver = spark.read.parquet(paths.silver)
+        held = {r.log_id for r in silver.select("log_id").collect()}
+        return must_hold <= held and gold_rows(
+            spark.read.parquet(paths.gold)
+        ) == gold_rows(user_argmax_totals(silver))
+
     queries = start_continuous(spark, paths, ip_regions, trigger_seconds=2)
     assert _wait_for(
         lambda: spark.read.parquet(paths.bronze).count() == 400
+        and gold_matches_silver()
     ), "wave 1 never fully ingested"
     for q in queries:
         q.stop()
     for q in queries:
         q.awaitTermination(30)
 
-    # second wave lands while the pipeline is DOWN
+    # second wave lands while the pipeline is DOWN; its in-horizon file
+    # reaches silver, so gold must add it to the totals it restores from
+    # its checkpoint
     write_activity_files(paths.raw, num_files=1, rows_per_file=100, start_index=5)
+    new_ids = in_horizon_wave(paths.raw, "activity_0006.parquet", rows=100, seed=77)
 
     queries = start_continuous(spark, paths, ip_regions, trigger_seconds=2)
     try:
         assert _wait_for(
-            lambda: spark.read.parquet(paths.bronze).count() == 500
+            lambda: spark.read.parquet(paths.bronze).count() == 600
         ), "wave 2 not picked up after restart"
+        assert _wait_for(
+            lambda: gold_matches_silver(new_ids)
+        ), "gold does not equal the batch argmax over silver after restart"
         bronze = spark.read.parquet(paths.bronze)
         # no double-processing: every log_id appears exactly as often as
         # in the raw input (bronze does no dedup, so multiset must match)

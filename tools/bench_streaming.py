@@ -25,7 +25,7 @@ Usage:
 
 ``SPARK_GRAFT_STREAM_SKEW`` (round-7 verdict task #4) drives the SAME
 pipeline with a hot user owning that fraction of the stream — the
-adversarial shape for the gold per-user merge (the silver dedup keys
+adversarial shape for the gold per-user aggregation (the silver dedup keys
 on log_id, which stays uniform by construction). The artifact records
 the skew so uniform/skewed runs are comparable side by side.
 
@@ -129,7 +129,7 @@ def main() -> int:
         }
 
         t0 = time.time()
-        q = start_gold(spark, paths, available_now=True, mode="incremental")
+        q = start_gold(spark, paths, available_now=True)
         q.awaitTermination(1800)
         layers["gold"] = {
             "wall_s": round(time.time() - t0, 3),
