@@ -2,8 +2,15 @@
 
 Reference: 01_bronze_layer_ingestion.py. Auto Loader's cloudFiles options
 map to the OSS file source: explicit schema (required by OSS file
-streams), ``maxFilesPerTrigger`` admission control (01:17), checkpointed
-exactly-once sinks (01:70).
+streams), checkpointed exactly-once sinks (01:70), and admission control
+(T5, 01:17-18) through the file source's own ``maxFilesPerTrigger`` /
+``maxBytesPerTrigger``. The reference sets both caps ("≤10 files and
+≤10 GB"); the OSS file source accepts only one of them per query, so a
+byte cap replaces the file cap rather than composing with it. Either
+way at least one file is admitted per trigger, so a file larger than
+the byte cap still makes progress, and the processed-file log under the
+checkpoint's ``sources/0`` reads each landed file exactly once, whatever
+its name.
 
 The fix over the reference (SURVEY §4.3): 01:66-84 runs TWO streaming
 queries over the same source — every file is read, parsed, and validated
@@ -31,40 +38,20 @@ def read_raw_stream(
     raw_dir: str,
     fmt: str = "parquet",
     max_files_per_trigger: int = 10,
-    max_bytes_per_trigger: str | None = None,
-    admission_state_location: str | None = None,
+    max_bytes_per_trigger: int | None = None,
 ) -> DataFrame:
     """S1': incremental directory scan with enforced schema (the OSS
     equivalent of cloudFiles, reference 01:13-29).
 
-    ``max_bytes_per_trigger`` switches to the ``budget_files`` source
-    (sources/file_admission.py), which enforces the reference's BOTH
-    caps — ≤N files AND ≤B bytes per trigger (01:17-18) — where the OSS
-    file source can only cap file count. Parquet landing files only."""
-    if max_bytes_per_trigger is not None:
-        if fmt != "parquet":
-            raise ValueError(
-                "byte-budget admission reads parquet landing files; "
-                "got fmt=" + fmt
-            )
-        from ..sources.file_admission import register
-
-        register(spark)
-        reader = (
-            spark.readStream.format("budget_files")
-            .schema(RAW_SCHEMA)
-            .option("path", raw_dir)
-            .option("maxBytesPerTrigger", max_bytes_per_trigger)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        )
-        if admission_state_location is not None:
-            reader = reader.option("stateLocation", admission_state_location)
-        return reader.load()
-    reader = (
-        spark.readStream.format(fmt)
-        .schema(RAW_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-    )
+    Each trigger admits at most ``max_files_per_trigger`` files, or, when
+    ``max_bytes_per_trigger`` (an integer byte count) is set, files up to
+    that many bytes instead: Spark rejects a query that sets both caps.
+    Every trigger with pending input reads at least one file."""
+    reader = spark.readStream.format(fmt).schema(RAW_SCHEMA)
+    if max_bytes_per_trigger is None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    else:
+        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
     if fmt == "csv":
         reader = reader.option("header", "true")
     return reader.load(raw_dir)
@@ -99,29 +86,21 @@ def start_bronze(
     fmt: str = "parquet",
     available_now: bool = False,
     trigger_seconds: int = 60,
-    max_bytes_per_trigger: str | None = None,
+    max_bytes_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """One streaming query; each micro-batch is parsed once, split, and
     appended to the valid and quarantine sinks (K1+K2 fused).
 
-    With ``max_bytes_per_trigger``, admission uses the byte-budgeted
-    source (its boundary sidecar is kept next to the bronze checkpoint,
-    not in the landing dir); note the Python-source single-batch
-    fallback under availableNow — drain backlogs by looping
-    availableNow starts on the same checkpoint (each run is one
-    budgeted, idempotent batch)."""
-    import os
-
+    ``max_bytes_per_trigger`` caps each micro-batch at that many input
+    bytes in place of the 10-file cap (the two are exclusive); an
+    ``availableNow`` start drains the whole backlog in budgeted batches.
+    A bronze checkpoint written by the earlier Python byte-budget stream
+    source fails closed on restart (``No usable value for logOffset``)
+    rather than re-reading input; to rebuild, delete
+    ``paths.checkpoint("bronze")`` (``_checkpoints/bronze``),
+    ``paths.bronze`` and ``paths.quarantine``."""
     raw = read_raw_stream(
-        spark,
-        paths.raw,
-        fmt=fmt,
-        max_bytes_per_trigger=max_bytes_per_trigger,
-        admission_state_location=os.path.join(
-            paths.checkpoint("bronze"), "_admission_state"
-        )
-        if max_bytes_per_trigger is not None
-        else None,
+        spark, paths.raw, fmt=fmt, max_bytes_per_trigger=max_bytes_per_trigger
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:

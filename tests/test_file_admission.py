@@ -1,268 +1,115 @@
-"""Byte-budgeted file admission (`budget_files` source): per-trigger
-byte/file caps, exactly-once delivery, restart resume, oversized-file
-progress. Closes the reference's maxBytesPerTrigger gap (SURVEY T5)."""
+"""Byte-capped file admission (SURVEY T5): bronze's file source with
+``maxBytesPerTrigger`` drains a backlog in budgeted batches within one
+``availableNow`` run, still reads a file larger than the cap, and reads
+every landed file exactly once across a restart, whatever its name."""
 
 from __future__ import annotations
 
+import glob
 import os
 
-import pandas as pd
-import pytest
-
-from investcloud_data_pipeline_spark.sources.file_admission import (
-    _BudgetFileStreamReader,
-    _parse_bytes,
-    register,
+from investcloud_data_pipeline_spark.datagen import (
+    make_activity_frame,
+    write_activity_files,
 )
+from investcloud_data_pipeline_spark.streaming.bronze import read_raw_stream
 
 
-def _write_wave(dirpath: str, name: str, n_rows: int, start: int = 0) -> int:
-    os.makedirs(dirpath, exist_ok=True)
-    p = os.path.join(dirpath, name)
-    pd.DataFrame(
-        {"k": range(start, start + n_rows), "v": [float(i) for i in range(n_rows)]}
-    ).to_parquet(p, index=False)
-    return os.path.getsize(p)
+def _land(raw_dir: str, name: str, rows: int = 40) -> int:
+    """Land one activity file whose log_ids are unique to ``name``;
+    returns its size in bytes."""
+    os.makedirs(raw_dir, exist_ok=True)
+    df = make_activity_frame(rows)
+    df["log_id"] = [f"{name}-{i}" for i in range(rows)]
+    path = os.path.join(raw_dir, name)
+    df.to_parquet(path, index=False)
+    return os.path.getsize(path)
 
 
-def test_parse_bytes_units():
-    assert _parse_bytes("10gb") == 10 << 30
-    assert _parse_bytes("64MB") == 64 << 20
-    assert _parse_bytes("3KB") == 3 << 10
-    assert _parse_bytes("123") == 123
+def _drain(spark, raw_dir: str, out: str, ck: str, max_bytes: int) -> list[int]:
+    """One ``availableNow`` run of the byte-capped raw stream into a
+    log_id parquet sink; returns the input rows of each non-empty batch."""
+    q = (
+        read_raw_stream(spark, raw_dir, max_bytes_per_trigger=max_bytes)
+        .select("log_id")
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+
+
+def _landed(spark, out: str) -> tuple[int, int]:
+    """(rows, distinct log_ids) in the sink."""
+    df = spark.read.parquet(out)
+    return df.count(), df.select("log_id").distinct().count()
 
 
 class TestAdmissionPlanning:
-    """Driver-side planning logic, no Spark needed: the offset walk is
-    pure listing + budget arithmetic."""
+    def test_byte_budget_batches(self, spark, tmp_path):
+        """6 files under a cap of 2.5 files' bytes: one availableNow run
+        drains them as exactly 3 batches of 2 files."""
+        raw = str(tmp_path / "raw")
+        write_activity_files(raw, num_files=6, rows_per_file=40)
+        one = os.path.getsize(sorted(glob.glob(f"{raw}/*.parquet"))[0])
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        assert _drain(spark, raw, out, ck, int(one * 2.5)) == [80, 80, 80]
+        assert spark.read.parquet(out).count() == 6 * 40
 
-    def _reader(self, path, max_bytes, max_files=0):
-        return _BudgetFileStreamReader(
-            {
-                "path": path,
-                "maxbytespertrigger": str(max_bytes),
-                "maxfilespertrigger": str(max_files),
-            }
-        )
+    def test_oversized_file_still_progresses(self, spark, tmp_path):
+        """A cap smaller than any file admits one file per batch."""
+        raw = str(tmp_path / "raw")
+        for name in ("a.parquet", "b.parquet", "c.parquet"):
+            _land(raw, name)
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        assert _drain(spark, raw, out, ck, 1) == [40, 40, 40]
+        assert _landed(spark, out) == (120, 120)
 
-    def test_byte_budget_batches(self, tmp_path):
-        d = str(tmp_path / "landing")
-        sizes = [_write_wave(d, f"f{i}.parquet", 500) for i in range(5)]
-        one = sizes[0]
-        # budget of ~2 files per trigger
-        r = self._reader(d, max_bytes=int(one * 2.5))
-        offs = [r.initialOffset()]
-        while True:
-            nxt = r.latestOffset()
-            if nxt == offs[-1]:
-                break
-            offs.append(nxt)
-        batches = [
-            [p.path for p in r.partitions(a, b)] for a, b in zip(offs, offs[1:])
-        ]
-        assert [len(b) for b in batches] == [2, 2, 1]
-        # every file exactly once, in name order
-        flat = [os.path.basename(p) for b in batches for p in b]
-        assert flat == sorted(f"f{i}.parquet" for i in range(5))
+    def test_state_location_outside_landing_dir(self, spark, tmp_path):
+        """The source's seen-files log lives in the checkpoint under
+        ``sources/0``; the landing dir keeps only the landed files."""
+        raw = str(tmp_path / "raw")
+        names = ["a.parquet", "b.parquet"]
+        for name in names:
+            _land(raw, name)
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        assert _drain(spark, raw, out, ck, 1) == [40, 40]
+        assert sorted(os.listdir(raw)) == names
+        log = "".join(open(p).read() for p in glob.glob(f"{ck}/sources/0/*"))
+        assert all(f"/{name}" in log for name in names)
 
-    def test_oversized_file_still_progresses(self, tmp_path):
-        d = str(tmp_path / "landing")
-        _write_wave(d, "big.parquet", 5000)
-        r = self._reader(d, max_bytes=10)  # budget smaller than any file
-        end = r.latestOffset()
-        assert end["pos"] == "big.parquet"
-        assert len(r.partitions({"pos": ""}, end)) == 1
-
-    def test_max_files_cap_composes(self, tmp_path):
-        d = str(tmp_path / "landing")
-        for i in range(6):
-            _write_wave(d, f"f{i}.parquet", 50)
-        r = self._reader(d, max_bytes=1 << 30, max_files=4)
-        end = r.latestOffset()
-        assert end["pos"] == "f3.parquet"
-
-    def test_commit_sidecar_resumes_fresh_instance(self, tmp_path):
-        d = str(tmp_path / "landing")
-        for i in range(4):
-            _write_wave(d, f"f{i}.parquet", 50)
-        r1 = self._reader(d, max_bytes=1 << 30, max_files=2)
-        end1 = r1.latestOffset()
-        r1.commit(end1)
-        # fresh instance (≈ restart): resumes from committed boundary
-        r2 = self._reader(d, max_bytes=1 << 30, max_files=2)
-        end2 = r2.latestOffset()
-        assert end1["pos"] == "f1.parquet" and end2["pos"] == "f3.parquet"
-        parts = r2.partitions(end1, end2)
-        assert sorted(os.path.basename(p.path) for p in parts) == [
-            "f2.parquet",
-            "f3.parquet",
-        ]
-
-    def test_checkpoint_fast_forward_beats_stale_sidecar(self, tmp_path):
-        d = str(tmp_path / "landing")
-        for i in range(3):
-            _write_wave(d, f"f{i}.parquet", 50)
-        r = self._reader(d, max_bytes=1 << 30, max_files=1)
-        # Spark replays a checkpointed range on a fresh reader with no
-        # sidecar: partitions() must trust the checkpoint and fast-forward
-        parts = r.partitions({"pos": "f0.parquet"}, {"pos": "f1.parquet"})
-        assert [os.path.basename(p.path) for p in parts] == ["f1.parquet"]
-        assert r.latestOffset()["pos"] == "f2.parquet"
-
-    def test_backward_offset_window_fast_forwards_both_ends(self, tmp_path):
-        """ADVICE r4: with a missing sidecar, latestOffset can propose a
-        boundary BEHIND the checkpointed commit; the engine accepts it
-        (offset comparison is equality) and calls
-        partitions(committed, stale). The planner must fast-forward on
-        the START offset too, so the very next latestOffset resumes
-        from the committed boundary instead of re-admitting
-        (stale, committed] as new work."""
-        d = str(tmp_path / "landing")
-        for i in range(4):
-            _write_wave(d, f"f{i}.parquet", 50)
-        r = self._reader(d, max_bytes=1 << 30, max_files=1)
-        # fresh reader, no sidecar: proposes f0 although f2 is committed
-        assert r.latestOffset()["pos"] == "f0.parquet"
-        # engine: start=checkpointed f2, end=stale f0 -> empty batch
-        assert r.partitions({"pos": "f2.parquet"}, {"pos": "f0.parquet"}) == []
-        # planning must now resume from f2, not from f0
-        assert r.latestOffset()["pos"] == "f3.parquet"
-
-    def test_partitions_persists_boundary_without_commit_hook(self, tmp_path):
-        """Under the availableNow single-batch fallback the engine never
-        calls the Python commit() hook; partitions() itself must persist
-        the observed boundary so a fresh reader (next drain round /
-        restart) resumes from it instead of the epoch."""
-        d = str(tmp_path / "landing")
-        for i in range(3):
-            _write_wave(d, f"f{i}.parquet", 50)
-        r1 = self._reader(d, max_bytes=1 << 30, max_files=2)
-        end1 = r1.latestOffset()
-        r1.partitions(r1.initialOffset(), end1)  # no commit() afterwards
-        r2 = self._reader(d, max_bytes=1 << 30, max_files=2)
-        assert r2.latestOffset()["pos"] == "f2.parquet"
-        parts = r2.partitions(end1, {"pos": "f2.parquet"})
-        assert [os.path.basename(p.path) for p in parts] == ["f2.parquet"]
-
-    def test_state_location_outside_landing_dir(self, tmp_path):
-        """stateLocation moves the sidecar out of the watched dir (which
-        may have retention policies); nothing state-like is left in the
-        landing dir and a fresh reader resumes from the external file."""
-        d = str(tmp_path / "landing")
-        state = str(tmp_path / "ck" / "_admission_state")
-        for i in range(2):
-            _write_wave(d, f"f{i}.parquet", 50)
-        opts = {
-            "path": d,
-            "maxbytespertrigger": str(1 << 30),
-            "maxfilespertrigger": "1",
-            "statelocation": state,
-        }
-        r1 = _BudgetFileStreamReader(opts)
-        r1.commit(r1.latestOffset())
-        assert os.path.exists(state)
-        assert not any(n.startswith("_") for n in os.listdir(d))
-        r2 = _BudgetFileStreamReader(opts)
-        assert r2.latestOffset()["pos"] == "f1.parquet"
-
-    def test_late_small_name_is_ignored_not_duplicated(self, tmp_path):
-        d = str(tmp_path / "landing")
-        _write_wave(d, "b.parquet", 50)
-        r = self._reader(d, max_bytes=1 << 30)
-        end = r.latestOffset()
-        r.commit(end)
-        # a file violating the monotone-name contract lands late
-        _write_wave(d, "a.parquet", 50)
-        assert r.latestOffset() == end  # not admitted, not re-read
+    def test_late_small_name_is_read_exactly_once(self, spark, tmp_path):
+        """A file landing after a restart whose name sorts before every
+        processed file is read once: the source tracks seen files, not
+        a name boundary."""
+        raw = str(tmp_path / "raw")
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        _land(raw, "m.parquet")
+        budget = _land(raw, "n.parquet") * 10
+        assert _drain(spark, raw, out, ck, budget) == [80]
+        _land(raw, "a.parquet")
+        assert _drain(spark, raw, out, ck, budget) == [40]
+        assert _landed(spark, out) == (120, 120)
 
 
 class TestEndToEndStream:
-    def _run_until(self, spark, d, out, ck, budget, expected_rows):
-        """Start the stream on a short cadence, wait for the output to
-        reach the expected row count, return the per-batch input sizes.
-        (Python micro-batch sources don't support Trigger.AvailableNow —
-        Spark logs a single-batch fallback — so draining is cadenced.)"""
-        import time
-
-        q = (
-            spark.readStream.format("budget_files")
-            .option("path", d)
-            .option("maxBytesPerTrigger", str(budget))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                try:
-                    if spark.read.parquet(out).count() >= expected_rows:
-                        break
-                except Exception:
-                    pass
-                time.sleep(0.5)
-            return [
-                p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-        finally:
-            q.stop()
-
     def test_budgeted_drain_exactly_once_across_restart(self, spark, tmp_path):
-        d = str(tmp_path / "landing")
-        total = 0
-        for i in range(5):
-            _write_wave(d, f"wave{i}.parquet", 200, start=i * 200)
-            total += 200
-        out = str(tmp_path / "out")
-        ck = str(tmp_path / "ck")
-        register(spark)
-        one = os.path.getsize(os.path.join(d, "wave0.parquet"))
-        budget = int(one * 2.5)
+        """A budgeted backlog drain, then a restart on the same checkpoint
+        with a second wave (one name sorting first): every file is read
+        exactly once and no batch exceeds the 2-file budget."""
+        raw = str(tmp_path / "raw")
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        sizes = [_land(raw, f"wave1_{i}.parquet") for i in range(5)]
+        budget = int(max(sizes) * 2.5)
+        assert _drain(spark, raw, out, ck, budget) == [80, 80, 40]
+        assert _landed(spark, out) == (200, 200)
 
-        batch_rows = self._run_until(spark, d, out, ck, budget, total)
-        got = spark.read.parquet(out)
-        assert got.count() == total
-        assert got.select("k").distinct().count() == total  # exactly once
-        # per-trigger admission: never more than the 2-file budget
-        assert batch_rows and max(batch_rows) <= 400
-
-        # second wave + restart on the same checkpoint: only new rows land
-        _write_wave(d, "wave9.parquet", 100, start=9000)
-        self._run_until(spark, d, out, ck, budget, total + 100)
-        got = spark.read.parquet(out)
-        assert got.count() == total + 100
-        assert got.select("k").distinct().count() == total + 100
-
-
-def test_drain_backlog_runs_budgeted_rounds_to_completion(spark, tmp_path):
-    """drain_backlog loops single-batch availableNow runs (the Python-
-    source fallback) on one checkpoint until the admission boundary
-    quiesces: full backlog lands exactly once in ceil(files/budget)
-    batches."""
-    from investcloud_data_pipeline_spark.sources.file_admission import (
-        drain_backlog,
-    )
-
-    d = str(tmp_path / "landing")
-    total = 0
-    for i in range(5):
-        _write_wave(d, f"wave{i}.parquet", 200, start=i * 200)
-        total += 200
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    one = os.path.getsize(os.path.join(d, "wave0.parquet"))
-
-    rounds = drain_backlog(
-        spark, d, out, ck, max_bytes_per_trigger=str(int(one * 2.5))
-    )
-    assert rounds == 3  # 2 + 2 + 1 files
-    got = spark.read.parquet(out)
-    assert got.count() == total
-    assert got.select("k").distinct().count() == total
-
-    # nothing new → zero rounds, output unchanged
-    assert drain_backlog(spark, d, out, ck, str(int(one * 2.5))) == 0
-    assert spark.read.parquet(out).count() == total
+        _land(raw, "wave0_late.parquet")
+        _land(raw, "wave2_0.parquet")
+        _land(raw, "wave2_1.parquet")
+        batches = _drain(spark, raw, out, ck, budget)
+        assert sum(batches) == 120 and max(batches) <= 80
+        assert _landed(spark, out) == (320, 320)
