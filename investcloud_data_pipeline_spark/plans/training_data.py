@@ -62,7 +62,7 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.batch import _parquet_layout
 
     d = _docs(spark, sf_dir)
-    rows, row_groups = _parquet_layout(f"{sf_dir}/documents.parquet")
+    rows, row_groups = _parquet_layout(spark, sf_dir, f"{sf_dir}/documents.parquet")
     cpus = spark.sparkContext.defaultParallelism
     if rows and row_groups < cpus:
         return d.repartition(cpus)

@@ -4,6 +4,10 @@ The engine shares expensive upstream relations (shingle explodes,
 MinHash signatures, candidate-pair graphs, fitted models, PQ indexes)
 across the queries of a family — the write-once economics of a
 production pipeline, where those artifacts are materialized tables.
+The smallest store is table metadata: ``sources/batch.py::
+_table_schemas`` holds each table file's inferred parquet schema and
+footer layout, so ``load_table`` runs Spark's schema-inference job once
+per table file per session instead of once per table reference.
 ``@session_store`` is the one mechanism for that sharing. Its contract:
 
 * **Builder.** The decorated function is a plain builder

@@ -37,6 +37,24 @@ def nearest_cells(centers, vectors):
     return ((c * c).sum(1)[None, :] - 2.0 * (x @ c.T)).argmin(1)
 
 
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group; return its result and
+    the number of Spark jobs it ran (read from the status tracker once
+    the listener bus has drained)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def gold_rows(df):
     """A gold snapshot (or ``user_argmax_totals`` frame) as sorted rows."""
     return sorted(

@@ -123,3 +123,90 @@ class TestTimestampTypeContract:
         df = load_table(spark, sf_dir, "events")
         row = df.select(F.unix_micros("ts").alias("us")).first()
         assert row["us"] is not None
+
+
+class TestTableSchemaStore:
+    """``load_table`` resolves each table file's schema once per session
+    (``sources/batch.py::_table_schemas``): later loads of the same file
+    pass the stored schema and run no inference job, yet return the
+    same schema and rows as a fresh schema-less read. Each test copies
+    its tables into a fresh directory so the first load is a real miss
+    whatever ran earlier in the session."""
+
+    @staticmethod
+    def _copy(tmp_path, sf_dir, *names):
+        import shutil
+
+        for name in names:
+            shutil.copy(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+        return str(tmp_path)
+
+    def test_second_load_runs_no_job_same_schema_and_rows(self, spark, sf_dir, tmp_path):
+        from conftest import count_jobs
+
+        from investcloud_data_pipeline_spark.sources.batch import load_table
+
+        d = self._copy(tmp_path, sf_dir, "orders")
+        first, n_first = count_jobs(spark, lambda: load_table(spark, d, "orders"))
+        second, n_second = count_jobs(spark, lambda: load_table(spark, d, "orders"))
+        assert (n_first, n_second) == (1, 0)
+        fresh = spark.read.parquet(f"{d}/orders.parquet")
+        assert second.schema == fresh.schema == first.schema
+        assert sorted(second.collect()) == sorted(fresh.collect())
+
+    def test_rewritten_file_is_resolved_again(self, spark, tmp_path):
+        import pandas as pd
+
+        from investcloud_data_pipeline_spark.sources.batch import load_table
+
+        d = str(tmp_path)
+        pd.DataFrame({"a": [1, 2]}).to_parquet(f"{d}/t.parquet", index=False)
+        assert load_table(spark, d, "t").columns == ["a"]
+        pd.DataFrame({"a": [3], "b": ["x"]}).to_parquet(f"{d}/t.parquet", index=False)
+        got = load_table(spark, d, "t")
+        assert got.schema == spark.read.parquet(f"{d}/t.parquet").schema
+        assert [tuple(r) for r in got.collect()] == [(3, "x")]
+
+    def test_stores_off_infers_on_every_load(self, spark, sf_dir, tmp_path, monkeypatch):
+        from conftest import count_jobs
+
+        from investcloud_data_pipeline_spark.sources.batch import load_table
+
+        monkeypatch.setenv("SPARK_GRAFT_STORES", "off")
+        d = self._copy(tmp_path, sf_dir, "nation")
+        counts = [count_jobs(spark, lambda: load_table(spark, d, "nation"))[1] for _ in range(3)]
+        assert counts == [1, 1, 1]
+
+    def test_events_load_between_orders_loads(self, spark, sf_dir, tmp_path):
+        """The first ``events`` load sets ``nanosAsLong`` for the session;
+        an ``orders`` schema stored before it is keyed on the old value,
+        so ``orders`` is inferred once more and its rows do not move."""
+        from conftest import count_jobs
+
+        from investcloud_data_pipeline_spark.sources.batch import load_table
+
+        conf = "spark.sql.legacy.parquet.nanosAsLong"
+        before = spark.conf.get(conf, "false")
+        spark.conf.set(conf, "false")
+        try:
+            d = self._copy(tmp_path, sf_dir, "orders", "events")
+            rows = sorted(load_table(spark, d, "orders").collect())
+            load_table(spark, d, "events")
+            assert spark.conf.get(conf) == "true"
+            after, n_after = count_jobs(spark, lambda: load_table(spark, d, "orders"))
+            again, n_again = count_jobs(spark, lambda: load_table(spark, d, "orders"))
+            assert (n_after, n_again) == (1, 0)
+            assert sorted(after.collect()) == sorted(again.collect()) == rows
+        finally:
+            spark.conf.set(conf, before)
+
+    def test_q7_two_nation_reads_match_stores_off(self, spark, sf_dir, monkeypatch):
+        import __spark_entry__ as entrymod
+
+        q7 = entrymod.queries()["q7_volume_shipping"]
+        monkeypatch.delenv("SPARK_GRAFT_STORES", raising=False)
+        q7(spark, sf_dir)  # fill the store, so the next build is all hits
+        with_store = sorted(tuple(r) for r in q7(spark, sf_dir).collect())
+        monkeypatch.setenv("SPARK_GRAFT_STORES", "off")
+        without = sorted(tuple(r) for r in q7(spark, sf_dir).collect())
+        assert with_store and with_store == without

@@ -23,6 +23,7 @@ Representative map (family -> consumer):
 * mining basket/pair stores               -> copurchase_rules_lift
 * mining family stores                    -> copurchase_family_triples
 * ER pair + components stores             -> er_golden_record
+* table schema store (``load_table``)     -> q5_local_supplier_volume
 """
 
 from __future__ import annotations
@@ -47,6 +48,7 @@ STORE_CONSUMERS = [
     "copurchase_rules_lift",
     "copurchase_family_triples",
     "er_golden_record",
+    "q5_local_supplier_volume",
 ]
 
 
