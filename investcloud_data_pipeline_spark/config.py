@@ -49,12 +49,15 @@ SILVER_SCHEMA = T.StructType(
     list(BRONZE_SCHEMA.fields) + [T.StructField("geo_region", T.StringType(), True)]
 )
 
-# Gold = per-user totals + argmax region (reference 03:29-31).
+# Gold snapshot = per-user true total + argmax region + that region's
+# total, the reference's "total_watch_time" (reference 03:29-31; see
+# operators/gold.py for the two semantics).
 GOLD_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.StringType(), True),
         T.StructField("total_watch_time", T.DoubleType(), True),
         T.StructField("geo_region", T.StringType(), True),
+        T.StructField("top_region_watch_time", T.DoubleType(), True),
     ]
 )
 

@@ -10,16 +10,15 @@ Two deliberate fixes (SURVEY §4.3 / §7.4):
 * ``first()`` on rank ties is nondeterministic → ``row_number`` with a full
   tie-break ordering (value desc, then region asc).
 * The reference's "total_watch_time" actually sums only rank-1 (tied)
-  regions. We expose both semantics explicitly:
-  - ``user_top_region``: the reference's plan shape with deterministic
-    ties — top region + that region's watch time.
-  - ``user_argmax_totals`` (flagship): top region + the user's TRUE total
-    across all regions. Its window step, ``top_region_with_total``, is
-    separate so streaming gold can run it over its state store's totals;
-    the total is a second window over the same user-partitioning
-    (Catalyst reuses one exchange + sort for both window functions — one
-    shuffle on (user, region) for A1, one on user for the windows; no
-    third shuffle).
+  regions. One step, ``top_region_with_total``, exposes both semantics
+  explicitly: ``top_region_watch_time`` is the reference's value (the
+  top region's watch time, deterministic ties) and ``total_watch_time``
+  is the user's TRUE total across all regions. The step is separate
+  from ``region_totals`` so streaming gold can run it over its state
+  store's totals and the batch registry over its own; the total is a
+  second window over the same user-partitioning (Catalyst reuses one
+  exchange + sort for both window functions — one shuffle on (user,
+  region) for A1, one on user for the windows; no third shuffle).
 
 Shuffle profile at scale: exchange hash(user, region) → partial+final
 HashAggregate → exchange hash(user) → single sort serving both window
@@ -31,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.window import WindowSpec
 
 
 def region_totals(
@@ -46,41 +44,19 @@ def region_totals(
     )
 
 
-def _top_first(user_col: str, region_col: str) -> WindowSpec:
-    """W1's ordering: largest region total first, ties by region name."""
-    return Window.partitionBy(user_col).orderBy(
-        F.col("watch_time_by_region").desc(), F.col(region_col).asc()
-    )
-
-
-def user_top_region(
-    df: DataFrame,
-    user_col: str = "user_id",
-    region_col: str = "geo_region",
-    value_col: str = "watch_time",
-) -> DataFrame:
-    """Reference plan shape (A1→W1→F3→A2) with deterministic tie-break."""
-    totals = region_totals(df, user_col, region_col, value_col)
-    return (
-        totals.withColumn("rn", F.row_number().over(_top_first(user_col, region_col)))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col(user_col),
-            F.col("watch_time_by_region").alias("top_region_watch_time"),
-            F.col(region_col).alias("geo_region"),
-        )
-    )
-
-
 def top_region_with_total(
     totals: DataFrame, user_col: str = "user_id", region_col: str = "geo_region"
 ) -> DataFrame:
     """W1+F3+A2 over ``region_totals`` output: one row per user — true
-    total across regions + argmax region. Both windows share one
+    total across regions, the argmax region (largest region total first,
+    ties by region name) and that region's total. Both windows share one
     partitioning/sort on ``user_col``. Streaming gold runs this over the
     complete-mode totals of its state store."""
+    top_first = Window.partitionBy(user_col).orderBy(
+        F.col("watch_time_by_region").desc(), F.col(region_col).asc()
+    )
     return (
-        totals.withColumn("rn", F.row_number().over(_top_first(user_col, region_col)))
+        totals.withColumn("rn", F.row_number().over(top_first))
         .withColumn(
             "total_watch_time",
             F.sum("watch_time_by_region").over(Window.partitionBy(user_col)),
@@ -90,6 +66,7 @@ def top_region_with_total(
             F.col(user_col),
             F.col("total_watch_time"),
             F.col(region_col).alias("geo_region"),
+            F.col("watch_time_by_region").alias("top_region_watch_time"),
         )
     )
 

@@ -48,7 +48,6 @@ def apply_cdc(
     changes: DataFrame,
     key_cols: list[str],
     seq_col: str,
-    op_col: str = "op",
     evolve_schema: bool = False,
 ) -> DataFrame:
     """MERGE semantics: ``changes`` rows carry ``op`` = 'U' (upsert) or
@@ -70,14 +69,14 @@ def apply_cdc(
     column via MERGE is not an evolution Delta performs either.
     """
     if evolve_schema:
-        payload = [c for c in changes.columns if c not in (op_col, seq_col)]
+        payload = [c for c in changes.columns if c not in ("op", seq_col)]
         for c in payload:
             if c not in base.columns:
                 base = base.withColumn(
                     c, F.lit(None).cast(changes.schema[c].dataType)
                 )
     last = latest_per_key(changes, key_cols, seq_col)
-    upserts = last.filter(F.col(op_col) == "U").select(*base.columns)
+    upserts = last.filter(F.col("op") == "U").select(*base.columns)
     touched = last.select(*key_cols)
     kept = base.join(touched, on=key_cols, how="left_anti")
     # Deletes need no explicit branch: their keys are anti-joined out of

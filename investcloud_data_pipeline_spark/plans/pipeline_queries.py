@@ -4,17 +4,26 @@ event_type≈enrichment key — mapping per FIXTURES.md §B).
 
 Each function returns a DataFrame; the matching ANSI-SQL oracle lives next
 to it as a module constant. SURVEY §2 operator IDs cited per function.
+
+The queries are built on the streaming pipeline's own operators — the
+validity predicate (``operators/quality.py::validity_condition``), the
+keyed dedup (``operators/dedup.py``), the lookup
+enrichment and the gold argmax/total step
+(``operators/gold.py::top_region_with_total``) — so each DuckDB oracle
+checks the code the stream runs, not a copy of it.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import dedup_keep_first
 from ..operators.enrich import enrich_lookup
+from ..operators.gold import region_totals, top_region_with_total
+from ..operators.quality import validity_condition
 from ..sources.batch import load_table
 
 # Exact 2-decimal arithmetic for metric sums (see plans/__init__ note).
@@ -38,13 +47,8 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _valid_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 on the events domain (reference 01:39-45)."""
-    e = _events(spark, sf_dir)
-    return e.filter(
-        F.col("event_id").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-        & (F.col("value") >= 0)
+    return _events(spark, sf_dir).filter(
+        validity_condition("event_id", "user_id", "ts", "value")
     )
 
 
@@ -92,13 +96,7 @@ def bronze_quality_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dirty = spark.createDataFrame(_DIRTY_ROWS, e.schema)
     invalid = e.unionByName(dirty).filter(
-        ~(
-            F.col("event_id").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & (F.col("value") >= 0)
-        )
+        ~validity_condition("event_id", "user_id", "ts", "value")
     )
     return invalid.select(
         "event_id",
@@ -146,13 +144,12 @@ def silver_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/P7: broadcast-join enrichment with 'Unknown' default
     (reference 02:26, production design per 00_utils.py:39-40)."""
     dim = spark.createDataFrame(EVENT_CHANNELS, ["event_type", "channel"])
-    deduped = dedup_keep_first(
-        _valid_events(spark, sf_dir),
-        keys=["event_id"],
-        order_by=["ts", "user_id", "value"],
-    )
     return enrich_lookup(
-        deduped, dim, key="event_type", value_col="channel", out_col="channel"
+        silver_dedup(spark, sf_dir),
+        dim,
+        key="event_type",
+        value_col="channel",
+        out_col="channel",
     ).select("event_id", "user_id", "ts", "event_type", "channel", "value")
 
 
@@ -170,15 +167,10 @@ FROM dedup d LEFT JOIN dim USING (event_type)
 """
 
 
-def _silver(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full silver: valid → dedup → enrich (input to gold)."""
-    return silver_enrich(spark, sf_dir)
-
-
 def gold_region_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: two-key grouped sum (reference 03:21-22), exact decimal sums."""
     return (
-        _silver(spark, sf_dir)
+        silver_enrich(spark, sf_dir)
         .groupBy("user_id", "channel")
         .agg(
             F.sum(F.col("value").cast(DEC)).cast("double").alias("value_by_channel"),
@@ -208,30 +200,22 @@ FROM silver GROUP BY user_id, channel
 
 def gold_user_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship Gold plan: A1 → W1(row_number) → F3 → per-user totals
-    (reference 03:21-31 with the §7.4 determinism fixes).
+    (reference 03:21-31 with the §7.4 determinism fixes) — streaming
+    gold's ``region_totals`` + ``top_region_with_total`` over exact
+    decimal values.
 
     One shuffle on (user_id, channel) for the aggregate, one on user_id
     shared by both window functions.
     """
-    totals = (
-        _silver(spark, sf_dir)
-        .groupBy("user_id", "channel")
-        .agg(F.sum(F.col("value").cast(DEC)).alias("vbc"))
+    silver = silver_enrich(spark, sf_dir).withColumn("value", F.col("value").cast(DEC))
+    top = top_region_with_total(
+        region_totals(silver, "user_id", "channel", "value"), "user_id", "channel"
     )
-    w_rank = Window.partitionBy("user_id").orderBy(
-        F.col("vbc").desc(), F.col("channel").asc()
-    )
-    w_all = Window.partitionBy("user_id")
-    return (
-        totals.withColumn("rn", F.row_number().over(w_rank))
-        .withColumn("total", F.sum("vbc").over(w_all))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("total").cast("double").alias("total_value"),
-            F.col("vbc").cast("double").alias("top_channel_value"),
-            F.col("channel").alias("top_channel"),
-        )
+    return top.select(
+        "user_id",
+        F.col("total_watch_time").cast("double").alias("total_value"),
+        F.col("top_region_watch_time").cast("double").alias("top_channel_value"),
+        F.col("geo_region").alias("top_channel"),
     )
 
 

@@ -62,7 +62,6 @@ TESTDATA_TABLES = (
 # repartition is retry-deterministic (sortBeforeRepartition), and the
 # width derives from the ROW COUNT — at production scale files carry
 # many row groups, the gate never fires, and no shuffle is added.
-# SPARK_GRAFT_SCAN_REPARTITION=off disables even the opt-in sites.
 _SCAN_MIN_ROWS = 50_000
 _SCAN_ROWS_PER_TASK = 20_000
 
@@ -126,8 +125,6 @@ def _read_parquet(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
 def _with_scan_parallelism(
     spark: SparkSession, df: DataFrame, sf_dir: str, path: str
 ) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_SCAN_REPARTITION", "auto") == "off":
-        return df
     rows, row_groups = _parquet_layout(spark, sf_dir, path)
     cpus = spark.sparkContext.defaultParallelism
     if rows >= _SCAN_MIN_ROWS and row_groups < max(2, cpus // 2):
@@ -201,8 +198,3 @@ def read_raw_csv(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     records = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     corrupt = df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return records, corrupt
-
-
-def read_raw_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read raw activity parquet (the pipeline's production ingest format)."""
-    return spark.read.parquet(path)

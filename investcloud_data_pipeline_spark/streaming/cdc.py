@@ -114,7 +114,6 @@ def start_cdc_apply(
     checkpoint_dir: str,
     key_cols: list[str],
     seq_col: str = "seq",
-    op_col: str = "op",
     available_now: bool = False,
     trigger_seconds: int = 60,
     max_files_per_trigger: int = 10,
@@ -123,7 +122,7 @@ def start_cdc_apply(
     """File-stream the change log and continuously MERGE it into the
     snapshot. ``change_schema`` = base columns + op + seq."""
     base_fields = [
-        f for f in change_schema.fields if f.name not in (op_col, seq_col)
+        f for f in change_schema.fields if f.name not in ("op", seq_col)
     ]
     base_schema = T.StructType(base_fields)
     changes = (

@@ -14,7 +14,11 @@ first aggregate has to be streaming, so the plan is split in two:
 * ``foreachBatch`` receives the complete totals relation — a plain batch
   DataFrame, on which the window and the second aggregate are legal —
   runs ``top_region_with_total`` over it and overwrites the gold
-  snapshot: the complete-mode semantics of 03:38.
+  snapshot: the complete-mode semantics of 03:38. The snapshot has one
+  row per user with ``config.GOLD_SCHEMA``'s four columns: ``user_id``,
+  ``total_watch_time`` (the true total across regions), ``geo_region``
+  (the argmax region) and ``top_region_watch_time`` (that region's
+  total — the value the reference computes as "total_watch_time").
 
 Exactly-once: the checkpoint's offset and commit logs plus the state
 store's versions give it. A batch replayed after a crash re-reads the

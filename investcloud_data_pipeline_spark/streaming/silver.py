@@ -18,12 +18,19 @@ code).
 
 Enrichment: stream-static broadcast left join (the reference's own stated
 production design, 00_utils.py:39-40) instead of the per-row Python UDF.
+
+Counters: each trigger's progress already carries the input row count
+(``numInputRows``), the event-time range (``eventTime`` min/max/avg and
+the watermark) and the dedup state store's late-row drops
+(``numRowsDroppedByWatermark``), so the query adds no ``observe`` of its
+own; ``late_drop_stats`` sums them. That makes the watermark's silent
+late-row drops (SURVEY §2.5 — the reference's dedup drops late rows with
+no signal at all) observable at no cost.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
@@ -34,8 +41,6 @@ BRONZE_SINK_SCHEMA = T.StructType(
     list(BRONZE_SCHEMA.fields) + [T.StructField("event_date", T.DateType(), True)]
 )
 
-SILVER_OBSERVATION = "silver_in"
-
 
 def start_silver(
     spark: SparkSession,
@@ -43,27 +48,14 @@ def start_silver(
     ip_regions: DataFrame,
     available_now: bool = False,
     trigger_seconds: int = 60,
-    watermark_delay: str = WATERMARK_DELAY,
 ) -> StreamingQuery:
     bronze_stream = (
         spark.readStream.format("parquet")
         .schema(BRONZE_SINK_SCHEMA)
         .load(paths.bronze)
     )
-    # Free per-trigger telemetry on the pre-dedup stream: input rows and
-    # the event-time range, riding the same job (no extra scan). Paired
-    # with the state store's numRowsDroppedByWatermark counter, this
-    # makes the watermark's silent late-row drops observable — see
-    # late_drop_stats() and SURVEY §2.5 (the reference's dedup drops
-    # late rows with no signal at all).
-    observed = bronze_stream.observe(
-        SILVER_OBSERVATION,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.min("timestamp").alias("min_event_time"),
-        F.max("timestamp").alias("max_event_time"),
-    )
-    deduped = observed.withWatermark(
-        "timestamp", watermark_delay
+    deduped = bronze_stream.withWatermark(
+        "timestamp", WATERMARK_DELAY
     ).dropDuplicatesWithinWatermark(["log_id"])
     enriched = geo_enrich(deduped, ip_regions)
     writer = (
@@ -85,9 +77,10 @@ def late_drop_stats(progresses) -> dict:
     """Aggregate the silver stage's late-data observability counters from
     ``StreamingQuery.recentProgress`` (or any iterable of progress
     dicts), in the same surfaced-counter style as the bronze DQ
-    metrics.
+    metrics. Every counter is one Spark already reports in each
+    trigger's progress; silver attaches no observation of its own.
 
-    ``rows_in`` comes from the ``silver_in`` observation;
+    ``rows_in`` is the sum of the triggers' ``numInputRows``;
     ``rows_dropped_late`` is the state store's own
     ``numRowsDroppedByWatermark`` (rows older than the advanced
     watermark that the dedup operator discarded BEFORE consideration —
@@ -96,21 +89,11 @@ def late_drop_stats(progresses) -> dict:
     A monitoring hook alerts on ``rows_dropped_late`` exactly like it
     alerts on quarantine volume.
     """
-    import json
-
     out = {"rows_in": 0, "rows_dropped_late": 0, "rows_deduped": 0}
     for p in progresses:
-        if not isinstance(p, dict):  # StreamingQueryProgress object
-            p = json.loads(p.json)
-        obs = (p.get("observedMetrics") or {}).get(SILVER_OBSERVATION)
-        if obs is not None:
-            if hasattr(obs, "asDict"):  # Row in the progress dict
-                obs = obs.asDict()
-            out["rows_in"] += obs.get("rows_in") or 0
-        for op in p.get("stateOperators") or []:
-            if op.get("operatorName") == "dedupeWithinWatermark":
-                out["rows_dropped_late"] += (
-                    op.get("numRowsDroppedByWatermark") or 0
-                )
-                out["rows_deduped"] += op.get("numRowsUpdated") or 0
+        out["rows_in"] += p["numInputRows"]
+        for op in p["stateOperators"]:
+            if op["operatorName"] == "dedupeWithinWatermark":
+                out["rows_dropped_late"] += op["numRowsDroppedByWatermark"]
+                out["rows_deduped"] += op["numRowsUpdated"]
     return out

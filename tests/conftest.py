@@ -58,7 +58,13 @@ def count_jobs(spark, fn):
 def gold_rows(df):
     """A gold snapshot (or ``user_argmax_totals`` frame) as sorted rows."""
     return sorted(
-        (r.user_id, round(r.total_watch_time, 6), r.geo_region) for r in df.collect()
+        (
+            r.user_id,
+            round(r.total_watch_time, 6),
+            r.geo_region,
+            round(r.top_region_watch_time, 6),
+        )
+        for r in df.collect()
     )
 
 

@@ -128,7 +128,7 @@ def test_streaming_query_listener_lifecycle(spark, tmp_path):
 def test_silver_late_drop_counters(spark, tmp_path):
     """VERDICT r4 #6: the watermark silently discards late rows in the
     silver dedup (the reference does this with no signal, SURVEY §2.5).
-    The silver_in observation + the state store's
+    The progress's numInputRows + the state store's
     numRowsDroppedByWatermark make the drop observable: a crafted
     two-run availableNow sequence with one genuinely-late row must
     surface exactly that row in late_drop_stats()."""

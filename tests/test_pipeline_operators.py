@@ -15,10 +15,7 @@ from investcloud_data_pipeline_spark.operators.dedup import (
     dedup_keep_first,
 )
 from investcloud_data_pipeline_spark.operators.enrich import geo_enrich
-from investcloud_data_pipeline_spark.operators.gold import (
-    user_argmax_totals,
-    user_top_region,
-)
+from investcloud_data_pipeline_spark.operators.gold import user_argmax_totals
 from investcloud_data_pipeline_spark.operators.quality import (
     parse_raw,
     split_quality,
@@ -99,9 +96,10 @@ def test_gold_argmax_deterministic_on_ties(spark):
         ("u2", "Oceania", 2.5),
     ]
     df = spark.createDataFrame(rows, "user_id string, geo_region string, watch_time double")
-    top = {r.user_id: (r.geo_region, r.top_region_watch_time) for r in user_top_region(df).collect()}
+    out = user_argmax_totals(df).collect()
+    top = {r.user_id: (r.geo_region, r.top_region_watch_time) for r in out}
     assert top == {"u1": ("Asia", 10.0), "u2": ("Africa", 3.0)}
-    tot = {r.user_id: (r.geo_region, r.total_watch_time) for r in user_argmax_totals(df).collect()}
+    tot = {r.user_id: (r.geo_region, r.total_watch_time) for r in out}
     assert tot == {"u1": ("Asia", 20.0), "u2": ("Africa", 5.5)}
 
 

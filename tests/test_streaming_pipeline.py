@@ -297,6 +297,7 @@ def test_gold_replay_through_commit_log_no_double_count(spark, tmp_path):
     from the state version its first attempt read: the snapshot is
     rewritten unchanged, not double-counted, and later files still land
     exactly once."""
+    from investcloud_data_pipeline_spark.config import GOLD_SCHEMA
     from investcloud_data_pipeline_spark.streaming.gold import start_gold
 
     paths = PipelinePaths(str(tmp_path))
@@ -314,8 +315,12 @@ def test_gold_replay_through_commit_log_no_double_count(spark, tmp_path):
     _append_silver(spark, paths, [("u1", "EU", 4.0), ("u3", "APAC", 2.0)])
     drain()
     # a double-counted ("u1", "EU", 4.0) would make EU u1's top region
-    want = [("u1", 19.0, "NA"), ("u2", 7.0, "NA"), ("u3", 2.0, "APAC")]
+    want = [("u1", 19.0, "NA", 10.0), ("u2", 7.0, "NA", 7.0), ("u3", 2.0, "APAC", 2.0)]
     assert gold() == want
+    snapshot = spark.read.parquet(paths.gold).schema
+    assert [(f.name, f.dataType) for f in snapshot] == [
+        (f.name, f.dataType) for f in GOLD_SCHEMA
+    ]
     assert gold_rows(user_argmax_totals(spark.read.parquet(paths.silver))) == want
 
     commits = os.path.join(paths.checkpoint("gold"), "commits")
@@ -329,7 +334,7 @@ def test_gold_replay_through_commit_log_no_double_count(spark, tmp_path):
 
     _append_silver(spark, paths, [("u2", "EU", 30.0)])
     drain()
-    want = [("u1", 19.0, "NA"), ("u2", 37.0, "EU"), ("u3", 2.0, "APAC")]
+    want = [("u1", 19.0, "NA", 10.0), ("u2", 37.0, "EU", 30.0), ("u3", 2.0, "APAC", 2.0)]
     assert gold() == want
     assert gold_rows(user_argmax_totals(spark.read.parquet(paths.silver))) == want
 
