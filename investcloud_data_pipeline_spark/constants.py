@@ -13,3 +13,9 @@ queries).
 # (plans/analytics_ext8.py::user_topk_events). One definition so
 # bumping K cannot desynchronize the pair.
 TOPK_K = 5
+
+# Watermark delay of the window stages (streaming/windows.py), also the
+# session gap: their batch twins (plans/analytics_ext8.py::
+# *_watermark_rollup) and oracles cut at the same closed windows.
+WINDOW_DELAY_MINUTES = 30
+WINDOW_DELAY = f"{WINDOW_DELAY_MINUTES} minutes"

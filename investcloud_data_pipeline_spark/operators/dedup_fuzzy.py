@@ -422,6 +422,17 @@ def minhash_band_relation(
     ).select("id", "bk.band_idx", "bk.band_key")
 
 
+def _band_self_pairs(banded: DataFrame) -> DataFrame:
+    """(id1 < id2) pairs of a band relation that share a band bucket."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.id") < F.col("b.id")),
+    ).select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -448,17 +459,7 @@ def minhash_lsh_candidates(
     banded = minhash_band_relation(
         df, text_col, id_col, n, num_hashes, bands, sig_lookup=sig_lookup
     )
-    a, b2 = banded.alias("a"), banded.alias("b")
-    rep_pairs = (
-        a.join(
-            b2,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
+    rep_pairs = _band_self_pairs(banded).distinct()
     # docs with ≥1 shingle ARE banded (empty docs never reach a bucket)
     return _expand_member_pairs(
         rep_pairs,
@@ -527,36 +528,41 @@ def minhash_incremental_candidates(
     # while the base band relation stays lazy/pipelined (at 100 TB it
     # is the stored index).
     banded_delta = banded_delta.localCheckpoint(eager=True)
+    return incremental_band_pairs(
+        banded_delta, banded_base,
+        base_members.unionByName(delta_members),
+    )
+
+
+def incremental_band_pairs(
+    banded_delta: DataFrame, banded_base: DataFrame, members: DataFrame
+) -> DataFrame:
+    """The incremental pair step shared by
+    :func:`minhash_incremental_candidates` and the streaming pair-ingest
+    stage: delta bands × base bands (ordered id1 < id2) ∪ the delta's
+    band self-join, expanded over ``members`` (both sides' exact-dup
+    groups, as ``(__rep, __member)``). Never base × base.
+
+    Intra-group pairs are expanded for delta groups only: their reps are
+    the banded delta ids, and a base rep never appears there. A delta id
+    already in the base (a replayed doc) never pairs with itself."""
     d, b = banded_delta.alias("d"), banded_base.alias("b")
     cross = (
         d.join(
             b,
             (F.col("d.band_idx") == F.col("b.band_idx"))
-            & (F.col("d.band_key") == F.col("b.band_key")),
+            & (F.col("d.band_key") == F.col("b.band_key"))
+            & (F.col("d.id") != F.col("b.id")),
         )
         .select(
             F.least(F.col("d.id"), F.col("b.id")).alias("id1"),
             F.greatest(F.col("d.id"), F.col("b.id")).alias("id2"),
         )
     )
-    a, b2 = banded_delta.alias("a"), banded_delta.alias("b2")
-    intra_delta = (
-        a.join(
-            b2,
-            (F.col("a.band_idx") == F.col("b2.band_idx"))
-            & (F.col("a.band_key") == F.col("b2.band_key"))
-            & (F.col("a.id") < F.col("b2.id")),
-        )
-        .select(F.col("a.id").alias("id1"), F.col("b2.id").alias("id2"))
-    )
-    rep_pairs = cross.unionByName(intra_delta).distinct()
-    members_all = base_members.unionByName(delta_members)
-    # exact-duplicate expansion: cross pairs over BOTH sides' groups,
-    # intra pairs only for delta-side groups (their reps are the banded
-    # delta ids — a base rep never appears there)
+    rep_pairs = cross.unionByName(_band_self_pairs(banded_delta)).distinct()
     return _expand_member_pairs(
         rep_pairs,
-        members_all,
+        members,
         banded_delta.select(F.col("id").alias("__rep")).distinct(),
         intra_cols=[],
     )

@@ -54,30 +54,6 @@ def validity_condition(
     )
 
 
-def observe_quality(parsed: DataFrame, name: str = "dq"):
-    """Attach free DQ telemetry to the parsed stream: row count, invalid
-    count, and the value sum ride along with whatever action executes the
-    plan — no second scan, no extra job. This is the production form of
-    the reference's "alert on quarantine volume" future enhancement
-    (docs/architecture_design.md:107).
-
-    Returns ``(observed_df, observation)`` for batch plans; on streaming
-    plans pass a plain name-string observation and read the metrics from
-    ``StreamingQueryProgress.observedMetrics`` instead.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    cond = validity_condition()
-    observed = parsed.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(cond, 0).otherwise(1)).alias("invalid_rows"),
-        F.sum(F.when(cond, F.col("watch_time_parsed"))).alias("valid_watch_time"),
-    )
-    return observed, obs
-
-
 def split_quality(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """F2 + P4-P6: fan one parsed input into (valid, quarantine).
 

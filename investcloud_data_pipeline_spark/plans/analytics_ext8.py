@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.batch import load_table
-from ..constants import TOPK_K
+from ..constants import TOPK_K, WINDOW_DELAY, WINDOW_DELAY_MINUTES
 
 N_BINS = 256
 DEC = "decimal(18,2)"
@@ -561,45 +561,42 @@ WHERE COALESCE(f.max_before < b.p_size, TRUE)
 
 # ---------- watermark-closed window rollups (streaming-stage twins) ----------
 #
-# The BATCH contracts of the two streaming window stages
-# (streaming/windows.py): tumbling / sliding windowed aggregation over
-# the events table, RESTRICTED to windows closed by the final
-# watermark (max event time − 30 min) — exactly the set append mode
-# emits. tests/test_streaming_window_stages.py drives each stage on
-# the same input and asserts row-set equality with these queries, so
-# the strict DuckDB oracle transitively checks the streaming emission
-# — the round-9 "streaming aggregation queries registered as
-# batch-equivalence-tested stages" class. The micros value sum keeps
-# the aggregate integral (exact cross-engine).
+# The BATCH contracts of the three streaming window stages
+# (streaming/windows.py): the stages' own window_rollup over the events
+# table, RESTRICTED to windows closed by the final watermark (max event
+# time − WINDOW_DELAY) — exactly the set append mode emits. The strict
+# DuckDB oracles therefore check the operator the stages run, and
+# tests/test_streaming_window_stages.py drives each stage on the same
+# input and asserts row-set equality with these queries. The micros
+# value sum keeps the aggregate integral (exact cross-engine).
 
-WM_DELAY_MIN = 30
+
+def closed_window_rollup(
+    e: DataFrame, window, key: str, prefix: str
+) -> DataFrame:
+    """``window_rollup`` over ``e``, restricted to the windows the final
+    watermark has closed."""
+    from ..streaming.windows import window_rollup
+
+    mx = e.groupBy().agg(F.max("ts").alias("mx"))
+    return (
+        window_rollup(e, window, key, prefix)
+        .crossJoin(F.broadcast(mx))
+        .filter(
+            F.col(f"{prefix}_end")
+            <= F.col("mx") - F.expr(f"INTERVAL {WINDOW_DELAY}")
+        )
+        .drop("mx")
+    )
 
 
 def tumbling_watermark_rollup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     e = _t(spark, sf_dir, "events").select("ts", "event_type", "value")
-    mx = e.groupBy().agg(F.max("ts").alias("mx"))
-    return (
-        e.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 1_000_000).cast("long")
-            ).alias("total_micros"),
-        )
-        .crossJoin(F.broadcast(mx))
-        .filter(
-            F.col("window.end")
-            <= F.col("mx") - F.expr(f"INTERVAL {WM_DELAY_MIN} MINUTES")
-        )
-        .select(
-            F.col("window.start").alias("win_start"),
-            "event_type",
-            "n",
-            "total_micros",
-        )
-    )
+    return closed_window_rollup(
+        e, F.window("ts", "1 hour"), "event_type", "win"
+    ).drop("win_end")
 
 
 TUMBLING_WATERMARK_ROLLUP_SQL = f"""
@@ -610,7 +607,7 @@ SELECT date_trunc('hour', ts) AS win_start, event_type,
          AS total_micros
 FROM events CROSS JOIN m
 WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR
-      <= mx - INTERVAL {WM_DELAY_MIN} MINUTE
+      <= mx - INTERVAL {WINDOW_DELAY_MINUTES} MINUTE
 GROUP BY 1, 2
 """
 
@@ -619,27 +616,9 @@ def sliding_watermark_rollup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     e = _t(spark, sf_dir, "events").select("ts", "event_type", "value")
-    mx = e.groupBy().agg(F.max("ts").alias("mx"))
-    return (
-        e.groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 1_000_000).cast("long")
-            ).alias("total_micros"),
-        )
-        .crossJoin(F.broadcast(mx))
-        .filter(
-            F.col("window.end")
-            <= F.col("mx") - F.expr(f"INTERVAL {WM_DELAY_MIN} MINUTES")
-        )
-        .select(
-            F.col("window.start").alias("win_start"),
-            "event_type",
-            "n",
-            "total_micros",
-        )
-    )
+    return closed_window_rollup(
+        e, F.window("ts", "1 hour", "15 minutes"), "event_type", "win"
+    ).drop("win_end")
 
 
 SLIDING_WATERMARK_ROLLUP_SQL = f"""
@@ -655,7 +634,7 @@ SELECT win_start, event_type, count(*) AS n,
        CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
          AS total_micros
 FROM expanded CROSS JOIN m
-WHERE win_start + INTERVAL 1 HOUR <= mx - INTERVAL {WM_DELAY_MIN} MINUTE
+WHERE win_start + INTERVAL 1 HOUR <= mx - INTERVAL {WINDOW_DELAY_MINUTES} MINUTE
 GROUP BY 1, 2
 """
 
@@ -677,27 +656,8 @@ def session_watermark_rollup(
     no self-join, no global sort; the micros sum keeps the value
     integral (exact cross-engine)."""
     e = _t(spark, sf_dir, "events").select("ts", "user_id", "value")
-    mx = e.groupBy().agg(F.max("ts").alias("mx"))
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 1_000_000).cast("long")
-            ).alias("total_micros"),
-        )
-        .crossJoin(F.broadcast(mx))
-        .filter(
-            F.col("session_window.end")
-            <= F.col("mx") - F.expr(f"INTERVAL {WM_DELAY_MIN} MINUTES")
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n",
-            "total_micros",
-        )
+    return closed_window_rollup(
+        e, F.session_window("ts", WINDOW_DELAY), "user_id", "session"
     )
 
 
@@ -706,7 +666,7 @@ WITH m AS (SELECT max(ts) AS mx FROM events),
 flagged AS (
   SELECT user_id, ts, value,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+                OR ts - lag(ts) OVER w > INTERVAL {WINDOW_DELAY_MINUTES} MINUTE
               THEN 1 ELSE 0 END AS new_s
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts)
@@ -717,7 +677,7 @@ flagged AS (
   FROM flagged
 ), agg AS (
   SELECT user_id, min(ts) AS session_start,
-         max(ts) + INTERVAL 30 MINUTE AS session_end,
+         max(ts) + INTERVAL {WINDOW_DELAY_MINUTES} MINUTE AS session_end,
          count(*) AS n,
          CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT)
            AS total_micros
@@ -725,7 +685,7 @@ flagged AS (
 )
 SELECT session_start, session_end, user_id, n, total_micros
 FROM agg CROSS JOIN m
-WHERE session_end <= mx - INTERVAL {WM_DELAY_MIN} MINUTE
+WHERE session_end <= mx - INTERVAL {WINDOW_DELAY_MINUTES} MINUTE
 """
 
 

@@ -194,10 +194,10 @@ def start_neardup_pair_ingest(
     micro-batch probes and then appends to.
 
     Per micro-batch: collapse exact duplicates, band the delta's reps,
-    probe the stored index (delta×base — the bucketed scan side plans
-    with NO exchange, the incremental plan shape pinned in
-    tests/test_scale_posture.py), self-join the delta's bands
-    (delta×delta), expand rep pairs over the accumulated member maps,
+    run ``incremental_band_pairs`` (the pair step of
+    ``minhash_incremental_candidates``) over the stored index and the
+    accumulated member maps — its delta×base probe plans the bucketed
+    scan side with NO exchange, pinned in tests/test_scale_posture.py —
     and append (a) the new candidate pairs, (b) the delta's bands to
     the bucketed index, (c) the delta's member map. NEVER base×base:
     per-batch cost is |delta bands| + matched buckets, independent of
@@ -219,7 +219,7 @@ def start_neardup_pair_ingest(
 
     from ..operators.dedup_fuzzy import (
         _exact_groups,
-        _expand_member_pairs,
+        incremental_band_pairs,
         minhash_band_relation,
     )
 
@@ -250,33 +250,6 @@ def start_neardup_pair_ingest(
                 stored = sess.createDataFrame(
                     [], "id long, band_idx int, band_key string"
                 )
-            d, b = banded_delta.alias("d"), stored.alias("b")
-            cross = (
-                d.join(
-                    b,
-                    (F.col("d.band_idx") == F.col("b.band_idx"))
-                    & (F.col("d.band_key") == F.col("b.band_key"))
-                    & (F.col("d.id") != F.col("b.id")),
-                )
-                .select(
-                    F.least(F.col("d.id"), F.col("b.id")).alias("id1"),
-                    F.greatest(F.col("d.id"), F.col("b.id")).alias("id2"),
-                )
-            )
-            a, b2 = banded_delta.alias("a"), banded_delta.alias("b2")
-            intra = (
-                a.join(
-                    b2,
-                    (F.col("a.band_idx") == F.col("b2.band_idx"))
-                    & (F.col("a.band_key") == F.col("b2.band_key"))
-                    & (F.col("a.id") < F.col("b2.id")),
-                )
-                .select(
-                    F.col("a.id").alias("id1"),
-                    F.col("b2.id").alias("id2"),
-                )
-            )
-            rep_pairs = cross.unionByName(intra).distinct()
             if any(
                 f.endswith(".parquet")
                 for f in (
@@ -290,12 +263,9 @@ def start_neardup_pair_ingest(
                 ).parquet(members_dir)
             else:
                 stored_members = sess.createDataFrame([], members_schema)
-            members_all = stored_members.unionByName(delta_members)
-            pairs = _expand_member_pairs(
-                rep_pairs,
-                members_all,
-                banded_delta.select(F.col("id").alias("__rep")).distinct(),
-                intra_cols=[],
+            pairs = incremental_band_pairs(
+                banded_delta, stored,
+                stored_members.unionByName(delta_members),
             )
             if not pairs_done:
                 pairs.write.mode("append").parquet(pairs_dir)

@@ -20,6 +20,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _interval_join(
+    clicks: DataFrame,
+    purchases: DataFrame,
+    window: str,
+    watermark_delay: str,
+    how: str,
+) -> DataFrame:
+    """Purchases ``p`` joined ``how`` to the same user's clicks ``c``
+    with click_ts ≤ purchase_ts ≤ click_ts + ``window``; both sides
+    watermarked by ``watermark_delay``."""
+    c = clicks.withWatermark("click_ts", watermark_delay).alias("c")
+    p = purchases.withWatermark("purchase_ts", watermark_delay).alias("p")
+    cond = (
+        (F.col("p.user_id") == F.col("c.user_id"))
+        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
+        & (
+            F.col("p.purchase_ts")
+            <= F.col("c.click_ts") + F.expr(f"interval {window}")
+        )
+    )
+    return p.join(c, cond, how)
+
+
 def attribute_purchases(
     clicks: DataFrame,
     purchases: DataFrame,
@@ -48,17 +71,7 @@ def attribute_purchases(
     """
     if how not in ("inner", "left_outer", "full_outer"):
         raise ValueError(f"unsupported stream-stream join type: {how}")
-    c = clicks.withWatermark("click_ts", watermark_delay).alias("c")
-    p = purchases.withWatermark("purchase_ts", watermark_delay).alias("p")
-    cond = (
-        (F.col("p.user_id") == F.col("c.user_id"))
-        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
-        & (
-            F.col("p.purchase_ts")
-            <= F.col("c.click_ts") + F.expr(f"interval {window}")
-        )
-    )
-    joined = p.join(c, cond, how)
+    joined = _interval_join(clicks, purchases, window, watermark_delay, how)
     user = (
         F.coalesce(F.col("p.user_id"), F.col("c.user_id"))
         if how == "full_outer"
@@ -100,17 +113,9 @@ def attributed_revenue_hourly(
     window-key shuffle for the aggregation; both states evict on the
     watermark, so state is bounded by (join window + bucket) x arrival
     rate regardless of stream age."""
-    c = clicks.withWatermark("click_ts", watermark_delay).alias("c")
-    p = purchases.withWatermark("purchase_ts", watermark_delay).alias("p")
-    cond = (
-        (F.col("p.user_id") == F.col("c.user_id"))
-        & (F.col("p.purchase_ts") >= F.col("c.click_ts"))
-        & (
-            F.col("p.purchase_ts")
-            <= F.col("c.click_ts") + F.expr(f"interval {window}")
-        )
+    attributed = _interval_join(
+        clicks, purchases, window, watermark_delay, "left_semi"
     )
-    attributed = p.join(c, cond, "left_semi")
     return (
         attributed.groupBy(F.window("purchase_ts", bucket))
         .agg(

@@ -118,71 +118,6 @@ def expiring_user_sessions(
     )
 
 
-def running_user_totals_tws(
-    events_stream: DataFrame, allow_fallback: bool = False
-) -> DataFrame:
-    """Same semantics as :func:`running_user_totals`, expressed with
-    ``transformWithStateInPandas``. Requires the RocksDB state store
-    provider (``spark.sql.streaming.stateStore.providerClass``) — which
-    is also the right provider for 100 TB-scale key cardinality: state
-    lives off-heap/on-disk with changelog checkpointing instead of a
-    JVM-heap HashMap.
-
-    ``allow_fallback=True`` degrades to :func:`running_user_totals`
-    (the ``applyInPandasWithState`` twin — same output rows per batch,
-    different state wire format) on environments without protobuf; the
-    default raises so deployments notice the missing capability instead
-    of silently checkpointing an incompatible state layout."""
-    try:  # the TWS runner speaks protobuf to the JVM — not a Spark dep
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        if allow_fallback:
-            return running_user_totals(events_stream)
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pip install protobuf); use running_user_totals (applyInPandasWithState) "
-            "on environments without it, or pass allow_fallback=True"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=Proc(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def running_user_totals(events_stream: DataFrame) -> DataFrame:
     """Streaming per-user running totals with custom state.
 

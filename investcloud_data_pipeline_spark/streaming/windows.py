@@ -1,6 +1,6 @@
-"""Watermarked time-window aggregation stages: tumbling and sliding
-event rollups as production Structured Streaming stages (append mode,
-parquet sink, availableNow-capable).
+"""Watermarked time-window aggregation stages: tumbling, sliding and
+session event rollups as production Structured Streaming stages
+(append mode, parquet sink, availableNow-capable).
 
 These are the canonical streaming-aggregation shapes (SURVEY §2 T1/T4
 exercised them inside tests; round-9 registers them as first-class
@@ -8,11 +8,12 @@ stages): ``groupBy(window(ts, ...), event_type)`` with an event-time
 watermark — append mode emits each window exactly once, when the
 watermark passes its end. The BATCH contract of each stage is a
 registry query (plans/analytics_ext8.py::tumbling_watermark_rollup /
-sliding_watermark_rollup): batch windows restricted to those CLOSED by
-the final watermark (max event time − delay) — the e2e test asserts
-the streamed parquet equals the registry query on the same input, so
-the strict DuckDB oracle of the batch twin transitively checks the
-streaming emission.
+sliding_watermark_rollup / session_watermark_rollup): the same
+``window_rollup`` over the batch table, restricted to windows CLOSED by
+the final watermark (max event time − delay). The strict DuckDB oracle
+of each twin therefore checks the operator the stage runs, and the e2e
+test asserts the streamed parquet equals the registry query on the same
+input.
 
 Scale notes: windowed aggregation state is per (window, event_type) —
 bounded by the watermark horizon; the RocksDB state store is the
@@ -27,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..constants import WINDOW_DELAY
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -38,10 +41,16 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def _rollup(stream, window_args: tuple, watermark: str):
+def window_rollup(events, window, key: str, prefix: str,
+                  watermark: str = WINDOW_DELAY):
+    """The one (window, key) rollup of the window stages and their
+    registry twins: ``n`` and the micros value sum per ``window``
+    (``F.window`` or ``F.session_window`` over ``ts``) and ``key``, as
+    (``{prefix}_start``, ``{prefix}_end``, key, n, total_micros). On a
+    batch frame Catalyst drops the watermark."""
     return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", *window_args), "event_type")
+        events.withWatermark("ts", watermark)
+        .groupBy(window.alias("w"), key)
         .agg(
             F.count("*").alias("n"),
             F.sum(
@@ -49,9 +58,9 @@ def _rollup(stream, window_args: tuple, watermark: str):
             ).alias("total_micros"),
         )
         .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "event_type",
+            F.col("w.start").alias(f"{prefix}_start"),
+            F.col("w.end").alias(f"{prefix}_end"),
+            key,
             "n",
             "total_micros",
         )
@@ -78,14 +87,16 @@ def start_tumbling_rollup(
     out_dir: str,
     checkpoint_dir: str,
     window: str = "1 hour",
-    watermark: str = "30 minutes",
+    watermark: str = WINDOW_DELAY,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Tumbling-window rollup stage: one emission per closed
     (window, event_type) cell."""
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
     return _start(
-        _rollup(stream, (window,), watermark),
+        window_rollup(
+            stream, F.window("ts", window), "event_type", "win", watermark
+        ),
         out_dir,
         checkpoint_dir,
         "tumbling_rollup",
@@ -100,7 +111,7 @@ def start_sliding_rollup(
     checkpoint_dir: str,
     window: str = "1 hour",
     slide: str = "15 minutes",
-    watermark: str = "30 minutes",
+    watermark: str = WINDOW_DELAY,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Sliding-window rollup stage: each event lands in
@@ -108,7 +119,10 @@ def start_sliding_rollup(
     once."""
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
     return _start(
-        _rollup(stream, (window, slide), watermark),
+        window_rollup(
+            stream, F.window("ts", window, slide), "event_type", "win",
+            watermark,
+        ),
         out_dir,
         checkpoint_dir,
         "sliding_rollup",
@@ -121,8 +135,8 @@ def start_session_rollup(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
+    gap: str = WINDOW_DELAY,
+    watermark: str = WINDOW_DELAY,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -148,21 +162,7 @@ def start_session_rollup(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(src_dir)
-    df = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 1_000_000).cast("long")
-            ).alias("total_micros"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n",
-            "total_micros",
-        )
+    df = window_rollup(
+        stream, F.session_window("ts", gap), "user_id", "session", watermark
     )
     return _start(df, out_dir, checkpoint_dir, "session_rollup", available_now)

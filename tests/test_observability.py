@@ -1,14 +1,14 @@
-"""df.observe DQ telemetry: metrics ride along with the action that
-executes the plan (no second scan), in batch and in streaming progress."""
+"""Streaming observability: df.observe DQ counters ride along with the
+action that executes the plan (no second scan) and surface in streaming
+progress; listener lifecycle; silver's late-drop counters."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from investcloud_data_pipeline_spark.operators.quality import (
-    observe_quality,
     parse_raw,
-    split_quality,
+    validity_condition,
 )
 
 RAW = [
@@ -19,18 +19,6 @@ RAW = [
     ("e", "u4", "2024-01-01T13:00:00", "1.2.3.4", 40),
 ]
 DDL = "log_id string, user_id string, timestamp string, ip_address string, `watch_time(min)` long"
-
-
-def test_batch_observation_matches_split(spark):
-    parsed = parse_raw(spark.createDataFrame(RAW, DDL))
-    observed, obs = observe_quality(parsed)
-    valid, quarantine = split_quality(observed)
-    n_valid, n_quar = valid.count(), quarantine.count()
-    m = obs.get
-    assert m["rows"] == 5
-    assert m["invalid_rows"] == 3 == n_quar
-    assert n_valid == 2
-    assert m["valid_watch_time"] == 50.0  # 10 + 40
 
 
 def test_streaming_observation_in_progress(spark, tmp_path):
@@ -45,9 +33,7 @@ def test_streaming_observation_in_progress(spark, tmp_path):
     ).to_parquet(f"{src}/a.parquet", index=False)
 
     parsed = parse_raw(spark.readStream.schema(DDL).parquet(src))
-    cond = F.col("timestamp_parsed").isNotNull() & (
-        F.col("watch_time_parsed") >= 0
-    ) & F.col("user_id").isNotNull()
+    cond = validity_condition()
     observed = parsed.observe(
         "dq_stream",
         F.count(F.lit(1)).alias("rows"),

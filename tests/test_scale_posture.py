@@ -766,51 +766,61 @@ def test_decile_lift_approx_has_no_single_partition_window(spark, sf_dir):
 def test_incremental_dedup_probes_bucketed_index_without_base_exchange(
     spark, tmp_path
 ):
-    """The incremental-dedup posture claim, executed: with the base band
-    relation STORED as a table bucketed on (band_idx, band_key), the
-    delta-vs-base probe join plans with no shuffle on the base side —
-    the stored index is the dedup state, per-batch cost is the delta's
-    bands plus matched buckets."""
+    """The incremental-dedup posture claim, executed on the pair step
+    the streaming pair-ingest stage runs: with the base band relation
+    STORED as a table bucketed on (band_idx, band_key),
+    incremental_band_pairs' delta-vs-base probe plans with no shuffle
+    on the base side — the stored index is the dedup state, per-batch
+    cost is the delta's bands plus matched buckets — and its pairs equal
+    the batch minhash_incremental_candidates on the same split."""
     from investcloud_data_pipeline_spark.operators.dedup_fuzzy import (
+        _exact_groups,
+        incremental_band_pairs,
         minhash_band_relation,
+        minhash_incremental_candidates,
     )
-    from investcloud_data_pipeline_spark.operators.scale import write_bucketed
 
     docs = spark.createDataFrame(
         [(i, f"word{i % 7} token{i % 5} filler{i % 3} pad{i % 2} x y z")
          for i in range(60)],
         "doc_id long, text string",
     )
-    base_bands = minhash_band_relation(docs.filter("doc_id % 10 != 0"))
-    delta_bands = minhash_band_relation(docs.filter("doc_id % 10 = 0"))
+    base = docs.filter("doc_id % 10 != 0")
+    delta = docs.filter("doc_id % 10 = 0")
+    caches: list = []
+    base_rep, base_members = _exact_groups(base, "text", "doc_id", caches)
+    delta_rep, delta_members = _exact_groups(delta, "text", "doc_id", caches)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         write_bucketed(
-            base_bands, "t_dedup_index_b", ["band_idx", "band_key"],
-            num_buckets=4,
+            minhash_band_relation(base_rep), "t_dedup_index_b",
+            ["band_idx", "band_key"], num_buckets=4,
         )
-        stored = spark.table("t_dedup_index_b")
-        probe = delta_bands.alias("d").join(
-            stored.alias("b"),
-            (F.col("d.band_idx") == F.col("b.band_idx"))
-            & (F.col("d.band_key") == F.col("b.band_key")),
+        pairs = incremental_band_pairs(
+            minhash_band_relation(delta_rep).localCheckpoint(eager=True),
+            spark.table("t_dedup_index_b"),
+            base_members.unionByName(delta_members),
         )
-        plan = _plan(probe)
-        # the stored side scans its buckets directly (no exchange above
-        # the bucketed scan); both remaining exchanges belong to the
-        # delta pipeline (its shingle barrier + the join key)
+        plan = _plan(pairs)
+        # the stored side scans its buckets directly: the branch between
+        # its Sort and the bucketed scan contains no Exchange
         assert "SelectedBucketsCount" in plan, plan
-        assert plan.count("Exchange hashpartitioning") <= 2, plan
-        # the base branch between its Sort and the bucketed scan must
-        # contain no Exchange (the delta branch owns both exchanges)
+        scans = [ln for ln in plan.splitlines() if "t_dedup_index_b" in ln]
+        assert len(scans) == 1, plan
         scan_at = plan.index("t_dedup_index_b")
         last_sort = plan[:scan_at].rfind("Sort [band_idx")
         assert last_sort != -1, plan
         assert "Exchange" not in plan[last_sort:scan_at], plan
-        assert probe.count() > 0
+        got = sorted(map(tuple, pairs.collect()))
+        assert got
+        assert got == sorted(
+            map(tuple, minhash_incremental_candidates(base, delta).collect())
+        )
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS t_dedup_index_b")
+        for cached in caches:
+            cached.unpersist()
 
 
 def test_user_event_paths_two_exchanges(spark, sf_dir):

@@ -1,7 +1,6 @@
-"""transformWithStateInPandas (Spark 4 arbitrary-state API, RocksDB
-provider): running totals accumulate across micro-batches and agree with
-the applyInPandasWithState implementation; the state-store data source
-can read the operator's state back out of the checkpoint."""
+"""Arbitrary-state running totals under the RocksDB state store
+provider: totals accumulate across micro-batches, and the state-store
+data source reads the operator's state back out of the checkpoint."""
 
 from __future__ import annotations
 
@@ -12,7 +11,7 @@ import pytest
 from pyspark.sql import types as T
 
 from investcloud_data_pipeline_spark.streaming.stateful import (
-    running_user_totals_tws,
+    running_user_totals,
 )
 
 SCHEMA = T.StructType(
@@ -45,36 +44,18 @@ def rocksdb_state(spark):
         spark.conf.set(key, prev)
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(_has_protobuf(), reason="protobuf present; gate moot")
-def test_tws_unavailable_without_protobuf_degrades_clearly(spark):
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        running_user_totals_tws(spark.readStream.format("rate").load())
-
-
 def test_tws_totals_accumulate_and_state_is_readable(
     spark, tmp_path, rocksdb_state
 ):
-    """Equivalence across the two stateful implementations: the same
-    drain sequence must produce the same running totals whether the
-    operator runs as transformWithStateInPandas (protobuf present) or
-    as its applyInPandasWithState twin (allow_fallback on this image) —
-    every assertion below holds for BOTH paths; the state-store
-    stateVarName read is TWS-specific and gated accordingly."""
+    """running_user_totals (applyInPandasWithState) on RocksDB: the same
+    drain sequence run as two availableNow starts carries each user's
+    totals across the restart, and the state store holds one entry per
+    user with the final totals."""
     src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
 
     def drain() -> None:
-        stream = running_user_totals_tws(
-            spark.readStream.schema(SCHEMA).parquet(src),
-            allow_fallback=not _has_protobuf(),
+        stream = running_user_totals(
+            spark.readStream.schema(SCHEMA).parquet(src)
         )
         q = (
             stream.writeStream.format("parquet")
@@ -103,23 +84,18 @@ def test_tws_totals_accumulate_and_state_is_readable(
 
     # state-store reader: inspect the operator's live state offline —
     # the ops story for debugging a 1000-executor streaming job's state.
-    # (The named stateVarName is a TWS concept; the fallback's
-    # applyInPandasWithState state is read without it.)
-    reader = spark.read.format("statestore")
-    if _has_protobuf():
-        reader = reader.option("stateVarName", "totals")
-    state = reader.load(ck)
+    state = spark.read.format("statestore").load(ck)
     keys = {r["key"]["user_id"] for r in state.select("key").collect()}
     assert keys == {1, 2, 3}
-    if _has_protobuf():
-        per_key = {
-            r["key"]["user_id"]: (
-                r["value"]["n_events"],
-                r["value"]["total_value"],
-            )
-            for r in state.select("key", "value").collect()
-        }
-        assert per_key[1] == (3, 17.5)
+    per_key = {
+        r["key"]["user_id"]: (
+            r["value"]["groupState"]["n_events"],
+            r["value"]["groupState"]["total_value"],
+        )
+        for r in state.select("key", "value").collect()
+    }
+    assert per_key[3] == (1, 7.0)
+    assert per_key[1] == (3, 17.5)
 
 
 def test_statestore_reader_exposes_dedup_state(spark, tmp_path):

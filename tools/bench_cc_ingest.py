@@ -54,12 +54,10 @@ def main() -> int:
         start_cluster_ingest,
     )
     from investcloud_data_pipeline_spark.session import get_spark
+    from stream_progress import batch_series, last_over_first_steady, retain_progress
 
     spark = get_spark("bench_cc_ingest")
-    spark.conf.set(
-        "spark.sql.streaming.numRecentProgressUpdates",
-        str(max(100, 2 * n_batches + 10)),
-    )
+    retain_progress(spark, n_batches)
     work = tempfile.mkdtemp(prefix="cc_ingest_bench_")
     src, members, remap, ck = (
         os.path.join(work, d) for d in ("src", "m", "r", "ck")
@@ -93,27 +91,7 @@ def main() -> int:
     q.awaitTermination(1800)
     wall = time.time() - t0
 
-    per_batch_ms = [
-        {
-            "batch_id": int(p["batchId"]),
-            "rows": int(p["numInputRows"]),
-            "trigger_ms": int(p["durationMs"]["triggerExecution"]),
-        }
-        for p in q.recentProgress
-        if int(p["numInputRows"]) > 0
-    ]
-    if len(per_batch_ms) < n_batches:
-        print(
-            f"WARNING: only {len(per_batch_ms)}/{n_batches} progress "
-            "rows retained",
-            file=sys.stderr,
-        )
-    steady = [b["trigger_ms"] for b in per_batch_ms[1:]]
-    flatness = (
-        round(per_batch_ms[-1]["trigger_ms"] / steady[0], 2)
-        if len(steady) >= 2 and steady[0] > 0
-        else None
-    )
+    per_batch_ms = batch_series(q, n_batches)
 
     # correctness: incremental == from-scratch over the union
     inc = cc_read(spark, members, remap)
@@ -149,7 +127,9 @@ def main() -> int:
         "incremental_equals_scratch": n_diff == 0,
         "scratch_recompute_wall_s": scratch_wall,
         "last_trigger_ms": per_batch_ms[-1]["trigger_ms"],
-        "trigger_flatness_last_over_first_steady": flatness,
+        "trigger_flatness_last_over_first_steady": last_over_first_steady(
+            per_batch_ms
+        ),
         "per_batch": per_batch_ms,
         "wall_s": round(wall, 3),
     }

@@ -83,8 +83,10 @@ def main() -> int:
     from investcloud_data_pipeline_spark.streaming.documents import (
         start_neardup_pair_ingest,
     )
+    from stream_progress import batch_series, last_over_first_steady, retain_progress
 
     spark = get_spark("bench_pair_ingest")
+    retain_progress(spark, n_batches)
     work = tempfile.mkdtemp(prefix="pair_ingest_bench_")
     src, pairs_dir, members_dir, ck = (
         os.path.join(work, d) for d in ("src", "pairs", "members", "ck")
@@ -116,21 +118,7 @@ def main() -> int:
     # per-batch trigger durations: the index grows ~n_batches× between
     # the first and last batch, so this curve is the delta×base
     # independence evidence (flat expected after the batch-0 warmup)
-    per_batch_ms = [
-        {
-            "batch_id": int(p["batchId"]),
-            "rows": int(p["numInputRows"]),
-            "trigger_ms": int(p["durationMs"]["triggerExecution"]),
-        }
-        for p in q.recentProgress
-        if int(p["numInputRows"]) > 0
-    ]
-    steady = [b["trigger_ms"] for b in per_batch_ms[1:]]
-    flatness = (
-        round(per_batch_ms[-1]["trigger_ms"] / steady[0], 2)
-        if len(steady) >= 2 and steady[0] > 0
-        else None
-    )
+    per_batch_ms = batch_series(q, n_batches)
 
     n_docs = n_batches * per_batch
     n_pairs = spark.read.parquet(pairs_dir).count()
@@ -184,7 +172,7 @@ def main() -> int:
         "index_rows": n_index,
         "wall_s": round(wall, 1),
         "per_batch": per_batch_ms,
-        "last_over_first_steady_batch": flatness,
+        "last_over_first_steady_batch": last_over_first_steady(per_batch_ms),
         "probe_at_final_index": {
             "index_rows": n_index,
             "delta_docs": per_batch,

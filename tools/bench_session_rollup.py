@@ -34,22 +34,20 @@ def main() -> int:
     per_batch = int(sys.argv[3]) if len(sys.argv) > 3 else 25000
 
     import pandas as pd
+    from pyspark.sql import functions as F
 
+    from investcloud_data_pipeline_spark.constants import WINDOW_DELAY
+    from investcloud_data_pipeline_spark.plans.analytics_ext8 import (
+        closed_window_rollup,
+    )
     from investcloud_data_pipeline_spark.session import get_spark
     from investcloud_data_pipeline_spark.streaming.windows import (
         start_session_rollup,
     )
+    from stream_progress import batch_series, last_over_first_steady, retain_progress
 
     spark = get_spark("bench_session_rollup")
-    # recentProgress retains only the last ~100 updates by default:
-    # with n_batches above that, the per-batch series (and the
-    # state-boundedness / last-over-first claims built on it) would
-    # silently truncate to the tail. Retain at least one slot per
-    # expected micro-batch, plus slack for empty/startup triggers.
-    spark.conf.set(
-        "spark.sql.streaming.numRecentProgressUpdates",
-        str(max(100, 2 * n_batches + 10)),
-    )
+    retain_progress(spark, n_batches)
     work = tempfile.mkdtemp(prefix="session_rollup_bench_")
     src, out, ck = (os.path.join(work, d) for d in ("src", "out", "ck"))
     os.makedirs(src)
@@ -91,61 +89,19 @@ def main() -> int:
     q.awaitTermination(1800)
     wall = time.time() - t0
 
-    per_batch_ms = [
-        {
-            "batch_id": int(p["batchId"]),
-            "rows": int(p["numInputRows"]),
-            "trigger_ms": int(p["durationMs"]["triggerExecution"]),
-            "state_rows": sum(
-                int(s.get("numRowsTotal", 0))
-                for s in p.get("stateOperators", [])
-            ),
-        }
-        for p in q.recentProgress
-        if int(p["numInputRows"]) > 0
-    ]
+    per_batch_ms = batch_series(q, n_batches, state_rows=True)
     n_events = n_batches * per_batch
     emitted = spark.read.parquet(out)
     n_sessions = emitted.count()
 
-    # Exactness: streamed emission == the batch merging-window result
-    # restricted to sessions closed by the final watermark (the twin's
-    # contract), computed over the full input.
-    from pyspark.sql import functions as F
-
+    # Exactness: streamed emission == the batch twin's closed-session
+    # rollup computed over the full input.
     full = spark.read.parquet(src)
-    mx = full.agg(F.max("ts").alias("mx"))
-    want = (
-        full.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 1_000_000).cast("long")
-            ).alias("total_micros"),
-        )
-        .crossJoin(F.broadcast(mx))
-        .filter(
-            F.col("session_window.end")
-            <= F.col("mx") - F.expr("INTERVAL 30 MINUTES")
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n",
-            "total_micros",
-        )
+    want = closed_window_rollup(
+        full, F.session_window("ts", WINDOW_DELAY), "user_id", "session"
     )
     diff = emitted.exceptAll(want).count() + want.exceptAll(emitted).count()
 
-    if len(per_batch_ms) < n_batches:
-        print(
-            f"WARNING: only {len(per_batch_ms)}/{n_batches} per-batch "
-            "progress rows retained — per-batch series is truncated; "
-            "raise spark.sql.streaming.numRecentProgressUpdates",
-            file=sys.stderr,
-        )
-    steady = [b["trigger_ms"] for b in per_batch_ms[1:]]
     out_doc = {
         "metric": "session_rollup_events_per_sec",
         "value": round(n_events / wall, 1),
@@ -157,11 +113,7 @@ def main() -> int:
         "streamed_equals_batch_twin": diff == 0,
         "wall_s": round(wall, 1),
         "per_batch": per_batch_ms,
-        "last_over_first_steady_batch": (
-            round(per_batch_ms[-1]["trigger_ms"] / steady[0], 2)
-            if len(steady) >= 2 and steady[0] > 0
-            else None
-        ),
+        "last_over_first_steady_batch": last_over_first_steady(per_batch_ms),
     }
     print(json.dumps(out_doc))
     if out_json:

@@ -36,8 +36,10 @@ def main() -> int:
     from investcloud_data_pipeline_spark.streaming.joins import (
         attribute_purchases,
     )
+    from stream_progress import batch_series, last_over_first_steady, retain_progress
 
     spark = get_spark("bench_stream_join")
+    retain_progress(spark, n_batches)
     work = tempfile.mkdtemp(prefix="stream_join_bench_")
     csrc, psrc, out, ck = (
         os.path.join(work, d) for d in ("clicks", "purchases", "out", "ck")
@@ -108,22 +110,9 @@ def main() -> int:
     q.awaitTermination(1800)
     wall = time.time() - t0
 
-    per_batch_ms = [
-        {
-            "batch_id": int(p["batchId"]),
-            "rows": int(p["numInputRows"]),
-            "trigger_ms": int(p["durationMs"]["triggerExecution"]),
-            "state_rows": sum(
-                int(s.get("numRowsTotal", 0))
-                for s in p.get("stateOperators", [])
-            ),
-        }
-        for p in q.recentProgress
-        if int(p["numInputRows"]) > 0
-    ]
+    per_batch_ms = batch_series(q, n_batches, state_rows=True)
     n_events = n_batches * (per_batch + per_batch // 4)
     n_pairs = spark.read.parquet(out).count()
-    steady = [b["trigger_ms"] for b in per_batch_ms[1:]]
     out_doc = {
         "metric": "stream_join_events_per_sec",
         "value": round(n_events / wall, 1),
@@ -134,11 +123,7 @@ def main() -> int:
         "attributed_pairs": n_pairs,
         "wall_s": round(wall, 1),
         "per_batch": per_batch_ms,
-        "last_over_first_steady_batch": (
-            round(per_batch_ms[-1]["trigger_ms"] / steady[0], 2)
-            if len(steady) >= 2 and steady[0] > 0
-            else None
-        ),
+        "last_over_first_steady_batch": last_over_first_steady(per_batch_ms),
     }
     shutil.rmtree(work, ignore_errors=True)
     if out_json:
