@@ -9,7 +9,7 @@ queries).
 """
 
 # Heap size of the streaming per-user top-K state class
-# (streaming/stateful.py::streaming_user_topk) and its batch twin
+# (streaming/stateful.py::user_running_topk) and its batch twin
 # (plans/analytics_ext8.py::user_topk_events). One definition so
 # bumping K cannot desynchronize the pair.
 TOPK_K = 5

@@ -206,7 +206,7 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     # the probe side evaluates _BLOOM_K md5-derived positions per order
     # row before exploding — per-row hash compute dominates the scan;
-    # opt-in widening wins (A/B: 1.52s -> 1.15s warm at sf0.1)
+    # the scan is widened (sources/batch.py has the A/B)
     o = load_table(spark, sf_dir, "orders", scan_wide=True)
     dim = c.filter(F.col("c_mktsegment") == "BUILDING").select(
         F.col("c_custkey").alias("dim_key")

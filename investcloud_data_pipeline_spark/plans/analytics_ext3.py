@@ -520,8 +520,8 @@ FROM ranked GROUP BY n_name
 
 def lineitem_ols_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seven DECIMAL(38) products per row before the aggregate: per-row
-    # compute dominates the single-row-group scan, so the opt-in scan
-    # widening wins (A/B: 2.12s -> 1.28s warm at sf0.1, guide §2.5)
+    # compute dominates the single-row-group scan, so the scan is
+    # widened (sources/batch.py has the A/B)
     l = load_table(spark, sf_dir, "lineitem", scan_wide=True)
     d2 = lambda c: F.col(c).cast("decimal(18,2)")
     x1, x2, y = d2("l_quantity"), d2("l_discount"), d2("l_extendedprice")

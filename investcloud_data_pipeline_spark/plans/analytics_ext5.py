@@ -608,12 +608,24 @@ QUERIES["embedding_pq_codes"] = (
 PQ_ADC_K = 5
 
 
+def _stacked_codes(best: DataFrame) -> DataFrame:
+    """``_pq_best``'s per-subspace argmin structs as (vec_id, s, crank)
+    rows, the codes layout the ADC lookup join takes."""
+    return best.select(
+        "vec_id",
+        F.expr(
+            f"stack({PQ_SUBSPACES}, "
+            + ", ".join(f"{s}, b{s}.crank" for s in range(PQ_SUBSPACES))
+            + ") AS (s, crank)"
+        ),
+    )
+
+
 def pq_adc_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = PQ_ADC_K,
     centers: DataFrame | None = None,
-    arrow_codes: bool = False,
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k of ``queries`` (qid, qemb) against the PQ codes of
@@ -623,29 +635,15 @@ def pq_adc_topk(
     slices of each cemb row are independent, so independently fitted
     per-subspace codebooks pack into PQ_CODEBOOK synthetic full-width
     vectors (the k-means upgrade path the recall tool measures).
-    ``arrow_codes`` swaps the code-assignment half for the vectorized
-    matmul kernel — ONLY valid for rows-only callers (the strict
-    ann_pq_adc_topk keeps the 9dp fixed-order expression folds that
-    make it oracle-exact)."""
+    ``codes`` (vec_id, s, crank) replaces the expression-fold code
+    assignment over ``centers``: the k-means callers pass
+    ``_pq_codes_arrow``'s matmul codes, valid only for rows-only
+    queries (the strict ann_pq_adc_topk keeps the 9dp fixed-order
+    expression folds that make it oracle-exact)."""
     if centers is None:
         centers = _pq_centers(emb)
     if codes is None:
-        if arrow_codes:
-            codes = _pq_codes_arrow(emb, centers)
-        else:
-            best = _pq_best(emb, centers)
-            codes = best.select(
-                "vec_id",
-                F.expr(
-                    "stack("
-                    + str(PQ_SUBSPACES)
-                    + ", "
-                    + ", ".join(
-                        f"{s}, b{s}.crank" for s in range(PQ_SUBSPACES)
-                    )
-                    + ") AS (s, crank)"
-                ),
-            )
+        codes = _stacked_codes(_pq_best(emb, centers))
     qc = queries.crossJoin(F.broadcast(centers)).select(
         "qid",
         "crank",
@@ -700,20 +698,10 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),
     )
-    # codes derive from the session-shared _pq_best relation (the same
-    # stack expression pq_adc_topk would inline) — the expression-fold
-    # code assignment runs once per session, shared with
-    # embedding_pq_codes; values identical by construction
-    codes = _pq_best16_cached(spark, sf_dir).select(
-        "vec_id",
-        F.expr(
-            "stack("
-            + str(PQ_SUBSPACES)
-            + ", "
-            + ", ".join(f"{s}, b{s}.crank" for s in range(PQ_SUBSPACES))
-            + ") AS (s, crank)"
-        ),
-    )
+    # codes derive from the session-shared _pq_best relation: the
+    # expression-fold code assignment runs once per session, shared
+    # with embedding_pq_codes
+    codes = _stacked_codes(_pq_best16_cached(spark, sf_dir))
     return pq_adc_topk(emb, queries, k=PQ_ADC_K, codes=codes)
 
 

@@ -777,7 +777,7 @@ FROM spine LEFT JOIN monthly ON spine.m = monthly.m
 def try_functions_safety(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no aggregate: five try_* expressions are evaluated per row and
     # every row is emitted, so per-row compute dominates the scan —
-    # opt-in widening wins (A/B: 2.14s -> 1.38s warm at sf0.1)
+    # the scan is widened (sources/batch.py has the A/B)
     l = load_table(spark, sf_dir, "lineitem", scan_wide=True)
     return (
         l.select(
@@ -806,10 +806,7 @@ FROM lineitem
 # --- unpivot/melt: wide→long reshape as a first-class operator
 # (Expand node — one pass, no union-of-scans like the SQL spelling).
 def unpivot_lineitem_charges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # three DECIMAL multiplies per row feed the aggregate — per-row
-    # compute dominates the scan; opt-in widening wins (A/B:
-    # 1.35s -> 1.07s warm at sf0.1)
-    l = load_table(spark, sf_dir, "lineitem", scan_wide=True)
+    l = load_table(spark, sf_dir, "lineitem")
     wide = l.groupBy("l_returnflag").agg(
         F.sum(F.col("l_extendedprice").cast(DEC)).cast("double").alias("base"),
         F.sum(

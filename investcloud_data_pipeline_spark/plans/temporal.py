@@ -471,8 +471,6 @@ def sql_udf_disc_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst expression, so unlike Python UDFs there is NO executor
     round-trip and whole-stage codegen stays intact. Verified by the
     oracle computing the inlined expression directly."""
-    from ..sql_interface import sql
-
     # bodies follow the repo's decimal discipline: cast INPUTS to
     # DECIMAL, multiply exactly — bit-stable under any aggregation order
     spark.sql(
@@ -486,9 +484,13 @@ def sql_udf_disc_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "* (CAST(1 AS DECIMAL(18,2)) - CAST(d AS DECIMAL(18,2))) "
         "* (CAST(1 AS DECIMAL(18,2)) + CAST(t AS DECIMAL(18,2)))"
     )
-    return sql(
-        spark,
-        sf_dir,
+    # four DECIMAL(38) multiplies per row over the whole fact table:
+    # per-row compute dominates the scan stage, so the scan is widened
+    # (sources/batch.py has the A/B)
+    load_table(
+        spark, sf_dir, "lineitem", scan_wide=True
+    ).createOrReplaceTempView("lineitem")
+    return spark.sql(
         """
         SELECT l_returnflag,
                CAST(sum(disc_price(l_extendedprice, l_discount)) AS DOUBLE) AS disc_revenue,
@@ -496,11 +498,7 @@ def sql_udf_disc_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) AS n
         FROM lineitem
         GROUP BY l_returnflag
-        """,
-        # four DECIMAL(38) multiplies per row over the whole fact table:
-        # per-row compute dominates the scan stage, so the opt-in scan
-        # widening wins (A/B: 2.46s -> 1.57s warm at sf0.1, guide §2.5)
-        scan_wide=("lineitem",),
+        """
     )
 
 

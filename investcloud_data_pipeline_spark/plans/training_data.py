@@ -40,33 +40,16 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``documents`` widened to the session's cores for the HEAVY
-    multimodal codec kernels (round-12, guide §2.5 input skew): the
-    committed fixture is a single-row-group parquet — ONE scan task —
-    and PNG encode/decode cost is per-ROW Python work, so without the
-    widening the whole codec pass serializes on one core. The kernels
-    are row-pure (each output row is a function of its input row
-    alone), so results are partition-invariant; aggregations downstream
-    are all keyed. When the file carries enough row groups to feed the
-    cores (the production layout), no repartition is added.
-
-    Scope (measured, round-12): only the PNG-pipeline queries
-    (thumbnail 1.53→0.95s, image_patches 1.54→0.84s, phash banding) and
-    the nibble-histogram keep the widening; the WAV family and the
-    cheap binary meta/frame kernels route through plain ``_docs`` —
-    their per-row work is light enough that the repartition + 32-worker
-    fan-out is overhead-dominated (interleaved A/B: wav_features 0.80
-    narrow vs 0.74 wide on a quiet host, i.e. inside noise, while under
-    host steal the wide form amplified to 2.1–2.4× its frozen
-    baseline on two independent bench runs)."""
-    from ..sources.batch import _parquet_layout
-
-    d = _docs(spark, sf_dir)
-    rows, row_groups = _parquet_layout(spark, sf_dir, f"{sf_dir}/documents.parquet")
-    cpus = spark.sparkContext.defaultParallelism
-    if rows and row_groups < cpus:
-        return d.repartition(cpus)
-    return d
+    """``documents`` widened to the session's cores for the heavy
+    multimodal codec kernels: the fixture is a single-row-group parquet
+    (one scan task) and PNG encode/decode and byte histograms are
+    per-row Python work, so without the widening the pass runs on one
+    core. The kernels are row-pure, so results are partition-invariant.
+    Only the thumbnail, image-patch and byte-histogram queries read it;
+    phash dedup, the WAV family and the cheap binary meta/frame kernels
+    read plain ``_docs``, where the repartition does not pay
+    (sources/batch.py has the A/B)."""
+    return load_table(spark, sf_dir, "documents", scan_wide=True)
 
 
 # The Jaccard candidate-pair build is the shared upstream artifact of
@@ -2424,7 +2407,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain is VALUE-pinned in portable SQL, pair-for-pair identical at
     sf0.001/0.01/0.1 before wiring. A payload-corruption test keeps the
     quarantine path honest (the law only covers intact fixtures)."""
-    media = MM.attach_png_payload(_docs_wide(spark, sf_dir))
+    media = MM.attach_png_payload(_docs(spark, sf_dir))
     return MM.phash_candidate_pairs(media)
 
 

@@ -42,28 +42,31 @@ TESTDATA_TABLES = (
 )
 
 
-# Scan-parallelism widening (round-12, guide §2.5 "input skew: one huge
-# unsplittable file"): parquet splits at ROW-GROUP granularity, and the
-# committed fixtures are single-row-group files — so every scan-side
-# stage (filter, project, partial aggregation, per-row expression work)
-# runs on ONE task regardless of core count. Widening = repartition
-# right after the read when the file's row groups cannot feed the
-# session's cores. It is OPT-IN per query (``load_table(...,
-# scan_wide=True)``), not blanket: an interleaved same-session A/B over
-# 20 scan-bound queries at sf0.1 measured the blanket gate as a wash
-# overall and sharply bimodal per query — heavy per-row-compute
-# pipelines win (lineitem_ols_price 2.12→1.28s, sql_udf_disc_revenue
-# 2.46→1.57s, try_functions_safety 2.14→1.38s) while selective-filter /
-# cheap-aggregate pipelines lose the shuffle cost (q17 0.87→2.25s,
-# q21 1.52→2.48s, statistical_aggregates 0.65→1.17s). Only the query
-# author knows which side of that line the post-scan work falls on, so
-# the widening is requested at the consumer. Filter/projection pushdown
-# is unaffected (Catalyst pushes both through Repartition), round-robin
-# repartition is retry-deterministic (sortBeforeRepartition), and the
-# width derives from the ROW COUNT — at production scale files carry
-# many row groups, the gate never fires, and no shuffle is added.
-_SCAN_MIN_ROWS = 50_000
-_SCAN_ROWS_PER_TASK = 20_000
+# Scan widening (``load_table(..., scan_wide=True)``): parquet splits at
+# row-group granularity and the test fixtures are single-row-group
+# files, so every scan-side stage (filter, project, partial aggregate,
+# per-row expression or Python work) runs as ONE task. A query whose
+# post-scan per-row work dominates asks for the scan to be repartitioned
+# to the session's cores when the file has fewer row groups than cores;
+# a production layout with enough row groups adds no shuffle. Widening
+# every scan loses on selective-filter and cheap-aggregate queries (q17,
+# q21), so each query asks for it or not.
+# Filter/projection pushdown goes through the Repartition, and
+# round-robin repartition is retry-deterministic. Interleaved A/B at
+# sf0.1 on 4 cores, median s wide / narrow (pairs wide won), once with
+# the nine widened queries interleaved (24 pairs) and once with three
+# of them (16 pairs):
+#   try_functions_safety      1.24/1.33 (17/24)   1.03/1.24 (14/16)
+#   lineitem_ols_price        1.71/1.68 (18/24)   1.23/1.58 (15/16)
+#   bloom_filter_semi_join    1.12/1.12 (12/24)   0.63/0.77 (16/16)
+#   sql_udf_disc_revenue      1.54/1.46 (7/24)    1.15/1.43 (16/16)
+#   multimodal_thumbnail      0.77/1.13 (24/24)
+#   multimodal_image_patches  0.71/1.05 (24/24)
+#   multimodal_byte_histogram 0.37/0.48 (22/24)
+#   unpivot_lineitem_charges  1.25/0.92 (1/24)    1.08/0.82 (1/16)
+#   multimodal_phash_dedup    0.65/0.62 (9/24)    0.58/0.56 (8/16)
+# Widening stays where narrow was slower in either run; the last two
+# read narrow.
 
 
 @session_store
@@ -122,18 +125,6 @@ def _read_parquet(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     return df
 
 
-def _with_scan_parallelism(
-    spark: SparkSession, df: DataFrame, sf_dir: str, path: str
-) -> DataFrame:
-    rows, row_groups = _parquet_layout(spark, sf_dir, path)
-    cpus = spark.sparkContext.defaultParallelism
-    if rows >= _SCAN_MIN_ROWS and row_groups < max(2, cpus // 2):
-        width = min(cpus, max(2, rows // _SCAN_ROWS_PER_TASK))
-        if width > row_groups:
-            return df.repartition(width)
-    return df
-
-
 def load_table(
     spark: SparkSession,
     sf_dir: str,
@@ -143,9 +134,9 @@ def load_table(
     """Read one driver testdata table (columnar parquet scan — filters and
     projections placed on top are pushed into the scan by Catalyst).
 
-    ``scan_wide=True`` applies the opt-in scan-parallelism widening for
-    consumers whose post-scan per-row work dominates (see the module
-    comment above ``_with_scan_parallelism`` for the measured A/B).
+    ``scan_wide=True`` repartitions the scan to the session's cores when
+    the file has fewer row groups than cores (see the comment above
+    ``_table_schemas`` for when a query asks for it).
 
     ``events.ts`` is TIMESTAMP(NANOS) in parquet, which Spark's vectorized
     reader rejects; read it as long (legacy conf) and truncate to
@@ -178,7 +169,12 @@ def load_table(
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     else:
         df = _read_parquet(spark, sf_dir, path)
-    return _with_scan_parallelism(spark, df, sf_dir, path) if scan_wide else df
+    if scan_wide:
+        rows, row_groups = _parquet_layout(spark, sf_dir, path)
+        cpus = spark.sparkContext.defaultParallelism
+        if rows and row_groups < cpus:
+            return df.repartition(cpus)
+    return df
 
 
 def read_raw_csv(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:

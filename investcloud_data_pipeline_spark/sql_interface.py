@@ -21,18 +21,6 @@ def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def sql(
-    spark: SparkSession,
-    sf_dir: str,
-    query: str,
-    scan_wide: tuple = (),
-) -> DataFrame:
-    """``scan_wide``: table names whose views get the opt-in
-    scan-parallelism widening (heavy per-row work over a
-    single-row-group file — see sources/batch.py)."""
+def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     register_testdata_views(spark, sf_dir)
-    for name in scan_wide:
-        load_table(
-            spark, sf_dir, name, scan_wide=True
-        ).createOrReplaceTempView(name)
     return spark.sql(query)

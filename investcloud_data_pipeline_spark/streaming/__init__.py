@@ -9,8 +9,10 @@ queries (SURVEY §3), with the three deliberate architecture fixes:
 2. Silver's dedup uses ``dropDuplicatesWithinWatermark`` so the state
    store is provably bounded by the 2-hour horizon in OSS Spark.
 3. Gold's aggregate→window→aggregate plan is unsupported on streams in
-   OSS Spark (§3.3); it runs as a ``foreachBatch`` batch recompute that
-   overwrites the Gold snapshot — exactly the reference's complete-mode
+   OSS Spark (§3.3); its first aggregate, the (user, region) totals,
+   runs as a complete-mode stateful streaming aggregation, and a
+   ``foreachBatch`` over those totals takes the per-user argmax and
+   overwrites the Gold snapshot — the reference's complete-mode
    semantics.
 
 Layers chain through storage (parquet dirs + per-query checkpoints), the

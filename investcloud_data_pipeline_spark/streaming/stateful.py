@@ -17,7 +17,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -428,174 +427,4 @@ def start_user_topk(
         checkpoint_dir,
         "user_topk",
         available_now,
-    )
-
-
-# ---------- event-time-expiring sessions (EventTimeTimeout timers) ----------
-#
-# Completes the custom-state timer matrix: NoTimeout (running totals /
-# top-k), ProcessingTimeTimeout (expiring_user_sessions), and — here —
-# EventTimeTimeout: the session closes when the WATERMARK passes
-# last_event_time + gap, i.e. deterministically in event time (replays
-# and re-runs close sessions at identical points, which the wall-clock
-# variant cannot promise). This is the custom-state generalization of
-# F.session_window — the built-in emits fixed aggregates, while the
-# timer form can emit ARBITRARY per-session state (here count + exact
-# micros sum + first/last event time). State: one row per OPEN session,
-# evicted by its timer — bounded by active users per watermark horizon.
-
-ET_SESSION_OUTPUT = (
-    "user_id long, n_events long, total_micros long, "
-    "session_start timestamp, session_end timestamp"
-)
-ET_SESSION_STATE = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("total_micros", LongType()),
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-    ]
-)
-
-
-def _make_event_time_session(gap_ms: int):
-    def _session(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            n, micros, start_us, last_us = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_micros": [micros],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [
-                        pd.Timestamp(last_us, unit="us")
-                        + pd.Timedelta(milliseconds=gap_ms)
-                    ],
-                }
-            )
-            return
-        n, micros, start_us, last_us = (
-            state.get if state.exists else (0, 0, None, None)
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n += len(pdf)
-            # integer-micros sum: exact, replay-identical. np.floor
-            # before the cast — astype('int64') truncates toward zero,
-            # which diverges from the batch plans' F.floor convention
-            # for negative values (round-11 ADVICE).
-            micros += int(
-                np.floor(pdf["value"] * 1_000_000).astype("int64").sum()
-            )
-            ts_us = pdf["ts"].astype("int64") // 1000
-            lo, hi = int(ts_us.min()), int(ts_us.max())
-            start_us = lo if start_us is None else min(start_us, lo)
-            last_us = hi if last_us is None else max(last_us, hi)
-        state.update((n, micros, start_us, last_us))
-        # event-time timer: fires when the watermark passes this point
-        state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [],
-                "n_events": [],
-                "total_micros": [],
-                "session_start": [],
-                "session_end": [],
-            }
-        ).astype(
-            {
-                "user_id": "int64",
-                "n_events": "int64",
-                "total_micros": "int64",
-                "session_start": "datetime64[us]",
-                "session_end": "datetime64[us]",
-            }
-        )
-
-    return _session
-
-
-def _interval_ms(interval: str) -> int:
-    """Milliseconds in a Spark-style interval string — single units
-    ('30 minutes') and compounds ('1 hour 30 minutes'), matching the
-    grammar ``withWatermark`` accepts for the same string: parsing is
-    CASE-INSENSITIVE ('30 Minutes') like Spark's interval parser
-    (round-12 ADVICE). Additionally accepts common abbreviations (ms,
-    sec/s, min/m, h, d, w) as a convenience SUPERSET — note
-    ``withWatermark`` itself rejects those (verified on Spark 4.1.2),
-    so the sole caller passes the same string to both and an
-    abbreviation will fail there with Spark's own parse error. Single
-    source of truth for the session gap: the old twin defaults
-    (gap='30 minutes' AND gap_ms=1800000) could silently drift
-    (round-11 ADVICE)."""
-    import re
-
-    unit_ms = {
-        "millisecond": 1,
-        "msec": 1,
-        "ms": 1,
-        "second": 1000,
-        "sec": 1000,
-        "s": 1000,
-        "minute": 60_000,
-        "min": 60_000,
-        "m": 60_000,
-        "hour": 3_600_000,
-        "h": 3_600_000,
-        "day": 86_400_000,
-        "d": 86_400_000,
-        "week": 604_800_000,
-        "w": 604_800_000,
-    }
-    # longest spellings first so 'ms' doesn't eat the 'm' of 'minute'
-    unit_re = (
-        "milliseconds?|msecs?|ms|seconds?|secs?|minutes?|mins?|"
-        "hours?|days?|weeks?|[smhdw]"
-    )
-    pairs = re.findall(rf"(\d+)\s*({unit_re})", interval, re.IGNORECASE)
-    # every character must belong to a recognized pair — reject
-    # partial matches like '3 fortnights' (which contains no pair) or
-    # '5 minutes and a bit' (trailing junk)
-    consumed = re.fullmatch(
-        rf"\s*(?:(?:\d+)\s*(?:{unit_re})\s*)+", interval, re.IGNORECASE
-    )
-    if not pairs or not consumed:
-        raise ValueError(f"unsupported interval string: {interval!r}")
-    def _ms(u: str) -> int:
-        # exact spelling first so 'ms'/'s' don't lose their trailing
-        # 's' to plural-stripping ('ms' is NOT the plural of 'm')
-        lu = u.lower()
-        return unit_ms[lu] if lu in unit_ms else unit_ms[lu[:-1]]
-
-    return sum(int(n) * _ms(u) for n, u in pairs)
-
-
-def event_time_user_sessions(
-    events_stream: DataFrame,
-    gap: str = "30 minutes",
-) -> DataFrame:
-    """Watermark-closed per-user sessions with arbitrary state — the
-    EventTimeTimeout timer class. ``events_stream`` needs (ts, user_id,
-    value); the watermark on ``ts`` drives both late-row admission and
-    the session-closing timers. The timer offset is DERIVED from
-    ``gap`` so watermark delay and session gap cannot drift apart."""
-    gap_ms = _interval_ms(gap)
-    return (
-        events_stream.withWatermark("ts", gap)
-        .select("ts", "user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_event_time_session(gap_ms),
-            outputStructType=ET_SESSION_OUTPUT,
-            stateStructType=ET_SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )

@@ -198,133 +198,3 @@ def test_user_quota_gate_across_batches(spark, tmp_path):
     # per-user admitted counts never exceed the quota
     for u in (1, 2):
         assert sum(1 for r in rows if r.user_id == u and r.admitted) == 3
-
-
-def test_event_time_sessions_close_at_watermark(spark, tmp_path):
-    """EventTimeTimeout timer class: a session closes exactly when the
-    WATERMARK (driven by later events, not wall clock) passes
-    last_event + gap; its emitted row equals the batch F.session_window
-    aggregate over the same events; a session still inside the horizon
-    stays open (no emission). Cross-batch: batch 2 extends user 1's
-    open session before a batch-3 far-future event closes everything
-    closable."""
-    from pyspark.sql import functions as F
-
-    from investcloud_data_pipeline_spark.streaming.stateful import (
-        event_time_user_sessions,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
-
-    def write(name, rows):
-        os.makedirs(src, exist_ok=True)
-        pd.DataFrame(rows, columns=["ts", "user_id", "value"]).astype(
-            {"ts": "datetime64[us]"}
-        ).to_parquet(f"{src}/{name}", index=False)
-
-    def drain():
-        stream = event_time_user_sessions(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    t = pd.Timestamp("2024-03-01")
-    m = pd.Timedelta(minutes=1)
-    write("b1.parquet", [(t, 1, 1.25), (t + 5 * m, 1, 2.5)])
-    # batch 2 EXTENDS the open session (within the 30-min gap) — the
-    # timer must move, not fire
-    write("b2.parquet", [(t + 20 * m, 1, 4.0)])
-    # batch 3: a far-future event pushes the watermark past user 1's
-    # last_event + gap, closing the session; user 2's own session
-    # stays OPEN (inside the horizon relative to the new watermark)
-    write("b3.parquet", [(t + pd.Timedelta(hours=6), 2, 8.0)])
-    drain()
-
-    rows = spark.read.parquet(out).collect()
-    got = {r.user_id: r for r in rows}
-    # exactly ONE closed session: user 1's, spanning all three events
-    assert set(got) == {1}
-    r = got[1]
-    assert r.n_events == 3
-    assert r.total_micros == int((1.25 + 2.5 + 4.0) * 1_000_000)
-    assert r.session_start == t.to_pydatetime()
-    assert r.session_end == (
-        t + 20 * m + pd.Timedelta(minutes=30)
-    ).to_pydatetime()
-    # replay idempotence: another drain over the same checkpoint
-    # appends nothing and leaves user 2's session open
-    drain()
-    assert spark.read.parquet(out).count() == 1
-
-
-def test_interval_ms_single_source_of_gap_truth():
-    """Round-11 ADVICE: gap_ms is DERIVED from the gap string (the old
-    twin defaults could silently drift), and the micros fold uses
-    np.floor to match the batch plans' F.floor for negative values."""
-    import numpy as np
-    import pytest
-
-    from investcloud_data_pipeline_spark.streaming.stateful import (
-        _interval_ms,
-    )
-
-    assert _interval_ms("30 minutes") == 30 * 60 * 1000
-    assert _interval_ms("1 minute") == 60 * 1000
-    assert _interval_ms("2 hours") == 2 * 3600 * 1000
-    assert _interval_ms("45 seconds") == 45 * 1000
-    assert _interval_ms("500 milliseconds") == 500
-    assert _interval_ms("1 day") == 86_400_000
-    with pytest.raises(ValueError):
-        _interval_ms("3 fortnights")
-    # floor-vs-truncate: -0.3 value -> F.floor gives -300001 micros for
-    # -0.300001; plain astype('int64') truncation would give -300000
-    vals = np.floor(np.array([-0.3000015]) * 1_000_000).astype("int64")
-    assert int(vals[0]) == -300002
-
-
-def test_interval_ms_compound_and_week_grammar():
-    """Round-11 review follow-up: the parser must cover the compound /
-    week forms withWatermark itself accepts for the same string."""
-    import pytest
-
-    from investcloud_data_pipeline_spark.streaming.stateful import (
-        _interval_ms,
-    )
-
-    assert _interval_ms("1 hour 30 minutes") == 90 * 60 * 1000
-    assert _interval_ms("1 week") == 7 * 86_400_000
-    assert _interval_ms("2 days 3 hours 4 seconds") == (
-        2 * 86_400_000 + 3 * 3_600_000 + 4000
-    )
-    with pytest.raises(ValueError):
-        _interval_ms("5 minutes and a bit")
-    with pytest.raises(ValueError):
-        _interval_ms("")
-    # round-12 ADVICE: Spark's interval parser is case-insensitive and
-    # takes abbreviations for the same string — parity required
-    assert _interval_ms("30 Minutes") == 30 * 60 * 1000
-    assert _interval_ms("30 min") == 30 * 60 * 1000
-    assert _interval_ms("30m") == 30 * 60 * 1000
-    assert _interval_ms("500 ms") == 500  # 'ms' is not plural of 'm'
-    assert _interval_ms("10 s") == 10_000
-    assert _interval_ms("2 H") == 2 * 3_600_000
-    assert _interval_ms("1 SEC") == 1000
-    with pytest.raises(ValueError):
-        _interval_ms("3 fortnights")

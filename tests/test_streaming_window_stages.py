@@ -145,8 +145,13 @@ def test_session_stage_matches_registry_twin(spark, tmp_path):
 
     src, sf = _write_bursty_events(tmp_path)
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = start_session_rollup(spark, src, out, ck)
+    # one file per micro-batch: the burst split across the two files
+    # must merge with its open session from batch 1
+    q = start_session_rollup(
+        spark, src, out, ck, max_files_per_trigger=1
+    )
     q.awaitTermination(120)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
     streamed = _session_rowset(spark.read.parquet(out))
     want = _session_rowset(session_watermark_rollup(spark, sf))
     assert streamed == want and want

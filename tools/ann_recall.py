@@ -169,7 +169,11 @@ def measure(sf_dir: str, k: int, n_queries: int) -> dict:
     t0 = time.time()
     km64_centers = AX5._pq_kmeans_centers(adc_df.sparkSession, base)
     km64_df = AX5.pq_adc_topk(
-        base, qs, k=k, centers=km64_centers, arrow_codes=True
+        base,
+        qs,
+        k=k,
+        centers=km64_centers,
+        codes=AX5._pq_codes_arrow(base, km64_centers),
     )
     km64: dict = {}
     for r in km64_df.collect():

@@ -151,13 +151,30 @@ def main() -> int:
         & (F.col("d.band_key") == F.col("b.band_key"))
         & (F.col("d.id") != F.col("b.id")),
     )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    probe_bucketed = "SelectedBucketsCount" in plan
-    probe_walls = []
-    for _ in range(3):
-        t1 = time.time()
-        probe.write.format("noop").mode("overwrite").save()
-        probe_walls.append(round(time.time() - t1, 3))
+    # broadcast off while planning and timing the probe: an index under
+    # the broadcast threshold (small runs) would otherwise plan a
+    # broadcast join instead of the bucketed one under test
+    no_broadcast = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in no_broadcast}
+    try:
+        for k in no_broadcast:
+            spark.conf.set(k, "-1")
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        probe_bucketed = "SelectedBucketsCount" in plan
+        probe_walls = []
+        for _ in range(3):
+            t1 = time.time()
+            probe.write.format("noop").mode("overwrite").save()
+            probe_walls.append(round(time.time() - t1, 3))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(work, ignore_errors=True)
